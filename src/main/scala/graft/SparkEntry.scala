@@ -242,12 +242,11 @@ object SparkEntry {
       |  lon + 1.0 AS bx6, lat + 1.0 + (2.0 + (doc_id % 4)) - 1.0 AS by6
       |FROM pts WHERE doc_id % 2 = 1""".stripMargin
 
-  /** SQL twin of [[graft.operators.Overlay.convexIntersects]] — the
-    * same separating-axis structure generated over coordinate column
-    * names, so the predicate text cannot drift from the Column version.
-    * The interior-side reference is the left-associated SUM of the
-    * polygon's own vertex orientations (edge endpoints contribute exact
-    * FP zeros), matching the Column reduce order term for term.
+  /** SQL twin of [[graft.core.ConvexSat]] — the same separating-axis
+    * structure generated over coordinate column names. The interior-side
+    * reference is the left-associated SUM of the polygon's own vertex
+    * orientations (edge endpoints contribute exact FP zeros), matching
+    * the kernel's summation order term for term.
     */
   private def convexSatSql(a: Seq[(String, String)],
                            b: Seq[(String, String)]): String = {
@@ -389,10 +388,10 @@ object SparkEntry {
         graft.functions.text.fingerprint64(col("text")).as("fp64"),
         graft.functions.text.simhash64(col("text")).as("simhash"))
     }),
-    // ---- spatial join: broadcast hex-cover PIP (oracle: half-plane SQL) ----
+    // ---- spatial join: per-cell hex-cover PIP (oracle: half-plane SQL) ----
     "q12_pip_triangles" -> ((s, dir) => {
       import graft.sources.PolyRegistry
-      graft.operators.SpatialJoin.pipJoin(derivedPoints(s, dir),
+      graft.operators.SpatialJoin.pipJoinRtree(derivedPoints(s, dir),
           registry = PolyRegistry.OracleTri)
         .select(col("doc_id"), col("admin_id").as("tri_id"))
     }),
@@ -1455,7 +1454,7 @@ object SparkEntry {
         "lon", "lat", tolDeg = 5.0)
     }),
     // ---- zonal statistics: per-containing-polygon count/sum/mean of a
-    //      point field — broadcast-cover PIP join + ONE hash agg; mean
+    //      point field — per-cell PIP + ONE hash agg; mean
     //      is a final ratio over exact longs ----
     "q99_zonal_stats" -> ((s, dir) => {
       import graft.sources.PolyRegistry
@@ -2987,7 +2986,7 @@ object SparkEntry {
       val av = (1 to 5).map(i => (s"ax$i", s"ay$i"))
       val bv = (1 to 6).map(i => (s"bx$i", s"by$i"))
       // same brute-force replay over the pentagon/hexagon vertex tables,
-      // predicate generated by the SAME template as the Column version
+      // predicate generated by convexSatSql, the SQL twin of ConvexSat
       s"""WITH pts AS ($derivedPointsSql),
         |a AS MATERIALIZED ($overlayPolygonsSqlA),
         |b AS MATERIALIZED ($overlayPolygonsSqlB)

@@ -1,24 +1,26 @@
 package graft.core
 
 /** Exact closed convex–convex intersection test (separating-axis with
-  * the orientation-SUM interior side) — the array-kernel twin of
-  * `Overlay.convexIntersects`: SAME primitive, SAME evaluation order,
-  * SAME comparisons, so its decisions are bit-identical to the Column
-  * expression tree it replaces in the overlay joins.
+  * the orientation-SUM interior side) — the SAT of the overlay joins.
+  * Its SQL twin (`SparkEntry.convexSatSql`, replayed by the oracle) uses
+  * the SAME primitive, evaluation order and comparisons, so the two
+  * decide bit-identically.
   *
-  * Why it exists: the Column-tree SAT at ring width n expands to
+  * Why a kernel: a Column-tree SAT at ring width n expands to
   * O(n²) orientation sub-expressions (n=24 hulls → ~5,000 arithmetic
   * nodes), and the dominant cost of an overlay join over a handful of
   * hull rows becomes the driver-side CODEGEN COMPILE of that tree, not
   * execution. One static kernel call keeps whole-stage codegen (the
   * clip_area pattern) with a constant-size generated method.
   *
-  * Semantics (mirrors Overlay.convexIntersects doc): separated iff some
-  * edge of either ring has ALL vertices of the other strictly on the
-  * opposite side from the ring's own interior, where the interior side
-  * is the sign of the left-associated SUM of orientations over the
-  * ring's own vertices. Padded (repeated) vertices form degenerate
-  * edges whose sum is 0 and claim no separation.
+  * Semantics: separated iff some edge of either ring has ALL vertices
+  * of the other strictly on the opposite side from the ring's own
+  * interior, where the interior side is the sign of the left-associated
+  * SUM of orientations over the ring's own vertices (for triangles, the
+  * classic third-vertex test). Padded (repeated) vertices form
+  * degenerate edges whose sum is 0 and claim no separation. Degenerate
+  * (zero-area) rings never separate anything; callers supply convex,
+  * non-degenerate rings (`Overlay.isConvex` guards).
   */
 object ConvexSat {
   @inline private def orient(px: Double, py: Double, qx: Double, qy: Double,
@@ -36,7 +38,7 @@ object ConvexSat {
       val ax = px(i); val ay = py(i)
       val bx = px(j); val by = py(j)
       // left-associated orientation sum over P's own vertices — the
-      // exact reduce(_ + _) order of the Column version
+      // exact term order of the SQL twin
       var oSelf = orient(ax, ay, bx, by, px(0), py(0))
       var k = 1
       while (k < n) {

@@ -67,10 +67,4 @@ object Geohash {
     }
     (lonLo, latLo, lonHi, latHi)
   }
-
-  /** Cell center. */
-  def decodeCenter(gh: String): (Double, Double) = {
-    val (lo, la, hi, ha) = decodeBbox(gh)
-    ((lo + hi) / 2, (la + ha) / 2)
-  }
 }

@@ -63,8 +63,7 @@ object Geoparse {
         val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
         if (inRange(lat, lon)) out += Mention(lat, lon, "pair", "")
       }
-    // Gazetteer rule (shared with the DataFrame pipeline, GeoPipeline
-    // .phraseNgrams): lowercase, tokens = maximal [a-z] runs, match every
+    // Gazetteer rule: lowercase, tokens = maximal [a-z] runs, match every
     // 1/2/3-gram phrase against the gazetteer. Implemented as a
     // first-word-indexed scan (one hash lookup per token, suffix tokens
     // compared in place) — emits the IDENTICAL match multiset and order

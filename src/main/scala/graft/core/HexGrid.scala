@@ -180,7 +180,4 @@ object HexGrid {
     val centerChild = cell(lon, lat, resol + 1)
     kRing(centerChild, 2).filter(c => parent(c) == id)
   }
-
-  /** Max lon/lat extent of a cell (for covering computations). */
-  def cellRadiusDegrees(resol: Int): Double = radius(resol)
 }

@@ -150,10 +150,9 @@ case class ClipAreaExpr(first: Expression, second: Expression,
 }
 
 /** convex_sat(axs, ays, bxs, bys) → Boolean — exact closed intersection
-  * of two convex rings (separating-axis test, core/ConvexSat). The
-  * array-kernel form of Overlay.convexIntersects: identical arithmetic
-  * in identical order, but a constant-size codegen footprint where the
-  * Column tree grows O(n²) nodes with ring width.
+  * of two convex rings (separating-axis test, core/ConvexSat): a
+  * constant-size codegen footprint where a Column-tree SAT grows O(n²)
+  * nodes with ring width.
   */
 case class ConvexSatExpr(first: Expression, second: Expression,
                          third: Expression, fourth: Expression)
@@ -195,11 +194,4 @@ object geo {
   def convex_sat(axs: Column, ays: Column, bxs: Column, bys: Column): Column =
     column(ConvexSatExpr(expression(axs), expression(ays),
       expression(bxs), expression(bys)))
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("s2_cell", es => S2CellIdExpr(es(0), es(1), es(2)), "builtin")
-    reg.createOrReplaceTempFunction("hex_cell", es => HexCellExpr(es(0), es(1), es(2)), "builtin")
-    reg.createOrReplaceTempFunction("tile_id", es => TileIdExpr(es(0), es(1), es(2)), "builtin")
-  }
 }

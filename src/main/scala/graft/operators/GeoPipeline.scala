@@ -1,51 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.geo
 
 /** The end-to-end geo pipeline (BASELINE.json north_star):
   * pages → geoparse (pure-Catalyst mention extraction) → cell encode
-  * (codegen'd S2/hex exprs) → broadcast PIP join → features table.
+  * (codegen'd S2/hex exprs) → per-cell PIP tag → features table.
   *
   * Structure mirrors the reference's staged main (reference:
   * mvt/run_mvt_espre.py:103-423): parse → frame transform → grid assign →
   * broadcast-normalize join → grouped aggregation, with per-stage metrics.
   */
 object GeoPipeline {
-  // Same patterns as graft.core.Geoparse (the scalar reference impl).
-  private val LabeledPat =
-    """(?i)lat(?:itude)?\s*[:=]\s*(-?\d{1,2}\.\d+)\s*[,;\s]\s*(?:lon|lng|long)(?:itude)?\s*[:=]\s*(-?\d{1,3}\.\d+)"""
-  private val GeoUriPat = """(?i)geo:(-?\d{1,2}(?:\.\d+)?),(-?\d{1,3}(?:\.\d+)?)"""
-  private val BarePairPat = """\((-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})\)"""
-
-  private def extractPairs(df: DataFrame, pat: String, kind: String): DataFrame = {
-    df.select(col("url"),
-        explode(arrays_zip(
-          regexp_extract_all(col("text"), lit(pat), lit(1)),
-          regexp_extract_all(col("text"), lit(pat), lit(2))).as("pp")).as("p"))
-      .select(col("url"),
-        col("p.0").cast("double").as("lat"),
-        col("p.1").cast("double").as("lon"),
-        lit(kind).as("kind"), lit("").as("name"))
-      .filter(col("lat").between(-90.0, 90.0) && col("lon").between(-180.0, 180.0))
-  }
-
-  /** Letter-run tokens + 1..3-gram phrases (the word-boundary rule shared
-    * with graft.core.Geoparse).
-    */
-  private def phraseNgrams(text: Column): Column = {
-    val toks = filter(split(lower(text), "[^a-z]+"), t => length(t) > 0)
-    val bi = when(size(toks) < 2, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-    val tri = when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1),
-          element_at(toks, i + 2))))
-    concat(toks, bi, tri)
-  }
-
   /** pages(url, text, …) → mentions(url, lat, lon, kind, name) via ONE
     * codegen'd expression pass (geoparse_mentions) — the production path.
     */
@@ -54,27 +21,6 @@ object GeoPipeline {
     pages.select(col("url"), explode(geoparse_mentions(col("text"))).as("m"))
       .select(col("url"), col("m.lat").as("lat"), col("m.lon").as("lon"),
         col("m.kind").as("kind"), col("m.name").as("name"))
-  }
-
-  /** Pure-relational formulation of the same extraction (regexp passes +
-    * n-gram explode + broadcast gazetteer join) — kept as the cross-check
-    * path: tests assert it produces the same multiset as the expression
-    * path / scalar parser.
-    */
-  def pagesToMentionsRelational(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val base = pages.select("url", "text")
-    val labeled = extractPairs(base, LabeledPat, "labeled")
-    val geouri = extractPairs(base, GeoUriPat, "geouri")
-    val pair = extractPairs(base, BarePairPat, "pair")
-    val gaz = graft.core.Gazetteer.entries.toSeq.toDF("gname", "glat", "glon")
-    val gazMentions = base
-      .select(col("url"), explode(phraseNgrams(col("text"))).as("gname"))
-      .join(broadcast(gaz), Seq("gname"))
-      .select(col("url"), col("glat").as("lat"), col("glon").as("lon"),
-        lit("gazetteer").as("kind"), col("gname").as("name"))
-    labeled.unionByName(geouri).unionByName(pair).unionByName(gazMentions)
   }
 
   /** Full feature derivation: mentions + cell ids + admin PIP tags.
@@ -87,7 +33,7 @@ object GeoPipeline {
       .withColumn("s2_cell", geo.s2_cell(col("lat"), col("lon"), lit(s2Level)))
       .withColumn("hex_cell", geo.hex_cell(col("lon"), col("lat"), lit(hexRes)))
       .withColumn("tile_z12", geo.tile_id(col("lon"), col("lat"), lit(12)))
-    // zero-shuffle left PIP: per-row R-tree candidate lookup +
+    // zero-shuffle left PIP: per-row cell candidate lookup +
     // explode_outer — no window, no unique-key requirement, the mention
     // stream never exchanges before tiling (one shuffle in the whole
     // pipeline: the tiler's groupBy tile)

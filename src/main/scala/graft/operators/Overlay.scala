@@ -33,50 +33,7 @@ object Overlay {
                      rx: Column, ry: Column): Column =
     (qx - px) * (ry - py) - (qy - py) * (rx - px)
 
-  /** Exact closed-intersection test for two CONVEX polygons given as
-    * vertex-coordinate column pairs (any ring orientation). Separated
-    * iff some edge of either polygon has ALL vertices of the other
-    * strictly on the opposite side from the polygon's own interior;
-    * intersecting = not separated (touching at a point or edge counts).
-    *
-    * The interior side of edge (p, q) is the SIGN OF THE SUM of
-    * orientations over the polygon's own vertices: for a convex ring
-    * every non-edge vertex lies on one side, so the sum carries that
-    * sign exactly (the edge's own endpoints contribute exact FP zeros).
-    * For triangles this reduces to the classic third-vertex test. The
-    * sum also makes PADDING safe: a repeated vertex forms a degenerate
-    * edge whose sum is 0, which claims no separation — so fixed-width
-    * joins can pad shorter rings by repeating the last vertex.
-    * Degenerate (zero-area) polygons never separate anything; callers
-    * supply CONVEX, non-degenerate geometry ([[isConvex]] guards).
-    */
-  def convexIntersects(a: Seq[(Column, Column)], b: Seq[(Column, Column)]): Column = {
-    require(a.size >= 3 && b.size >= 3)
-    def separates(poly: Seq[(Column, Column)], other: Seq[(Column, Column)]): Column = {
-      val n = poly.size
-      (0 until n).map { i =>
-        val (px, py) = poly(i)
-        val (qx, qy) = poly((i + 1) % n)
-        val oSelf = poly.map { case (vx, vy) =>
-          orient(px, py, qx, qy, vx, vy) }.reduce(_ + _)
-        val oth = other.map { case (vx, vy) => orient(px, py, qx, qy, vx, vy) }
-        (oSelf > 0 && oth.map(_ < 0).reduce(_ && _)) ||
-          (oSelf < 0 && oth.map(_ > 0).reduce(_ && _))
-      }.reduce(_ || _)
-    }
-    !(separates(a, b) || separates(b, a))
-  }
-
-  /** Exact closed-intersection test for two triangles — the n = 3 case
-    * of [[convexIntersects]] (the orientation sum collapses to the
-    * third-vertex orientation, exactly).
-    */
-  def triIntersects(a: Seq[(Column, Column)], b: Seq[(Column, Column)]): Column = {
-    require(a.size == 3 && b.size == 3)
-    convexIntersects(a, b)
-  }
-
-  /** Convexity (and padding) guard for [[convexIntersects]] input: true
+  /** Convexity (and padding) guard for [[graft.core.ConvexSat]] input: true
     * iff consecutive-edge turns never change sign (collinear and
     * repeated — padded — vertices allowed). Non-convex rings would make
     * the SAT silently under-report separations.
@@ -96,7 +53,7 @@ object Overlay {
     * `as`(idA, ax1..ax{nA}, ay1..ay{nA}), `bs`(idB, bx1..bx{nB},
     * by1..by{nB}) — fixed vertex widths per side; rings with fewer
     * genuine vertices pad by REPEATING the last vertex (safe, see
-    * [[convexIntersects]]). `cellDeg` sizes the candidate grid (≈ the
+    * [[graft.core.ConvexSat]]). `cellDeg` sizes the candidate grid (≈ the
     * median bbox extent). `validate` (default on) raises on a
     * non-convex ring instead of silently under-reporting separations —
     * one codegen'd predicate per row, negligible beside the SAT.
@@ -140,11 +97,10 @@ object Overlay {
       // max bbox-min corner (shared by both covers iff bboxes overlap)
       .filter(col("__cx") === greatest(col("__acx0"), col("__bcx0")) &&
         col("__cy") === greatest(col("__acy0"), col("__bcy0")))
-      // the SAT runs as the array-kernel twin of [[convexIntersects]]
-      // (ConvexSat — identical arithmetic and order, bit-identical
-      // decisions): the Column tree is O((nA+nB)²) orientation nodes,
-      // and at hull widths (n=24) its codegen COMPILE time dwarfed the
-      // 8-row join it guarded
+      // the SAT runs as one array-kernel call ([[graft.core.ConvexSat]]):
+      // a Column-tree SAT is O((nA+nB)²) orientation nodes, and at hull
+      // widths (n=24) its codegen COMPILE time dwarfed the 8-row join it
+      // guarded
       .filter(graft.functions.geo.convex_sat(
         array((1 to nA).map(i => col(s"ax$i")): _*),
         array((1 to nA).map(i => col(s"ay$i")): _*),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.geo
 import graft.sources.{AdminPolygons, PolyRegistry}
@@ -9,29 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.types._
 
-/** pip_contains(admin_id, lon, lat) — exact point-in-polygon against the
-  * deterministic admin registry; codegen'd static call (no closure, no
-  * broadcast needed: the registry is a pure function of a fixed seed and
-  * materializes identically in every executor JVM).
-  */
-case class PipContainsExpr(first: Expression, second: Expression, third: Expression,
-    registry: Int = PolyRegistry.Admin)
-    extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "pip_contains"
-  override protected def nullSafeEval(id: Any, lon: Any, lat: Any): Any =
-    PolyRegistry.contains(registry, id.asInstanceOf[Long],
-      lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (id, lon, lat) =>
-      s"graft.sources.PolyRegistry.contains($registry, $id, $lon, $lat)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
 /** pip_query(cell, lon, lat) → array of admin_ids covering the point,
-  * resolved through the per-cell STRtree (registry/res are literals).
+  * resolved through the per-cell candidate list (registry/res are
+  * literals).
   */
 case class PipQueryExpr(first: Expression, second: Expression, third: Expression,
     registry: Int, res: Int, level: Int = -1)
@@ -51,17 +31,17 @@ case class PipQueryExpr(first: Expression, second: Expression, third: Expression
     copy(first = f, second = s, third = t)
 }
 
-/** Broadcast point-in-polygon join via hex-cell prefix (BASELINE.json
-  * north_star: "point-in-polygon joins against admin-boundary polygons
-  * using a broadcast R-tree per H3 cell prefix").
+/** Point-in-polygon join via hex-cell prefix (BASELINE.json north_star:
+  * "point-in-polygon joins against admin-boundary polygons using a
+  * broadcast R-tree per H3 cell prefix").
   *
   * Plan shape (the reference's broadcast-normalize join, SURVEY.md §2.3):
-  *   points(lon,lat) --hex_cell(res)--> equi-join BROADCAST(polygon cell
-  *   cover) --> exact PIP filter (codegen'd) --> (point, admin_id) rows.
+  *   points(lon,lat) --hex_cell(res)--> pip_query (codegen'd per-cell
+  *   candidate lookup + exact ray-cast) --> explode --> (point, admin_id).
   *
-  * The cover side is tiny (≈10-40 cells × ~80 polygons), so Catalyst picks
-  * BroadcastHashJoin; the per-row exact test only runs on cell-collocated
-  * candidates. At 100 TB this is shuffle-free on the big side.
+  * The cell → candidate index is a pure function of the deterministic
+  * registry, so every executor JVM builds the same one — the broadcast
+  * without a broadcast. The point side never joins and never exchanges.
   */
 object SpatialJoin {
   /** k-anonymity cell suppression (geo-privacy governance for published
@@ -84,134 +64,61 @@ object SpatialJoin {
 
   import org.apache.spark.sql.GraftBridge.{column, expression}
 
-  def pip_contains(adminId: Column, lon: Column, lat: Column,
-                   registry: Int = PolyRegistry.Admin): Column =
-    column(PipContainsExpr(expression(adminId), expression(lon), expression(lat),
-      registry))
+  private def pipHits(res: Int, registry: Int, level: Option[Int]): Column =
+    column(PipQueryExpr(
+      expression(geo.hex_cell(col("lon"), col("lat"), lit(res))),
+      expression(col("lon")), expression(col("lat")), registry, res,
+      level.getOrElse(-1)))
 
-  /** Cell-cover DataFrame of the admin registry at `res`. */
-  def polygonCover(spark: SparkSession, res: Int = AdminPolygons.CoverRes,
-                   level: Option[Int] = None,
-                   registry: Int = PolyRegistry.Admin): DataFrame = {
-    import spark.implicits._
-    val all = PolyRegistry.polys(registry)
-    val polys = level.fold(all)(l => all.filter(_.level == l))
-    polys.flatMap(p => AdminPolygons.cellCover(p, res).map(c => (c, p.adminId, p.name)))
-      .toDF("cover_cell", "admin_id", "admin_name")
-  }
-
-  /** Join `points` (must have `lon`, `lat` double columns) against the
-    * admin registry; returns input columns + admin_id + admin_name.
-    * Inner join: points matching no polygon drop out (use pipJoinLeft for
-    * the tagging variant).
+  /** Inner PIP: one row per (point, covering polygon); points matching
+    * no polygon — and points with a null coordinate — drop out. `points`
+    * must have `lon`, `lat` double columns; adds `admin_id`.
     */
-  def pipJoin(points: DataFrame, res: Int = AdminPolygons.CoverRes,
-              level: Option[Int] = None,
-              registry: Int = PolyRegistry.Admin): DataFrame = {
-    val spark = points.sparkSession
-    val cover = polygonCover(spark, res, level, registry)
-    points
-      .withColumn("__cell", geo.hex_cell(col("lon"), col("lat"), lit(res)))
-      .join(broadcast(cover), col("__cell") === col("cover_cell"))
-      .filter(pip_contains(col("admin_id"), col("lon"), col("lat"), registry))
-      .drop("__cell", "cover_cell")
-  }
+  def pipJoinRtree(points: DataFrame, res: Int = AdminPolygons.CoverRes,
+                   registry: Int = PolyRegistry.Admin,
+                   level: Option[Int] = None): DataFrame =
+    points.withColumn("admin_id", explode(pipHits(res, registry, level)))
 
   /** Zonal statistics — aggregate an integer per-point value over the
     * polygon containing each point (count + exact sum + mean): the
     * raster-analytics "summarize a field by admin zone" primitive. One
-    * broadcast-cover PIP join (polygons never shuffle) followed by ONE
-    * hash aggregation keyed by admin_id with map-side partial combine;
-    * the mean is a final double ratio over two exact longs, so the
-    * distributed part is order-insensitive under any partitioning.
+    * inner PIP (polygons never shuffle) followed by ONE hash aggregation
+    * keyed by admin_id with map-side partial combine; the mean is a final
+    * double ratio over two exact longs, so the distributed part is
+    * order-insensitive under any partitioning.
     * Returns (admin_id, n_pts, sum_v, mean_v).
     */
   def zonalStats(points: DataFrame, valCol: String,
                  res: Int = AdminPolygons.CoverRes,
                  registry: Int = PolyRegistry.Admin): DataFrame =
-    pipJoin(points, res, None, registry)
+    pipJoinRtree(points, res, registry)
       .groupBy("admin_id")
       .agg(count(lit(1)).as("n_pts"),
         sum(col(valCol).cast("long")).as("sum_v"))
       .withColumn("mean_v", round(
         col("sum_v").cast("double") / col("n_pts").cast("double"), 6))
 
-  /** R-tree variant: instead of the equi-join + post-filter, each point
-    * queries the STRtree of its cell's candidate polygons directly (one
-    * codegen'd expression + explode; zero joins). Preferable when many
-    * polygons share a cover cell — at 10⁵+ admin polygons the per-cell
-    * tree turns the candidate scan into O(log n). Same output as pipJoin.
-    */
-  def pipJoinRtree(points: DataFrame, res: Int = AdminPolygons.CoverRes,
-                   registry: Int = PolyRegistry.Admin,
-                   level: Option[Int] = None): DataFrame = {
-    val hits = column(PipQueryExpr(
-      expression(geo.hex_cell(col("lon"), col("lat"), lit(res))),
-      expression(col("lon")), expression(col("lat")), registry, res,
-      level.getOrElse(-1)))
-    points
-      .withColumn("admin_id", explode(hits))
-  }
-
-  /** Zero-shuffle LEFT PIP tag: per-row candidate lookup through the
-    * per-cell STRtree expression, `explode_outer` for the miss row (null
-    * admin), names attached via a broadcast of the tiny registry table.
-    * Same output multiset as `pipJoinLeft` but with NO window and NO
-    * unique-key requirement — the big side never exchanges, which at
-    * 100 TB removes the single most expensive shuffle of the MVT
-    * pipeline (round-2 stage audit: the window stage cost as much as the
-    * whole geoparse map stage).
+  /** Left PIP tag: the inner path with `explode_outer`, so a point
+    * matching no polygon (or with a null coordinate) keeps exactly one
+    * row with null admin columns; names attach via a broadcast of the
+    * tiny registry table. No window and no unique-key requirement — the
+    * big side never exchanges, which removes the most expensive shuffle
+    * of the MVT pipeline. Adds `admin_id`, `admin_name`.
     */
   def pipJoinLeftRtree(points: DataFrame, res: Int = AdminPolygons.CoverRes,
                        registry: Int = PolyRegistry.Admin,
                        level: Option[Int] = None): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val hits = column(PipQueryExpr(
-      expression(geo.hex_cell(col("lon"), col("lat"), lit(res))),
-      expression(col("lon")), expression(col("lat")), registry, res,
-      level.getOrElse(-1)))
     val all = PolyRegistry.polys(registry)
     val polys = level.fold(all)(l => all.filter(_.level == l))
     val names = polys.map(p => (p.adminId, p.name)).toDF("admin_id", "admin_name")
     val inCols = points.columns
     points
-      .withColumn("admin_id", explode_outer(hits))
+      .withColumn("admin_id", explode_outer(pipHits(res, registry, level)))
       .join(broadcast(names), Seq("admin_id"), "left")
       .select((inCols.toIndexedSeq.map(col) :+ col("admin_id")
         :+ col("admin_name")): _*)
-  }
-
-  /** Left variant: points matching no polygon survive with null admin
-    * columns (the null-test surface: "features outside all polygons join
-    * to nothing"). `keyCol` must uniquely identify a point row.
-    */
-  def pipJoinLeft(points: DataFrame, keyCol: String,
-                  res: Int = AdminPolygons.CoverRes,
-                  level: Option[Int] = None,
-                  registry: Int = PolyRegistry.Admin): DataFrame = {
-    // Single pass (no recompute of the expensive input branch): left-join
-    // the broadcast cover, evaluate exact PIP per candidate, then keep hit
-    // rows plus exactly one null-tagged row for all-miss points via a
-    // window over the point key (one shuffle).
-    import org.apache.spark.sql.expressions.Window
-    val spark = points.sparkSession
-    val cover = polygonCover(spark, res, level, registry)
-    val w = Window.partitionBy(keyCol)
-    val cand = points
-      .withColumn("__cell", geo.hex_cell(col("lon"), col("lat"), lit(res)))
-      .join(broadcast(cover), col("__cell") === col("cover_cell"), "left")
-      .withColumn("__hit",
-        col("admin_id").isNotNull &&
-          pip_contains(col("admin_id"), col("lon"), col("lat"), registry))
-      .withColumn("__any", max(when(col("__hit"), 1).otherwise(0)).over(w))
-      .withColumn("__rn", row_number().over(
-        w.orderBy(col("__hit").desc, col("admin_id").asc_nulls_last)))
-    cand
-      .filter(col("__hit") || (col("__any") === 0 && col("__rn") === 1))
-      .withColumn("admin_id", when(col("__hit"), col("admin_id")))
-      .withColumn("admin_name", when(col("__hit"), col("admin_name")))
-      .drop("__cell", "cover_cell", "__hit", "__any", "__rn")
   }
 
   /** SQL text of the EXACT point-to-triangle squared distance: 0 when

@@ -60,18 +60,6 @@ object TextAnalysis {
         / size(toks))
   }
 
-  /** Composite quality score in [0,1]: length band + punctuation sanity +
-    * stopword presence (a simple public-web-text heuristic; weights pinned).
-    */
-  def qualityScore(text: Column): Column = {
-    val nTok = tokenCount(text).cast("double")
-    val lenScore = least(nTok / lit(50.0), lit(1.0))
-    val punct = punctRatio(text)
-    val punctScore = when(punct > 0.2, lit(0.0)).otherwise(lit(1.0) - punct * 5.0)
-    val stopScore = least(stopwordRatio(text) * lit(5.0), lit(1.0))
-    round(lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3, 6)
-  }
-
   /** Language ID over a fixed marker-word table (n-gram-free heuristic:
     * count language-exclusive stopwords; ties → 'und'). Pure columns.
     */

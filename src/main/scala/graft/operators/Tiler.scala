@@ -37,14 +37,6 @@ final case class TileRowF(zoom: Int, x: Long, y: Long, n_features: Int,
   * one compact artifact per group.
   */
 object Tiler {
-  /** Attach tile_id / local coords for one zoom (pure column math). */
-  def withTileCoords(features: DataFrame, zoom: Int): DataFrame = {
-    val z = lit(zoom)
-    features
-      .withColumn("zoom", z)
-      .withColumn("tile_id", graft.functions.geo.tile_id(col("lon"), col("lat"), z))
-  }
-
   /** features(lon, lat, kind, name, admin_name?) → tiles at the given
     * zooms. `cap` = max features retained per tile (deterministic
     * rank: hash of feature identity).

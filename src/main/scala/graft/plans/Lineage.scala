@@ -409,29 +409,6 @@ object Lineage {
     df.join(done, Seq("tile_id"), "left_anti")
   }
 
-  /** CSV export of the metrics table (reference: mvt/saveio.py:5-17
-    * save_table — dict-rows → CSV with header).
-    */
-  def exportMetricsCsv(spark: SparkSession, root: String, outPath: String): Unit =
-    metricsTable(spark, root)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(outPath)
-
-  /** Append one summary row to a results CSV, header written once
-    * (reference: mvt/saveio.py:30-38 write_table71 append-once semantics).
-    */
-  def appendSummaryRow(path: String, header: Seq[String], row: Seq[Any]): Unit = {
-    val p = Paths.get(path)
-    Files.createDirectories(p.getParent)
-    val exists = Files.exists(p)
-    val sb = new StringBuilder
-    if (!exists) sb.append(header.mkString(",")).append('\n')
-    sb.append(row.map(_.toString).mkString(",")).append('\n')
-    Files.writeString(p, sb.toString,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-  }
-
   /** Combined metrics table across active snapshots. Snapshots whose
     * metrics directory was lost are SKIPPED here (a multi-path read
     * would throw and take every caller down with it) — the QA report's

@@ -27,7 +27,6 @@ class TaskTimeListener extends SparkListener {
   private val stageWallMs =
     new java.util.concurrent.ConcurrentHashMap[Int, Long]()
 
-  private val shufReadB = new LongAdder
   private val shufWriteB = new LongAdder
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
@@ -35,7 +34,6 @@ class TaskTimeListener extends SparkListener {
     if (m != null) {
       runTimeMs.add(m.executorRunTime)
       cpuTimeNs.add(m.executorCpuTime)
-      shufReadB.add(m.shuffleReadMetrics.totalBytesRead)
       shufWriteB.add(m.shuffleWriteMetrics.bytesWritten)
       stageRunMs.computeIfAbsent(taskEnd.stageId, _ => new LongAdder)
         .add(m.executorRunTime)
@@ -54,7 +52,6 @@ class TaskTimeListener extends SparkListener {
   /** Shuffle bytes written (map side) — the plan-quality number: an
     * operator whose payload rides a fan-out shows up here immediately. */
   def shuffleWriteMb: Double = shufWriteB.sum() / 1048576.0
-  def shuffleReadMb: Double = shufReadB.sum() / 1048576.0
 
   /** (stage label, task-seconds) descending; label = id, task count, and
     * the stage's own wall time (submit→complete) so scheduling gaps and
@@ -73,7 +70,7 @@ class TaskTimeListener extends SparkListener {
 
   def reset(): Unit = {
     runTimeMs.reset(); cpuTimeNs.reset()
-    shufReadB.reset(); shufWriteB.reset()
+    shufWriteB.reset()
     stageRunMs.clear(); stageTasks.clear(); stageWallMs.clear()
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.core.{Gazetteer, GeoKernels, HexGrid, Rng}
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
-import org.locationtech.jts.geom.prep.{PreparedGeometryFactory, PreparedGeometry}
 
 /** Deterministic synthetic admin-boundary polygons — one irregular convex
   * octagon per gazetteer city (admin_id = city index) plus six continental
@@ -67,19 +66,11 @@ object AdminPolygons {
     gf.createPolygon(coords)
   }
 
-  /** Prepared geometries for fast repeated PIP (built once per JVM). */
-  lazy val prepared: Map[Long, PreparedGeometry] =
-    all.map(p => p.adminId -> PreparedGeometryFactory.prepare(toJts(p))).toMap
-
-  /** Static PIP entry point usable from codegen'd expressions. */
-  def contains(adminId: Long, lon: Double, lat: Double): Boolean =
-    byId.get(adminId).exists(_.contains(lon, lat))
-
   /** Hex cells (at `res`) covering the polygon: every cell whose hexagon
     * could contain a point of the polygon. Enumerates the axial-coordinate
     * rectangle spanned by the bbox corners (padded), then keeps cells whose
-    * JTS hexagon intersects the polygon — the "R-tree per cell prefix"
-    * build side of the broadcast PIP join.
+    * JTS hexagon intersects the polygon — the build side of the per-cell
+    * candidate index behind the PIP join.
     */
   def cellCover(p: AdminPolygon, res: Int): Array[Long] = {
     val (x1, y1, x2, y2) = p.bbox

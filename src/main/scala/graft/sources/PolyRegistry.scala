@@ -55,26 +55,12 @@ object PolyRegistry {
   def contains(registry: Int, adminId: Long, lon: Double, lat: Double): Boolean =
     byId(registry).get(adminId).exists(_.contains(lon, lat))
 
-  // ---- broadcast R-tree per cell prefix (north_star wording) ----
-  // For registries with many polygons per cover cell, candidate lookup
-  // inside a cell goes through a JTS STRtree of prepared geometries. The
-  // registry is deterministic, so each executor JVM builds identical
-  // trees lazily — semantically equivalent to broadcasting them.
-  import org.locationtech.jts.index.strtree.STRtree
-  import org.locationtech.jts.geom.{Coordinate, Envelope, GeometryFactory}
-  import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-
-  private lazy val gfStatic = new GeometryFactory()
-
-  // prepared geometries are built ONCE per (registry, id) and shared by
-  // every per-cell tree — memory is O(polygons), not O(cells touched)
-  private val preparedCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), PreparedGeometry]()
-
-  def prepared(registry: Int, id: Long): PreparedGeometry =
-    preparedCache.computeIfAbsent((registry, id), { _ =>
-      PreparedGeometryFactory.prepare(AdminPolygons.toJts(byId(registry)(id)))
-    })
+  // ---- per-cell candidate index (the "R-tree per cell prefix") ----
+  // The registry is deterministic, so each executor JVM builds identical
+  // indexes lazily — semantically equivalent to broadcasting them. Cell
+  // covers keep candidate lists short (at CoverRes: at most 3 polygons
+  // per cell for Admin, 1 for OracleTri), so a flat scan of the cell's
+  // list is the whole index; no tree is needed.
 
   // cell → polygon-id inverted index, built ONCE per (registry, res) by a
   // single pass over the registry (invert cellCover) — first touch per
@@ -94,49 +80,7 @@ object PolyRegistry {
       m.view.mapValues(_.toArray.sorted).toMap
     })
 
-  // per-cell STRtrees cache only the tree structure (cheap: envelopes +
-  // shared prepared refs); bounded — beyond the bound trees are rebuilt
-  // per miss from the O(polys-in-cell) cover index, which is fast
-  // The full cell→STRtree map per (registry, res, level) is built ONCE
-  // per JVM by inverting the cover index (the "broadcast R-tree per cell
-  // prefix": the registry is deterministic, every executor materializes
-  // identical trees). The per-ROW path is then a single lock-free
-  // immutable-map lookup — no tuple-key CHM hit, no lazy build race.
-  private val treeSetCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Map[Long, STRtree]]()
-
-  private def treesFor(registry: Int, res: Int, level: Int): Map[Long, STRtree] =
-    treeSetCache.computeIfAbsent((registry, res, level), { _ =>
-      coverIndex(registry, res).map { case (cell, ids) =>
-        val t = new STRtree()
-        ids.foreach { id =>
-          val p = byId(registry)(id)
-          if (level < 0 || p.level == level) {
-            val (x1, y1, x2, y2) = p.bbox
-            t.insert(new Envelope(x1, x2, y1, y2), (id, prepared(registry, id)))
-          }
-        }
-        t.build()
-        cell -> t
-      }
-    })
-
-  /** STRtree of the polygons whose cover includes `cell` (at `res`),
-    * optionally restricted to one admin level (level < 0 = all).
-    */
-  def treeForCell(registry: Int, res: Int, level: Int, cell: Long): STRtree =
-    treesFor(registry, res, level).getOrElse(cell, EmptyTree)
-
-  private lazy val EmptyTree = { val t = new STRtree(); t.build(); t }
-
   private val EmptyHits = Array.empty[Long]
-
-  // Dense-cell threshold: below it a flat candidate array + pure-double
-  // bbox/ray-cast test beats the JTS tree (no Envelope/Point/ArrayList
-  // allocation per row); above it the per-cell STRtree engages — the
-  // "broadcast R-tree per cell prefix" structure for 10⁵-polygon
-  // registries where one cover cell can hold hundreds of candidates.
-  private val TreeThreshold = 16
 
   /** Per-cell flat candidates: (id, bbox, polygon) sorted by id. */
   private final case class Cand(id: Long, x1: Double, y1: Double,
@@ -157,47 +101,22 @@ object PolyRegistry {
       }.toMap
     })
 
-  /** All admin ids whose polygon covers the point: flat scan for sparse
-    * cells, R-tree for dense ones. Exact ray-cast either way.
+  /** All admin ids whose polygon covers the point, ascending: bbox test
+    * then exact ray-cast over the cell's candidates.
     */
   def queryTree(registry: Int, res: Int, level: Int, cell: Long,
                 lon: Double, lat: Double): Array[Long] = {
     val cands = candsFor(registry, res, level).getOrElse(cell, null)
-    if (cands == null || cands.length == 0) return EmptyHits
-    if (cands.length <= TreeThreshold) {
-      var n = 0
-      var i = 0
-      while (i < cands.length) {
-        val c = cands(i)
-        if (lon >= c.x1 && lon <= c.x2 && lat >= c.y1 && lat <= c.y2 &&
-            c.p.contains(lon, lat)) n += 1
-        i += 1
-      }
-      if (n == 0) return EmptyHits
-      val out = new Array[Long](n)
-      var k = 0
-      i = 0
-      while (i < cands.length) {
-        val c = cands(i)
-        if (lon >= c.x1 && lon <= c.x2 && lat >= c.y1 && lat <= c.y2 &&
-            c.p.contains(lon, lat)) { out(k) = c.id; k += 1 }
-        i += 1
-      }
-      out
-    } else {
-      val tree = treesFor(registry, res, level).getOrElse(cell, null)
-      if (tree == null) return EmptyHits
-      val hits = tree.query(new Envelope(lon, lon, lat, lat))
-      if (hits.isEmpty) return EmptyHits
-      val out = Array.newBuilder[Long]
-      val it = hits.iterator()
-      val pt = gfStatic.createPoint(new Coordinate(lon, lat))
-      while (it.hasNext) {
-        val (id, prep) = it.next().asInstanceOf[(Long, PreparedGeometry)]
-        if (prep.covers(pt)) out += id
-      }
-      out.result().sorted
+    if (cands == null) return EmptyHits
+    var out = EmptyHits
+    var i = 0
+    while (i < cands.length) {
+      val c = cands(i)
+      if (lon >= c.x1 && lon <= c.x2 && lat >= c.y1 && lat <= c.y2 &&
+          c.p.contains(lon, lat)) out = out :+ c.id
+      i += 1
     }
+    out
   }
 
   /** Half-plane SQL predicate for a CCW convex ring (oracle generation). */

@@ -72,7 +72,7 @@ class OverlaySpec extends AnyFunSuite {
   }
 
   // serial SAT for convex n-gons (orientation-sum interior side —
-  // mirrors Overlay.convexIntersects exactly)
+  // mirrors core.ConvexSat exactly)
   private def refConvex(a: Tri, b: Tri): Boolean = {
     def orient(p: (Double, Double), q: (Double, Double),
                r: (Double, Double)): Double =

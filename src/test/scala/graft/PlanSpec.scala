@@ -40,6 +40,12 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), p.take(1500))
   }
 
+  test("q12 PIP is a single map: no Join, no Exchange") {
+    val p = planOf("q12_pip_triangles")
+    assert(!p.contains("Join"), p.take(1500))
+    assert(!p.contains("Exchange"), p.take(1500))
+  }
+
   test("IVF assign stage is a map: no Exchange above the corpus scan") {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val cents = graft.operators.Similarity.trainCentroids(e, nCentroids = 8, iters = 1)

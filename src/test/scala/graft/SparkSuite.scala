@@ -65,12 +65,6 @@ class GeoPipelineSpec extends AnyFunSuite {
       .select("url", "lat", "lon", "kind")
       .as[(String, Double, Double, String)].collect()
       .groupBy(identity).view.mapValues(_.length).toMap
-    // relational formulation must agree with the expression path
-    val relMentions = graft.operators.GeoPipeline.pagesToMentionsRelational(pages)
-      .select("url", "lat", "lon", "kind")
-      .as[(String, Double, Double, String)].collect()
-      .groupBy(identity).view.mapValues(_.length).toMap
-    assert(relMentions === dfMentions)
     val scalarMentions = pages.select("url", "text").as[(String, String)].collect()
       .flatMap { case (url, text) =>
         Geoparse.parse(text).map(m => (url, m.lat, m.lon, m.kind))
@@ -109,7 +103,7 @@ class GeoPipelineSpec extends AnyFunSuite {
         Rng.uniform(33L, i.toLong, 2L) * 170.0 - 85.0)
     }
     val df = pts.toDF("pid", "lon", "lat")
-    val joined = graft.operators.SpatialJoin.pipJoin(df, level = Some(2))
+    val joined = graft.operators.SpatialJoin.pipJoinRtree(df, level = Some(2))
       .select("pid", "admin_id").as[(Long, Long)].collect().toSet
     val brute = pts.flatMap { case (pid, lon, lat) =>
       AdminPolygons.cityPolygons.filter(_.contains(lon, lat)).map(p => (pid, p.adminId))
@@ -122,7 +116,7 @@ class GeoPipelineSpec extends AnyFunSuite {
     // mid-Pacific points
     val df = (0 until 50).map(i => (i.toLong, -150.0 + i * 0.1, -45.0 - i * 0.1))
       .toDF("pid", "lon", "lat")
-    assert(graft.operators.SpatialJoin.pipJoin(df, level = Some(2)).count() === 0)
+    assert(graft.operators.SpatialJoin.pipJoinRtree(df, level = Some(2)).count() === 0)
   }
 
   test("injection-recovery: k points injected into a known cell are all recovered") {
@@ -133,9 +127,62 @@ class GeoPipelineSpec extends AnyFunSuite {
     val k = 17
     val injected = (0 until k).map(i => (i.toLong, clon + i * 1e-4, clat + i * 1e-4))
     val df = injected.toDF("pid", "lon", "lat")
-    val got = graft.operators.SpatialJoin.pipJoin(df, level = Some(2))
+    val got = graft.operators.SpatialJoin.pipJoinRtree(df, level = Some(2))
       .filter(col("admin_id") === target.adminId).count()
     assert(got === k.toLong)
+  }
+
+  /** Left PIP tag vs brute force over 3,000 seeded points (odd ids
+    * jittered around gazetteer cities so city octagons get hits and
+    * overlaps) plus three null-coordinate rows: every (point, polygon)
+    * hit exactly once with its name, every miss as exactly one
+    * null-tagged row; the inner path drops the null-coordinate rows.
+    */
+  private def leftPipParity(registry: Int, level: Option[Int]): Unit = {
+    import spark.implicits._
+    import graft.sources.PolyRegistry
+    import graft.operators.SpatialJoin
+    val pts: Seq[(Long, Option[Double], Option[Double])] = (0 until 3000).map { i =>
+      val (lon, lat) =
+        if (i % 2 == 0)
+          (Rng.uniform(35L, i.toLong, 1L) * 360.0 - 180.0,
+            Rng.uniform(35L, i.toLong, 2L) * 170.0 - 85.0)
+        else {
+          val (_, clat, clon) = Gazetteer.entries(i % Gazetteer.entries.length)
+          (clon + Rng.uniform(35L, i.toLong, 3L) * 8.0 - 4.0,
+            clat + Rng.uniform(35L, i.toLong, 4L) * 8.0 - 4.0)
+        }
+      (i.toLong, Some(lon), Some(lat))
+    } ++ Seq((3000L, None, Some(10.0)), (3001L, Some(10.0), None), (3002L, None, None))
+    val df = pts.toDF("pid", "lon", "lat")
+    val polys = PolyRegistry.polys(registry).filter(p => level.forall(_ == p.level))
+    def hits(lon: Option[Double], lat: Option[Double]) = (lon, lat) match {
+      case (Some(x), Some(y)) =>
+        polys.filter(p => PolyRegistry.contains(registry, p.adminId, x, y))
+      case _ => Seq.empty
+    }
+    val want: Seq[(Long, Option[Long], Option[String])] = pts.flatMap { case (pid, lon, lat) =>
+      val hs = hits(lon, lat)
+      if (hs.isEmpty) Seq((pid, None, None))
+      else hs.map(p => (pid, Some(p.adminId), Some(p.name)))
+    }.sorted
+    val got = SpatialJoin.pipJoinLeftRtree(df, registry = registry, level = level)
+      .select("pid", "admin_id", "admin_name")
+      .as[(Long, Option[Long], Option[String])].collect().toSeq.sorted
+    assert(got === want)
+    assert(want.count(_._2.isDefined) > 100, "too few hits to mean anything")
+    assert(want.count(_._2.isEmpty) > 100, "too few misses to mean anything")
+    val inner = SpatialJoin.pipJoinRtree(df, registry = registry, level = level)
+      .select("pid", "admin_id").as[(Long, Long)].collect().toSeq.sorted
+    assert(inner === want.collect { case (pid, Some(id), _) => (pid, id) })
+  }
+
+  test("left PIP tag matches brute force: admin registry, level 2") {
+    leftPipParity(graft.sources.PolyRegistry.Admin, Some(2))
+  }
+
+  test("left PIP tag matches brute force: oracle triangles") {
+    leftPipParity(graft.sources.PolyRegistry.OracleTri, None)
   }
 
   test("flagship entry returns features") {

@@ -1,5 +1,10 @@
 package graft.core
 
+import java.util.Locale
+import java.util.regex.{Matcher, Pattern}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 /** Deterministic geoparsing: extract (lat, lon) mentions from page text.
   *
   * Target analog of the reference's header multi-key fallback extraction
@@ -13,109 +18,205 @@ package graft.core
   *  3. bare parenthesized pair: `(<lat>, <lon>)` with both in range and at
   *     least 3 decimal places (guards against matching arbitrary numbers)
   *  4. gazetteer city names (word-boundary, case-insensitive)
+  *
+  * Output order: every labeled match by position, then geo URIs, then
+  * pairs, then gazetteer 1-word names by position, then 2-word, then
+  * 3-word names.
   */
 object Geoparse {
   final case class Mention(lat: Double, lon: Double, kind: String, name: String)
 
-  private val Labeled =
-    """(?i)lat(?:itude)?\s*[:=]\s*(-?\d{1,2}\.\d+)\s*[,;\s]\s*(?:lon|lng|long)(?:itude)?\s*[:=]\s*(-?\d{1,3}\.\d+)""".r
+  private val Labeled = Pattern.compile(
+    """(?i)lat(?:itude)?\s*[:=]\s*(-?\d{1,2}\.\d+)\s*[,;\s]\s*(?:lon|lng|long)(?:itude)?\s*[:=]\s*(-?\d{1,3}\.\d+)""")
   private val GeoUri =
-    """(?i)geo:(-?\d{1,2}(?:\.\d+)?),(-?\d{1,3}(?:\.\d+)?)""".r
+    Pattern.compile("""(?i)geo:(-?\d{1,2}(?:\.\d+)?),(-?\d{1,3}(?:\.\d+)?)""")
   private val BarePair =
-    """\((-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})\)""".r
+    Pattern.compile("""\((-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})\)""")
 
   @inline private def inRange(lat: Double, lon: Double): Boolean =
     lat >= -90.0 && lat <= 90.0 && lon >= -180.0 && lon <= 180.0
 
-  /** Conservative case-insensitive substring scan — a regex that needs
-    * `needle` cannot match text lacking it, and this loop is ~10× cheaper
-    * than engaging the regex engine on a miss.
+  /** Building a Matcher costs more than a parse's own scan, so each thread
+    * keeps one per pattern and points it at every text it parses.
     */
-  private def containsIgnoreCase(text: String, needle: String): Boolean = {
-    val n = needle.length
-    val last = text.length - n
-    val c0l = Character.toLowerCase(needle.charAt(0))
-    val c0u = Character.toUpperCase(needle.charAt(0))
-    var i = 0
-    while (i <= last) {
-      val ch = text.charAt(i)
-      if ((ch == c0l || ch == c0u) &&
-          text.regionMatches(true, i, needle, 0, n)) return true
-      i += 1
+  private val matchers = ThreadLocal.withInitial[Array[Matcher]](() =>
+    Array(Labeled, GeoUri, BarePair).map(_.matcher("")))
+
+  /** The in-range matches of one coordinate encoding, in text order.
+    * `tryAt` must be offered candidate starts in increasing order; a start
+    * before the previous match's end is skipped, so the matches are the
+    * same non-overlapping ones `findAllMatchIn` yields.
+    */
+  private final class Encoding(m: Matcher, kind: String, text: String) {
+    private[this] var bound = false
+    private[this] var end = 0
+    private[this] var hits: mutable.ArrayBuffer[Mention] = _
+
+    def tryAt(i: Int): Unit = if (i >= end) {
+      if (!bound) { m.reset(text); bound = true }
+      m.region(i, text.length)
+      if (m.lookingAt()) {
+        end = m.end()
+        val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
+        if (inRange(lat, lon)) {
+          if (hits == null) hits = new mutable.ArrayBuffer[Mention](4)
+          hits += Mention(lat, lon, kind, "")
+        }
+      }
     }
-    false
+
+    def size: Int = if (hits == null) 0 else hits.length
+
+    /** Copies the hits into `out` at `k`; returns the next free index. */
+    def copyTo(out: Array[Mention], k: Int): Int = {
+      if (hits != null) hits.copyToArray(out, k)
+      k + size
+    }
+  }
+
+  /** Each gazetteer name's words, in `Gazetteer.entries` order. */
+  private val words: Array[Array[String]] = Gazetteer.entries.map(_._1.split(' '))
+  private val MaxWords = words.map(_.length).max
+  /** Mentions are immutable, so every hit on an entry shares one. */
+  private val nameMention: Array[Mention] =
+    Gazetteer.entries.map { case (n, la, lo) => Mention(la, lo, "gazetteer", n) }
+
+  // First-word table: open addressing on the word's String.hashCode.
+  // A slot holds the indices of the entries starting with that word, in
+  // `entries` order. At most half the slots are used.
+  private val Slots = Integer.highestOneBit(words.length * 4)
+  private val slotHash = new Array[Int](Slots)
+  private val slotWord = new Array[String](Slots)
+  private val slotEntries = new Array[Array[Int]](Slots)
+  words.indices.groupBy(e => words(e)(0)).foreach { case (w, es) =>
+    var s = slot(w.hashCode)
+    while (slotWord(s) != null) s = (s + 1) & (Slots - 1)
+    slotHash(s) = w.hashCode; slotWord(s) = w; slotEntries(s) = es.sorted.toArray
+  }
+
+  @inline private def slot(h: Int): Int = (h ^ (h >>> 16)) & (Slots - 1)
+
+  /** An ASCII letter; `| 0x20` lowers it. No other char maps into a-z. */
+  @inline private def isLetter(c: Char): Boolean = {
+    val f = c | 0x20
+    f >= 'a' && f <= 'z'
+  }
+
+  /** Whether the letter run `s[start, end)` spells `w` (lowercase). */
+  @inline private def spells(s: String, start: Int, end: Int, w: String): Boolean =
+    end - start == w.length && s.regionMatches(true, start, w, 0, w.length)
+
+  /** Entries whose first word is the letter run `s[start, end)` with hash
+    * `h`, or null.
+    */
+  private def firstWord(s: String, start: Int, end: Int, h: Int): Array[Int] = {
+    var i = slot(h)
+    while (slotWord(i) != null) {
+      if (slotHash(i) == h && spells(s, start, end, slotWord(i))) return slotEntries(i)
+      i = (i + 1) & (Slots - 1)
+    }
+    null
+  }
+
+  /** Whether words 1.. of entry `e` follow in `s` from `p0`, one maximal
+    * letter run each.
+    */
+  private def restFollows(s: String, p0: Int, e: Int): Boolean = {
+    val ws = words(e)
+    val len = s.length
+    var p = p0
+    var j = 1
+    while (j < ws.length) {
+      while (p < len && !isLetter(s.charAt(p))) p += 1
+      val start = p
+      while (p < len && isLetter(s.charAt(p))) p += 1
+      if (!spells(s, start, p, ws(j))) return false
+      j += 1
+    }
+    true
+  }
+
+  /** Indices of the entries matched in `s`, by the position of their first
+    * word; null when none. Tokens are the maximal letter runs, lowered.
+    */
+  private def gazetteerHits(s: String): Array[Int] = {
+    var hits: mutable.ArrayBuilder.ofInt = null
+    val len = s.length
+    var i = 0
+    while (i < len) {
+      if (!isLetter(s.charAt(i))) i += 1
+      else {
+        val start = i
+        var h = 0
+        while (i < len && isLetter(s.charAt(i))) { h = 31 * h + (s.charAt(i) | 0x20); i += 1 }
+        val es = firstWord(s, start, i, h)
+        if (es != null) {
+          var c = 0
+          while (c < es.length) {
+            if (restFollows(s, i, es(c))) {
+              if (hits == null) hits = new mutable.ArrayBuilder.ofInt
+              hits += es(c)
+            }
+            c += 1
+          }
+        }
+      }
+    }
+    if (hits == null) null else hits.result()
   }
 
   def parse(text: String): Seq[Mention] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
-    if (containsIgnoreCase(text, "lat"))
-      Labeled.findAllMatchIn(text).foreach { m =>
-        val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
-        if (inRange(lat, lon)) out += Mention(lat, lon, "labeled", "")
-      }
-    if (containsIgnoreCase(text, "geo:"))
-      GeoUri.findAllMatchIn(text).foreach { m =>
-        val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
-        if (inRange(lat, lon)) out += Mention(lat, lon, "geouri", "")
-      }
-    if (text.indexOf('(') >= 0)
-      BarePair.findAllMatchIn(text).foreach { m =>
-        val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
-        if (inRange(lat, lon)) out += Mention(lat, lon, "pair", "")
-      }
-    // Gazetteer rule: lowercase, tokens = maximal [a-z] runs, match every
-    // 1/2/3-gram phrase against the gazetteer. Implemented as a
-    // first-word-indexed scan (one hash lookup per token, suffix tokens
-    // compared in place) — emits the IDENTICAL match multiset and order
-    // (all 1-grams by position, then 2-grams, then 3-grams) as the naive
-    // per-n phrase loop, without building ~2·|toks| phrase strings per
-    // page (the old loop was ~70% of parse cost — the pipeline's hottest
-    // kernel).
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z]+").filter(_.nonEmpty)
-    var hits1: scala.collection.mutable.ArrayBuffer[Mention] = null
-    var hits2: scala.collection.mutable.ArrayBuffer[Mention] = null
-    var hits3: scala.collection.mutable.ArrayBuffer[Mention] = null
+    val len = text.length
+    val ms = matchers.get()
+    val labeled = new Encoding(ms(0), "labeled", text)
+    val geoUri = new Encoding(ms(1), "geouri", text)
+    val pair = new Encoding(ms(2), "pair", text)
+    // Candidate starts are the occurrences of each pattern's literal
+    // prefix: `lat` and `geo:` ASCII-case-insensitively (Java's (?i) folds
+    // ASCII only), `(` exactly. No match can start anywhere else.
+    var seen = 0 // OR of every char: >= 0x80 iff the text is not ASCII
     var i = 0
-    while (i < toks.length) {
-      val cands = Gazetteer.byFirstWord.getOrElse(toks(i), null)
-      if (cands != null) {
-        var c = 0
-        while (c < cands.length) {
-          val e = cands(c)
-          val n = e.toks.length
-          if (i + n <= toks.length) {
-            var j = 1
-            var ok = true
-            while (ok && j < n) { ok = toks(i + j) == e.toks(j); j += 1 }
-            if (ok) {
-              val m = Mention(e.lat, e.lon, "gazetteer", e.name)
-              n match {
-                case 1 =>
-                  if (hits1 == null) hits1 = scala.collection.mutable.ArrayBuffer.empty
-                  hits1 += m
-                case 2 =>
-                  if (hits2 == null) hits2 = scala.collection.mutable.ArrayBuffer.empty
-                  hits2 += m
-                case _ =>
-                  if (hits3 == null) hits3 = scala.collection.mutable.ArrayBuffer.empty
-                  hits3 += m
-              }
-            }
-          }
-          c += 1
-        }
-      }
+    while (i < len) {
+      val c = text.charAt(i)
+      seen |= c
+      val f = c | 0x20
+      if (f == 'l') {
+        if (i + 2 < len && (text.charAt(i + 1) | 0x20) == 'a' &&
+            (text.charAt(i + 2) | 0x20) == 't') labeled.tryAt(i)
+      } else if (f == 'g') {
+        if (i + 3 < len && (text.charAt(i + 1) | 0x20) == 'e' &&
+            (text.charAt(i + 2) | 0x20) == 'o' && text.charAt(i + 3) == ':') geoUri.tryAt(i)
+      } else if (c == '(') pair.tryAt(i)
       i += 1
     }
-    if (hits1 != null) out ++= hits1
-    if (hits2 != null) out ++= hits2
-    if (hits3 != null) out ++= hits3
-    out.toSeq
+    // Gazetteer rule: lowercase with Locale.ROOT, tokens = maximal [a-z]
+    // runs, match every 1/2/3-gram phrase against the gazetteer. ASCII text
+    // lowers char by char, so its runs are matched in place. Other text is
+    // lowered first: ROOT lowering can change the length (İ → i + U+0307)
+    // and maps some non-ASCII letters to ASCII ones (Kelvin sign → k).
+    val s = if (seen >= 0x80) text.toLowerCase(Locale.ROOT) else text
+    val hits = gazetteerHits(s)
+    val nHits = if (hits == null) 0 else hits.length
+    val n = labeled.size + geoUri.size + pair.size + nHits
+    if (n == 0) return Nil
+    val out = new Array[Mention](n)
+    var k = labeled.copyTo(out, 0)
+    k = geoUri.copyTo(out, k)
+    k = pair.copyTo(out, k)
+    var w = 1
+    while (w <= MaxWords) {
+      var h = 0
+      while (h < nHits) {
+        if (words(hits(h)).length == w) { out(k) = nameMention(hits(h)); k += 1 }
+        h += 1
+      }
+      w += 1
+    }
+    ArraySeq.unsafeWrapArray(out)
   }
 }
 
-/** Tiny built-in gazetteer: 64 world cities (public coordinates, ~2 dp).
+/** Tiny built-in gazetteer: 69 world cities (public coordinates, ~2 dp).
   * Names are lowercase; multi-word names match as substrings with word
   * boundaries.
   */
@@ -145,16 +246,4 @@ object Gazetteer {
     ("bogota", 4.71, -74.07), ("lima", -12.05, -77.04), ("santiago", -33.45, -70.67),
     ("buenos aires", -34.60, -58.38), ("sao paulo", -23.55, -46.63), ("rio de janeiro", -22.91, -43.17)
   )
-
-  /** name → (lat, lon) */
-  val byName: Map[String, (Double, Double)] =
-    entries.map { case (n, la, lo) => n -> (la, lo) }.toMap
-
-  final case class Entry(toks: Array[String], lat: Double, lon: Double,
-                         name: String)
-
-  /** first word → entries starting with it (the scan index). */
-  val byFirstWord: Map[String, Array[Entry]] =
-    entries.map { case (n, la, lo) => Entry(n.split(' '), la, lo, n) }
-      .groupBy(_.toks(0))
 }

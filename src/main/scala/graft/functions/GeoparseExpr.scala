@@ -10,11 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** geoparse_mentions(text) → array<struct<lat,lon,kind,name>>.
   *
-  * One compiled pass per row wrapping the scalar reference parser
-  * (graft.core.Geoparse) — replaces 6 regexp passes + an interpreted
-  * higher-order-function n-gram explode + broadcast join. DataFrame
-  * results are parity-equal to Geoparse.parse BY CONSTRUCTION (same
-  * function), which is the invariant the pipeline tests pin.
+  * One compiled pass per row wrapping the scalar parser
+  * (graft.core.Geoparse). DataFrame results are parity-equal to
+  * Geoparse.parse BY CONSTRUCTION (same function), which is the invariant
+  * the pipeline tests pin.
   */
 object GeoparseExprHelper {
   val mentionType: StructType = StructType(Seq(
@@ -23,13 +22,28 @@ object GeoparseExprHelper {
     StructField("kind", StringType, nullable = false),
     StructField("name", StringType, nullable = false)))
 
+  /** Every kind tag and gazetteer name, encoded once. */
+  private val utf8: java.util.HashMap[String, UTF8String] = {
+    val m = new java.util.HashMap[String, UTF8String]
+    (Seq("labeled", "geouri", "pair", "gazetteer", "") ++
+        graft.core.Gazetteer.entries.map(_._1))
+      .foreach(s => m.put(s, UTF8String.fromString(s)))
+    m
+  }
+
+  private def utf8Of(s: String): UTF8String = {
+    val u = utf8.get(s)
+    if (u != null) u else UTF8String.fromString(s)
+  }
+
   def mentions(text: UTF8String): ArrayData = {
     val ms = graft.core.Geoparse.parse(text.toString)
     val rows = new Array[Any](ms.length)
+    val it = ms.iterator
     var i = 0
-    ms.foreach { m =>
-      rows(i) = InternalRow(m.lat, m.lon,
-        UTF8String.fromString(m.kind), UTF8String.fromString(m.name))
+    while (it.hasNext) {
+      val m = it.next()
+      rows(i) = InternalRow(m.lat, m.lon, utf8Of(m.kind), utf8Of(m.name))
       i += 1
     }
     new GenericArrayData(rows)

@@ -275,6 +275,40 @@ class GeoparseSpec extends AnyFunSuite {
   test("out-of-range coordinates rejected") {
     assert(Geoparse.parse("lat: 91.0001, lon: 10.0001").isEmpty)
   }
+
+  private def names(text: String): Seq[String] =
+    Geoparse.parse(text).filter(_.kind == "gazetteer").map(_.name)
+
+  test("gazetteer names match in any ASCII case") {
+    assert(names("NEW YORK and PARIS") === Seq("paris", "new york"))
+  }
+
+  test("labeled pattern has no leading word boundary") {
+    assert(Geoparse.parse("xlat: 1.5, lon: 2.5") === Seq(Geoparse.Mention(1.5, 2.5, "labeled", "")))
+  }
+
+  test("names match on the Locale.ROOT lowering of non-ASCII text") {
+    // İ lowers to i + U+0307, which splits the token
+    assert(names("\u0130stanbul") === Nil)
+    // the Kelvin sign lowers to k
+    assert(names("\u212Aarachi") === Seq("karachi"))
+  }
+
+  test("adjacent geo URIs are two mentions") {
+    assert(Geoparse.parse("geo:1,2geo:3,4").map(m => (m.lat, m.lon, m.kind)) ===
+      Seq((1.0, 2.0, "geouri"), (3.0, 4.0, "geouri")))
+  }
+
+  test("output order: labeled, geo URI, pair, then 1-, 2- and 3-word names") {
+    val ms = Geoparse.parse("rio de janeiro, new york, tokyo; paris (10.123, 20.456) " +
+      "geo:3,4 lat: 1.5, lon: 2.5 and lat=5.5;lng=6.5 then lima")
+    assert(ms.map(m => (m.kind, m.name)) === Seq(
+      ("labeled", ""), ("labeled", ""), ("geouri", ""), ("pair", ""),
+      ("gazetteer", "tokyo"), ("gazetteer", "paris"), ("gazetteer", "lima"),
+      ("gazetteer", "new york"), ("gazetteer", "rio de janeiro")))
+    assert(ms.take(4).map(m => (m.lat, m.lon)) ===
+      Seq((1.5, 2.5), (5.5, 6.5), (3.0, 4.0), (10.123, 20.456)))
+  }
 }
 
 class UnicodeNormSpec extends AnyFunSuite {

@@ -84,7 +84,7 @@ object Bench {
     val pages = spark.read.parquet(pagesPath)
     val features = graft.operators.GeoPipeline.pagesToFeatures(spark, pages)
       .filter(org.apache.spark.sql.functions.col("lat").isNotNull)
-    // per-zoom assign, not buildTilesPyramid: measured A/B (Profile, 4
+    // per-zoom assign, not buildTilesPyramid: measured A/B (stage profile, 4
     // interleaved reps, same JVM) shows per-zoom 1.7 s vs pyramid 2.6 s
     // here — at 3 zooms / 200k pages the pyramid's extra rollup stages
     // cost more than the 3× base fan-out they remove. The crossover is

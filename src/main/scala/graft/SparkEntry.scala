@@ -108,6 +108,67 @@ object SparkEntry {
       |  CAST(doc_id % 8 AS DOUBLE) * 20.0 - 70.0 + lat * CAST(0.05 AS DOUBLE) AS lat
       |FROM ($derivedPointsSql)""".stripMargin
 
+  /** The 8-blob point cloud (doc_id, lon, lat) — the Column twin of
+    * [[blobPointsSql]]: genuinely clustered input for the DBSCAN-family
+    * queries (the quasi-uniform lattice percolates into one giant
+    * component at any eps).
+    */
+  private def blobPoints(s: SparkSession, dir: String): DataFrame =
+    derivedPoints(s, dir).select(col("doc_id"),
+      ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
+        + col("lon") * lit(0.05)).as("lon"),
+      ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
+        + col("lat") * lit(0.05)).as("lat"))
+
+  /** Per-cluster moments of `pts`(doc_id, lon, lat) under the q104-style
+    * grid-DBSCAN labels (noise excluded): n_pts and the sums sx, sx2, sy,
+    * sy2, sxy of per-row 1e-9-quantized longs, so the distributed sums
+    * are order-insensitive. The sums are exact `decimal(38,0)`: a long
+    * sum of lon² over a few hundred thousand points near ±180° would
+    * overflow, and decimal→double rounds correctly like long→double.
+    */
+  private[graft] def clusterMoments(pts: DataFrame): DataFrame = {
+    val labels = graft.operators.Dbscan.clusterGrid(pts, "doc_id",
+      epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
+      .filter(col("role") =!= "noise")
+      .select(col("doc_id"), col("cluster_id"))
+    def q9(c: Column) =
+      floor(c * lit(1e9) + lit(0.5)).cast("long").cast("decimal(38,0)")
+    pts.join(labels, Seq("doc_id"))
+      .select(col("cluster_id"),
+        q9(col("lon")).as("xl"), q9(col("lon") * col("lon")).as("xl2"),
+        q9(col("lat")).as("yl"), q9(col("lat") * col("lat")).as("yl2"),
+        q9(col("lon") * col("lat")).as("xyl"))
+      .groupBy("cluster_id")
+      .agg(count(lit(1)).as("n_pts"),
+        sum(col("xl")).as("sx"), sum(col("xl2")).as("sx2"),
+        sum(col("yl")).as("sy"), sum(col("yl2")).as("sy2"),
+        sum(col("xyl")).as("sxy"))
+  }
+
+  /** A [[clusterMoments]] sum as a per-point mean in degrees (or
+    * degrees²).
+    */
+  private def momentMean(sum: Column): Column =
+    sum.cast("double") / lit(1e9) / col("n_pts")
+
+  /** Grid-DBSCAN hulls of the 8-blob input (q106), also the hull side of
+    * the q107/q111 overlays.
+    */
+  private def blobGridHulls(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Dbscan.clusterGridHulls(blobPoints(s, dir), "doc_id",
+      epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
+
+  /** The oracle triangles as overlay-join rings (b_id, bx, by); the
+    * registry stores closed 4-entry rings, the join takes them unclosed.
+    */
+  private def adminTriangles(s: SparkSession): DataFrame = {
+    import s.implicits._
+    graft.sources.PolyRegistry.oracleTriangles
+      .map(p => (p.adminId, p.xs.take(3), p.ys.take(3)))
+      .toDF("b_id", "bx", "by")
+  }
+
   /** Zigzag tracks from `events`: per-user consecutive segments whose
     * coordinates are pure INTEGER triangle-waves (sin() is not
     * oracle-portable — libm sin differs between engines in the last
@@ -164,20 +225,19 @@ object SparkEntry {
   private def overlayTriangles(pts: DataFrame): (DataFrame, DataFrame) = {
     val a = pts.filter(col("doc_id") % 2 === 0).select(
       col("doc_id").as("a_id"),
-      col("lon").as("ax1"), col("lat").as("ay1"),
-      (col("lon") + (lit(2.0) + (col("doc_id") % 5).cast("double"))).as("ax2"),
-      col("lat").as("ay2"),
-      col("lon").as("ax3"),
-      (col("lat") + (lit(2.0) + (col("doc_id") % 7).cast("double"))).as("ay3"))
+      array(col("lon"),
+        col("lon") + (lit(2.0) + (col("doc_id") % 5).cast("double")),
+        col("lon")).as("ax"),
+      array(col("lat"), col("lat"),
+        col("lat") + (lit(2.0) + (col("doc_id") % 7).cast("double"))).as("ay"))
     val b = pts.filter(col("doc_id") % 2 === 1).select(
       col("doc_id").as("b_id"),
-      (col("lon") + lit(1.0)).as("bx1"), (col("lat") + lit(1.0)).as("by1"),
-      (col("lon") + lit(1.0) +
-        (lit(2.0) + (col("doc_id") % 6).cast("double"))).as("bx2"),
-      (col("lat") + lit(1.0)).as("by2"),
-      (col("lon") + lit(1.0)).as("bx3"),
-      (col("lat") + lit(1.0) +
-        (lit(2.0) + (col("doc_id") % 4).cast("double"))).as("by3"))
+      array(col("lon") + lit(1.0),
+        col("lon") + lit(1.0) + (lit(2.0) + (col("doc_id") % 6).cast("double")),
+        col("lon") + lit(1.0)).as("bx"),
+      array(col("lat") + lit(1.0), col("lat") + lit(1.0),
+        col("lat") + lit(1.0) +
+          (lit(2.0) + (col("doc_id") % 4).cast("double"))).as("by"))
     (a, b)
   }
 
@@ -205,23 +265,20 @@ object SparkEntry {
     val h7 = lit(2.0) + (col("doc_id") % 7).cast("double")
     val a = pts.filter(col("doc_id") % 2 === 0).select(
       col("doc_id").as("a_id"),
-      col("lon").as("ax1"), col("lat").as("ay1"),
-      (col("lon") + w5).as("ax2"), col("lat").as("ay2"),
-      (col("lon") + w5).as("ax3"), (col("lat") + h7).as("ay3"),
-      (col("lon") + lit(1.0)).as("ax4"), (col("lat") + h7).as("ay4"),
-      col("lon").as("ax5"), (col("lat") + h7 - lit(1.0)).as("ay5"))
+      array(col("lon"), col("lon") + w5, col("lon") + w5,
+        col("lon") + lit(1.0), col("lon")).as("ax"),
+      array(col("lat"), col("lat"), col("lat") + h7, col("lat") + h7,
+        col("lat") + h7 - lit(1.0)).as("ay"))
     val w6 = lit(2.0) + (col("doc_id") % 6).cast("double")
     val h4 = lit(2.0) + (col("doc_id") % 4).cast("double")
     val bx = col("lon") + lit(1.0)
     val by = col("lat") + lit(1.0)
     val b = pts.filter(col("doc_id") % 2 === 1).select(
       col("doc_id").as("b_id"),
-      bx.as("bx1"), by.as("by1"),
-      (bx + w6 - lit(1.0)).as("bx2"), by.as("by2"),
-      (bx + w6).as("bx3"), (by + lit(1.0)).as("by3"),
-      (bx + w6).as("bx4"), (by + h4).as("by4"),
-      (bx + lit(1.0)).as("bx5"), (by + h4).as("by5"),
-      bx.as("bx6"), (by + h4 - lit(1.0)).as("by6"))
+      array(bx, bx + w6 - lit(1.0), bx + w6, bx + w6, bx + lit(1.0), bx)
+        .as("bx"),
+      array(by, by, by + lit(1.0), by + h4, by + h4, by + h4 - lit(1.0))
+        .as("by"))
     (a, b)
   }
 
@@ -264,11 +321,6 @@ object SparkEntry {
       }.mkString(" OR ")
     s"NOT ((${sep(a, b)}) OR (${sep(b, a)}))"
   }
-
-  /** The n = 3 instance of [[convexSatSql]] (kept as the q98 twin). */
-  private def triSatSql(a: Seq[(String, String)],
-                        b: Seq[(String, String)]): String =
-    convexSatSql(a, b)
 
   /** Flagship: end-to-end geoparse → cell encode → tile pipeline on a
     * small synthetic page table.
@@ -1131,33 +1183,14 @@ object SparkEntry {
     //      longs, so the distributed sums are order-insensitive and the
     //      final doubles evaluate identically in both engines ----
     "q117_cluster_dispersion" -> ((s, dir) => {
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      val labels = graft.operators.Dbscan.clusterGrid(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
-        .filter(col("role") =!= "noise")
-        .select(col("doc_id"), col("cluster_id"))
-      def q9(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e9) + lit(0.5)).cast("long")
-      val agg = pts.join(labels, Seq("doc_id"))
-        .select(col("cluster_id"),
-          q9(col("lon")).as("xl"), q9(col("lon") * col("lon")).as("xl2"),
-          q9(col("lat")).as("yl"), q9(col("lat") * col("lat")).as("yl2"))
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_pts"),
-          sum(col("xl")).as("sx"), sum(col("xl2")).as("sx2"),
-          sum(col("yl")).as("sy"), sum(col("yl2")).as("sy2"))
-      def m(s1: org.apache.spark.sql.Column) =
-        s1.cast("double") / lit(1e9) / col("n_pts")
+      val agg = clusterMoments(blobPoints(s, dir))
+      val (mx, my) = (momentMean(col("sx")), momentMean(col("sy")))
       agg.select(col("cluster_id"), col("n_pts"),
-        round(m(col("sx")), 6).as("cen_lon"),
-        round(m(col("sy")), 6).as("cen_lat"),
+        round(mx, 6).as("cen_lon"),
+        round(my, 6).as("cen_lat"),
         round(sqrt(greatest(lit(0.0),
-          m(col("sx2")) - m(col("sx")) * m(col("sx")) +
-            (m(col("sy2")) - m(col("sy")) * m(col("sy"))))), 6)
+          momentMean(col("sx2")) - mx * mx +
+            (momentMean(col("sy2")) - my * my))), 6)
           .as("std_dist"))
     }),
     // ---- cluster anisotropy (standard deviational ellipse semi-axes):
@@ -1166,32 +1199,11 @@ object SparkEntry {
     //      full ellipse-axis formula ships in the oracle (orientation
     //      would need atan2, which is libm-dependent — omitted) ----
     "q119_cluster_anisotropy" -> ((s, dir) => {
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      val labels = graft.operators.Dbscan.clusterGrid(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
-        .filter(col("role") =!= "noise")
-        .select(col("doc_id"), col("cluster_id"))
-      def q9(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e9) + lit(0.5)).cast("long")
-      val agg = pts.join(labels, Seq("doc_id"))
-        .select(col("cluster_id"),
-          q9(col("lon")).as("xl"), q9(col("lon") * col("lon")).as("xl2"),
-          q9(col("lat")).as("yl"), q9(col("lat") * col("lat")).as("yl2"),
-          q9(col("lon") * col("lat")).as("xyl"))
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_pts"),
-          sum(col("xl")).as("sx"), sum(col("xl2")).as("sx2"),
-          sum(col("yl")).as("sy"), sum(col("yl2")).as("sy2"),
-          sum(col("xyl")).as("sxy"))
-      def m(s1: org.apache.spark.sql.Column) =
-        s1.cast("double") / lit(1e9) / col("n_pts")
-      val vx = m(col("sx2")) - m(col("sx")) * m(col("sx"))
-      val vy = m(col("sy2")) - m(col("sy")) * m(col("sy"))
-      val cv = m(col("sxy")) - m(col("sx")) * m(col("sy"))
+      val agg = clusterMoments(blobPoints(s, dir))
+      val (mx, my) = (momentMean(col("sx")), momentMean(col("sy")))
+      val vx = momentMean(col("sx2")) - mx * mx
+      val vy = momentMean(col("sy2")) - my * my
+      val cv = momentMean(col("sxy")) - mx * my
       val half = (vx + vy) / lit(2.0)
       val disc = sqrt((vx - vy) / lit(2.0) * ((vx - vy) / lit(2.0)) + cv * cv)
       agg.select(col("cluster_id"), col("n_pts"),
@@ -1203,62 +1215,31 @@ object SparkEntry {
     //      border members) — registry-sized output regardless of member
     //      count; the polygon layer a tile map draws over the density ----
     "q103_cluster_hulls" -> ((s, dir) => {
-      // 8 anchored blobs (anchor = doc_id % 8, derived point as jitter):
-      // genuinely clustered input — the quasi-uniform lattice percolates
-      // into one giant component at any eps, which makes a 1-polygon demo
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      graft.operators.Dbscan.clusterHulls(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, res = 1)
+      graft.operators.Dbscan.clusterHulls(blobPoints(s, dir), "doc_id",
+          epsDeg = 5.0, minPts = 8, res = 1)
+        .select("cluster_id", "n_pts", "n_hull", "area", "wkt")
     }),
     // ---- hot-region polygons on the SCALE path: grid (weighted)
     //      DBSCAN labels + full-point-resolution hulls — the product
     //      default of Main --hulls, over the same 8-blob input as q103
     //      (cellDeg ≪ ε keeps cell-resolution labels near-exact) ----
     "q106_grid_hulls" -> ((s, dir) => {
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      graft.operators.Dbscan.clusterGridHulls(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
+      blobGridHulls(s, dir)
+        .select("cluster_id", "n_pts", "n_hull", "area", "wkt")
     }),
     // ---- geometry the engine itself PRODUCES joined against the admin
     //      registry: grid-DBSCAN hull polygons × the oracle triangles
-    //      through the convex overlay join — hull WKT parsed to the
-    //      padded fixed-width layout by pure column arithmetic ----
+    //      through the convex overlay join — the hull vertex arrays go
+    //      straight to the SAT kernel ----
     "q107_hull_admin_overlay" -> ((s, dir) => {
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      // cluster-count-sized barriers: wktConvexCols inlines its WKT
-      // parse into all 48 coordinate columns and the 24-gon SAT
-      // references each column ~27× — without the checkpoint the
-      // collapsed projection is a multiplicatively-exploded expression
-      // tree whose codegen COMPILE dominates the query (plan text was
-      // 176 KB; seconds of driver-side janino for an 8-row join)
-      val hulls = graft.operators.Dbscan.clusterGridHulls(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
-        .localCheckpoint(true)
-      val a = graft.operators.Overlay.wktConvexCols(
-        hulls.select(col("cluster_id").as("a_id"), col("wkt")),
-        "a_id", "wkt", maxN = 24, prefix = "a")
-        .localCheckpoint(true)
-      import s.implicits._
-      val b = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        (p.adminId, p.xs(0), p.ys(0), p.xs(1), p.ys(1), p.xs(2), p.ys(2))
-      }.toDF("b_id", "bx1", "by1", "bx2", "by2", "bx3", "by3")
-      // validate=false on purpose: hull WKT re-quantizes vertices to
-      // 6 dp, which can turn a strict-but-tiny convex turn collinear or
+      val a = blobGridHulls(s, dir).filter(col("n_hull") >= 3)
+        .select(col("cluster_id").as("a_id"), col("xs").as("ax"),
+          col("ys").as("ay"))
+      // validate=false on purpose: hull vertices are quantized to 6 dp,
+      // which can turn a strict-but-tiny convex turn collinear or
       // faintly negative; the SAT stays a deterministic closed-
       // intersection test on the perturbed ring
-      graft.operators.Overlay.convexIntersectsJoin(a, b, nA = 24, nB = 3,
+      graft.operators.Overlay.convexIntersectsJoin(a, adminTriangles(s),
           cellDeg = 45.0, validate = false)
         .select(col("a_id").as("cluster_id"), col("b_id").as("admin_id"))
     }),
@@ -1269,29 +1250,10 @@ object SparkEntry {
     //      doubles quantized to a 1e-9 integer grid before the sum so
     //      the aggregate is order-insensitive (the q88 discipline) ----
     "q111_zonal_overlap" -> ((s, dir) => {
-      val pts = derivedPoints(s, dir).select(col("doc_id"),
-        ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-          + col("lon") * lit(0.05)).as("lon"),
-        ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-          + col("lat") * lit(0.05)).as("lat"))
-      // hulls feed TWO consumers (the parsed vertex layout and the
-      // n_pts/area stats join) — the checkpoint stops the whole
-      // label+hull chain from evaluating twice, and the barrier after
-      // the parse stops the q107-style expression blowup (see q107)
-      val hulls = graft.operators.Dbscan.clusterGridHulls(pts, "doc_id",
-        epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
-        .localCheckpoint(true)
-      val a = graft.operators.Overlay.wktConvexCols(
-        hulls.select(col("cluster_id").as("a_id"), col("wkt")),
-        "a_id", "wkt", maxN = 24, prefix = "a")
-        .join(hulls.select(col("cluster_id").as("a_id"), col("n_pts"),
-          col("area").as("hull_area")), Seq("a_id"))
-        .localCheckpoint(true)
-      import s.implicits._
-      val b = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        (p.adminId, p.xs(0), p.ys(0), p.xs(1), p.ys(1), p.xs(2), p.ys(2))
-      }.toDF("b_id", "bx1", "by1", "bx2", "by2", "bx3", "by3")
-      graft.operators.Overlay.clipAreaJoin(a, b, nA = 24, nB = 3,
+      val a = blobGridHulls(s, dir).filter(col("n_hull") >= 3)
+        .select(col("cluster_id").as("a_id"), col("xs").as("ax"),
+          col("ys").as("ay"), col("n_pts"), col("area").as("hull_area"))
+      graft.operators.Overlay.clipAreaJoin(a, adminTriangles(s),
           cellDeg = 45.0, validate = false)
         .select(col("b_id").as("admin_id"),
           floor(col("area") * lit(1e9) + lit(0.5)).cast("long").as("ov_e9"),
@@ -1470,18 +1432,17 @@ object SparkEntry {
     //      intersects(a,b) would plan as a nested-loop cartesian ----
     "q98_tri_overlay" -> ((s, dir) => {
       val (a, b) = overlayTriangles(derivedPoints(s, dir))
-      graft.operators.Overlay.triangleIntersectsJoin(a, b, cellDeg = 8.0)
+      graft.operators.Overlay.convexIntersectsJoin(a, b, cellDeg = 8.0,
+          validate = false)
         .select(col("a_id"), col("b_id"))
     }),
     // ---- convex n-gon overlay (intersects join): pentagons × hexagons
     //      through the SAME bbox-cover + reference-point-dedup + SAT
     //      machinery as q98, with the interior side taken from the
-    //      orientation SUM (the generalization that also makes padded
-    //      fixed-width vertex layouts safe); convexity guard on ----
+    //      orientation SUM; convexity guard on ----
     "q105_convex_overlay" -> ((s, dir) => {
       val (a, b) = overlayPolygons(derivedPoints(s, dir))
-      graft.operators.Overlay.convexIntersectsJoin(a, b, nA = 5, nB = 6,
-          cellDeg = 8.0)
+      graft.operators.Overlay.convexIntersectsJoin(a, b, cellDeg = 8.0)
         .select(col("a_id"), col("b_id"))
     }),
     // ---- overlay as a MEASURE: q105's intersecting pairs with their
@@ -1490,8 +1451,7 @@ object SparkEntry {
     //      not SQL-derivable — real verification in ConvexClipSpec ----
     "q110_clip_area" -> ((s, dir) => {
       val (a, b) = overlayPolygons(derivedPoints(s, dir))
-      graft.operators.Overlay.clipAreaJoin(a, b, nA = 5, nB = 6,
-          cellDeg = 8.0)
+      graft.operators.Overlay.clipAreaJoin(a, b, cellDeg = 8.0)
         .select(col("a_id"), col("b_id"), round(col("area"), 6).as("area"))
     }),
     // ---- site-level boilerplate removal (RefinedWeb's repeated-line
@@ -2980,7 +2940,7 @@ object SparkEntry {
         |a AS MATERIALIZED ($overlayTrianglesSqlA),
         |b AS MATERIALIZED ($overlayTrianglesSqlB)
         |SELECT a_id, b_id FROM a CROSS JOIN b
-        |WHERE ${triSatSql(av, bv)}""".stripMargin
+        |WHERE ${convexSatSql(av, bv)}""".stripMargin
     },
     "q105_convex_overlay" -> {
       val av = (1 to 5).map(i => (s"ax$i", s"ay$i"))

@@ -8,8 +8,7 @@ package graft.core
   * Pure deterministic double arithmetic in a fixed evaluation order, so
   * the result is bit-stable across runs and partitionings. Closed
   * semantics: rings touching at a point or edge intersect with area 0.
-  * Input rings may be CW or CCW, may repeat vertices (the padded
-  * fixed-width layout of Overlay.convexIntersectsJoin), and may carry
+  * Input rings may be CW or CCW, may repeat vertices and may carry
   * collinear runs; both rings must be convex — the caller's contract,
   * guarded upstream by Overlay.isConvex.
   *
@@ -58,7 +57,7 @@ object ConvexClip {
                else (if (i0 == 0) nb - 1 else i0 - 1)
       val x1 = bx(i0); val y1 = by(i0)
       val x2 = bx(i1); val y2 = by(i1)
-      if (x1 != x2 || y1 != y2) { // skip padded (repeated-vertex) edges
+      if (x1 != x2 || y1 != y2) { // skip repeated-vertex edges
         var m = 0
         var i = 0
         while (i < n) {

@@ -17,10 +17,10 @@ package graft.core
   * of the other strictly on the opposite side from the ring's own
   * interior, where the interior side is the sign of the left-associated
   * SUM of orientations over the ring's own vertices (for triangles, the
-  * classic third-vertex test). Padded (repeated) vertices form
-  * degenerate edges whose sum is 0 and claim no separation. Degenerate
-  * (zero-area) rings never separate anything; callers supply convex,
-  * non-degenerate rings (`Overlay.isConvex` guards).
+  * classic third-vertex test). Repeated vertices form degenerate
+  * edges whose sum is 0 and claim no separation. Degenerate (zero-area)
+  * rings never separate anything; callers supply convex, non-degenerate
+  * rings (`Overlay.isConvex` guards).
   */
 object ConvexSat {
   @inline private def orient(px: Double, py: Double, qx: Double, qy: Double,

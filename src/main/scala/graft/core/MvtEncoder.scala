@@ -214,7 +214,7 @@ object MvtEncoder {
     * generic path's per-feature allocation: no Feature/TagValue objects,
     * no boxed geometry buffers, two scratch ByteBufs reused across the
     * whole tile. This stage is the single largest pipeline cost (the
-    * Profile split: MVT encode ≈ 2× the top-cap aggregation), so the
+    * stage split: MVT encode ≈ 2× the top-cap aggregation), so the
     * constant factor here is headline throughput.
     */
   def encodePointTile(layerName: String,

@@ -124,26 +124,69 @@ case class RingStatsExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Ring arguments of [[ClipAreaExpr]] and [[ConvexSatExpr]]: a ring
+  * array with a null or NaN element reads as null, so the expression
+  * yields null instead of reading a null slot as 0.0 or letting NaN
+  * (which fails every comparison) make every SAT pair intersect.
+  */
+object RingArgs {
+  import org.apache.spark.sql.catalyst.util.ArrayData
+
+  def doubles(a: ArrayData): Array[Double] = {
+    val n = a.numElements()
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return null
+      val v = a.getDouble(i)
+      if (java.lang.Double.isNaN(v)) return null
+      out(i) = v
+      i += 1
+    }
+    out
+  }
+
+  /** Interpreted path: `kernel` over the four rings, null if any is. */
+  def eval(ax: Any, ay: Any, bx: Any, by: Any)(
+      kernel: (Array[Double], Array[Double], Array[Double], Array[Double]) => Any): Any = {
+    val rs = Array(ax, ay, bx, by).map(a => doubles(a.asInstanceOf[ArrayData]))
+    if (rs.contains(null)) null else kernel(rs(0), rs(1), rs(2), rs(3))
+  }
+
+  /** Generated path: the static `kernel` over the four rings, null if
+    * any is.
+    */
+  def genCode(ctx: CodegenContext, ev: ExprCode, kernel: String,
+              args: Seq[String]): String = {
+    val rs = args.map(_ => ctx.freshName("ring"))
+    val reads = rs.zip(args).map { case (r, a) =>
+      s"double[] $r = graft.functions.RingArgs.doubles($a);" }
+    s"""${reads.mkString("\n")}
+       |if (${rs.map(_ + " == null").mkString(" || ")}) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = $kernel(${rs.mkString(", ")});
+       |}""".stripMargin
+  }
+}
+
 /** clip_area(axs, ays, bxs, bys) → Double — intersection area of two
   * convex rings (Sutherland–Hodgman clip + shoelace, core/ConvexClip).
   * Stays in whole-stage codegen via a static kernel call, like every
-  * other geometry kernel here.
+  * other geometry kernel here. Null or NaN input gives null
+  * ([[RingArgs]]).
   */
 case class ClipAreaExpr(first: Expression, second: Expression,
                         third: Expression, fourth: Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable || fourth.nullable
+  override def nullable: Boolean = true
   override def prettyName: String = "clip_area"
-  private def arr(a: Any): Array[Double] =
-    a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
   override protected def nullSafeEval(ax: Any, ay: Any, bx: Any, by: Any): Any =
-    graft.core.ConvexClip.intersectionArea(arr(ax), arr(ay), arr(bx), arr(by))
+    RingArgs.eval(ax, ay, bx, by)(graft.core.ConvexClip.intersectionArea)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ax, ay, bx, by) =>
-      s"graft.core.ConvexClip.intersectionArea($ax.toDoubleArray(), " +
-        s"$ay.toDoubleArray(), $bx.toDoubleArray(), $by.toDoubleArray())")
+    nullSafeCodeGen(ctx, ev, (ax, ay, bx, by) => RingArgs.genCode(ctx, ev,
+      "graft.core.ConvexClip.intersectionArea", Seq(ax, ay, bx, by)))
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
     copy(f, s, t, q)
@@ -152,23 +195,19 @@ case class ClipAreaExpr(first: Expression, second: Expression,
 /** convex_sat(axs, ays, bxs, bys) → Boolean — exact closed intersection
   * of two convex rings (separating-axis test, core/ConvexSat): a
   * constant-size codegen footprint where a Column-tree SAT grows O(n²)
-  * nodes with ring width.
+  * nodes with ring width. Null or NaN input gives null ([[RingArgs]]).
   */
 case class ConvexSatExpr(first: Expression, second: Expression,
                          third: Expression, fourth: Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable || fourth.nullable
+  override def nullable: Boolean = true
   override def prettyName: String = "convex_sat"
-  private def arr(a: Any): Array[Double] =
-    a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
   override protected def nullSafeEval(ax: Any, ay: Any, bx: Any, by: Any): Any =
-    graft.core.ConvexSat.intersects(arr(ax), arr(ay), arr(bx), arr(by))
+    RingArgs.eval(ax, ay, bx, by)(graft.core.ConvexSat.intersects)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ax, ay, bx, by) =>
-      s"graft.core.ConvexSat.intersects($ax.toDoubleArray(), " +
-        s"$ay.toDoubleArray(), $bx.toDoubleArray(), $by.toDoubleArray())")
+    nullSafeCodeGen(ctx, ev, (ax, ay, bx, by) => RingArgs.genCode(ctx, ev,
+      "graft.core.ConvexSat.intersects", Seq(ax, ay, bx, by)))
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
     copy(f, s, t, q)

@@ -256,8 +256,10 @@ object Dbscan {
     * percolated planetary cluster (10⁸+ members) reduces to per-cell
     * vertex sets bounded by each cell's hull size, and stage 2 sees
     * only those vertices. Returns (cluster_id, n_pts, n_hull, area,
-    * wkt) — wkt a closed CCW `POLYGON ((…))` at 6 dp (LINESTRING for
-    * degenerate ≤2-point hulls), area the shoelace value rounded 6 dp.
+    * wkt, xs, ys) — wkt a closed CCW `POLYGON ((…))` at 6 dp (LINESTRING
+    * for degenerate ≤2-point hulls), area the shoelace value rounded
+    * 6 dp, and xs/ys the same 6-dp vertices as unclosed `array<double>`
+    * rings, the input shape of the overlay joins.
     */
   def clusterHulls(points: DataFrame, idCol: String, epsDeg: Double,
                    minPts: Int, res: Int = 1,
@@ -318,17 +320,19 @@ object Dbscan {
         val vs = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
         it.foreach { case (_, c, h) => n += c; vs ++= h }
         val h = graft.core.ConvexHull.hull(vs.toArray)
-        def fmt(p: (Double, Double)): String =
-          String.format(java.util.Locale.ROOT, "%.6f %.6f",
-            p._1.asInstanceOf[AnyRef], p._2.asInstanceOf[AnyRef])
+        def fmt(v: Double): String =
+          String.format(java.util.Locale.ROOT, "%.6f", v.asInstanceOf[AnyRef])
+        val sx = h.map(p => fmt(p._1))
+        val sy = h.map(p => fmt(p._2))
+        val vts = sx.indices.map(i => s"${sx(i)} ${sy(i)}")
         val wkt =
-          if (h.length >= 3)
-            (h :+ h.head).map(fmt).mkString("POLYGON ((", ", ", "))")
-          else h.map(fmt).mkString("LINESTRING (", ", ", ")")
+          if (h.length >= 3) (vts :+ vts.head).mkString("POLYGON ((", ", ", "))")
+          else vts.mkString("LINESTRING (", ", ", ")")
         val area = BigDecimal.valueOf(graft.core.ConvexHull.area(h))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (cid, n, h.length.toLong, area, wkt)
+        (cid, n, h.length.toLong, area, wkt,
+          sx.map(java.lang.Double.parseDouble), sy.map(java.lang.Double.parseDouble))
       }
-      .toDF("cluster_id", "n_pts", "n_hull", "area", "wkt")
+      .toDF("cluster_id", "n_pts", "n_hull", "area", "wkt", "xs", "ys")
   }
 }

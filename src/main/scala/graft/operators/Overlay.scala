@@ -33,57 +33,57 @@ object Overlay {
                      rx: Column, ry: Column): Column =
     (qx - px) * (ry - py) - (qy - py) * (rx - px)
 
-  /** Convexity (and padding) guard for [[graft.core.ConvexSat]] input: true
-    * iff consecutive-edge turns never change sign (collinear and
-    * repeated — padded — vertices allowed). Non-convex rings would make
-    * the SAT silently under-report separations.
+  /** Convexity guard for [[graft.core.ConvexSat]] input over one ring's
+    * vertex arrays: true iff consecutive-edge turns never change sign
+    * (collinear and repeated vertices allowed). Non-convex rings would
+    * make the SAT silently under-report separations.
     */
-  def isConvex(vs: Seq[(Column, Column)]): Column = {
-    val n = vs.size
-    val turns = (0 until n).map { i =>
-      val (px, py) = vs(i)
-      val (qx, qy) = vs((i + 1) % n)
-      val (rx, ry) = vs((i + 2) % n)
-      orient(px, py, qx, qy, rx, ry)
-    }
-    !(turns.map(_ > 0).reduce(_ || _) && turns.map(_ < 0).reduce(_ || _))
-  }
+  def isConvex(xs: Column, ys: Column): Column =
+    // the outer lambda binds the ring once per row: higher-order
+    // functions run interpreted, and filter push-down inlines the xs/ys
+    // expressions, which the body would otherwise re-evaluate at every
+    // vertex access
+    !exists(array(struct(xs.as("x"), ys.as("y"))), r => {
+      val (rx, ry) = (r.getField("x"), r.getField("y"))
+      val n = size(rx)
+      def at(a: Column, i: Column, k: Int): Column = a.getItem((i + k) % n)
+      val turns = transform(rx, (_, i) =>
+        orient(at(rx, i, 0), at(ry, i, 0), at(rx, i, 1), at(ry, i, 1),
+          at(rx, i, 2), at(ry, i, 2)))
+      exists(turns, _ > 0) && exists(turns, _ < 0)
+    })
 
   /** All intersecting (a_id, b_id) convex-polygon pairs. Inputs:
-    * `as`(idA, ax1..ax{nA}, ay1..ay{nA}), `bs`(idB, bx1..bx{nB},
-    * by1..by{nB}) — fixed vertex widths per side; rings with fewer
-    * genuine vertices pad by REPEATING the last vertex (safe, see
-    * [[graft.core.ConvexSat]]). `cellDeg` sizes the candidate grid (≈ the
-    * median bbox extent). `validate` (default on) raises on a
-    * non-convex ring instead of silently under-reporting separations —
-    * one codegen'd predicate per row, negligible beside the SAT.
-    * Returns (idA, idB) exactly once per intersecting pair.
+    * `as`(a_id, ax, ay), `bs`(b_id, bx, by) — each ring one pair of
+    * `array<double>` vertex columns, unclosed, any width ≥ 3 per row.
+    * `cellDeg` sizes the candidate grid (≈ the median bbox extent).
+    * `validate` (default on) raises on a non-convex ring instead of
+    * silently under-reporting separations — one predicate per row,
+    * negligible beside the SAT. Returns (a_id, b_id) exactly once per
+    * intersecting pair.
     */
-  def convexIntersectsJoin(as: DataFrame, bs: DataFrame, nA: Int, nB: Int,
-                           cellDeg: Double,
+  def convexIntersectsJoin(as: DataFrame, bs: DataFrame, cellDeg: Double,
                            validate: Boolean = true): DataFrame = {
-    require(cellDeg > 0.0 && nA >= 3 && nB >= 3)
-    def verts(p: String, n: Int): Seq[(Column, Column)] =
-      (1 to n).map(i => (col(s"${p}x$i"), col(s"${p}y$i")))
-    def cover(df0: DataFrame, p: String, n: Int): DataFrame = {
+    require(cellDeg > 0.0)
+    def cover(df0: DataFrame, p: String): DataFrame = {
+      val xs = col(s"${p}x")
+      val ys = col(s"${p}y")
       // filter(assert_true(...).isNull) keeps every row (assert_true
       // yields NULL when the predicate holds) but cannot be pruned away
       // like an unused projected column would be
       val df =
         if (!validate) df0
-        else df0.filter(assert_true(isConvex(verts(p, n)),
+        else df0.filter(assert_true(isConvex(xs, ys),
           lit(s"non-convex $p-side ring: the SAT contract requires " +
-            "convex (optionally pad-repeated) vertices")).isNull)
-      val xs = (1 to n).map(i => col(s"${p}x$i"))
-      val ys = (1 to n).map(i => col(s"${p}y$i"))
+            "convex vertices")).isNull)
       df.withColumn(s"__${p}cx0",
-          floor(least(xs: _*) / lit(cellDeg)).cast("long"))
+          floor(array_min(xs) / lit(cellDeg)).cast("long"))
         .withColumn(s"__${p}cx1",
-          floor(greatest(xs: _*) / lit(cellDeg)).cast("long"))
+          floor(array_max(xs) / lit(cellDeg)).cast("long"))
         .withColumn(s"__${p}cy0",
-          floor(least(ys: _*) / lit(cellDeg)).cast("long"))
+          floor(array_min(ys) / lit(cellDeg)).cast("long"))
         .withColumn(s"__${p}cy1",
-          floor(greatest(ys: _*) / lit(cellDeg)).cast("long"))
+          floor(array_max(ys) / lit(cellDeg)).cast("long"))
         .withColumn("__cx",
           explode(sequence(col(s"__${p}cx0"), col(s"__${p}cx1"))))
         .withColumn("__cy",
@@ -91,21 +91,17 @@ object Overlay {
         .drop(s"__${p}cx1", s"__${p}cy1")
     }
     val dropCols = Seq("__cx", "__cy", "__acx0", "__acy0", "__bcx0", "__bcy0")
-    cover(as, "a", nA)
-      .join(cover(bs, "b", nB), Seq("__cx", "__cy"))
+    cover(as, "a")
+      .join(cover(bs, "b"), Seq("__cx", "__cy"))
       // reference-point dedup: evaluate the pair ONLY in the cell of the
       // max bbox-min corner (shared by both covers iff bboxes overlap)
       .filter(col("__cx") === greatest(col("__acx0"), col("__bcx0")) &&
         col("__cy") === greatest(col("__acy0"), col("__bcy0")))
       // the SAT runs as one array-kernel call ([[graft.core.ConvexSat]]):
       // a Column-tree SAT is O((nA+nB)²) orientation nodes, and at hull
-      // widths (n=24) its codegen COMPILE time dwarfed the 8-row join it
-      // guarded
+      // widths its codegen COMPILE time dwarfed the 8-row join it guarded
       .filter(graft.functions.geo.convex_sat(
-        array((1 to nA).map(i => col(s"ax$i")): _*),
-        array((1 to nA).map(i => col(s"ay$i")): _*),
-        array((1 to nB).map(i => col(s"bx$i")): _*),
-        array((1 to nB).map(i => col(s"by$i")): _*)))
+        col("ax"), col("ay"), col("bx"), col("by")))
       .drop(dropCols: _*)
   }
 
@@ -116,28 +112,14 @@ object Overlay {
     * kernel ([[graft.core.ConvexClip]]) evaluated ONCE per intersecting
     * pair, after the SAT filter has already discarded disjoint
     * candidates — the O(nA·nB) clip never runs on pairs the O(nA+nB)
-    * SAT rejects. Padded (repeated) vertices pass through both. Output:
-    * the joined row plus `area` (raw double; callers round for
-    * presentation).
+    * SAT rejects. Output: the joined row plus `area` (raw double;
+    * callers round for presentation).
     */
-  def clipAreaJoin(as: DataFrame, bs: DataFrame, nA: Int, nB: Int,
-                   cellDeg: Double, validate: Boolean = true): DataFrame = {
-    import graft.functions.geo
-    val axs = array((1 to nA).map(i => col(s"ax$i")): _*)
-    val ays = array((1 to nA).map(i => col(s"ay$i")): _*)
-    val bxs = array((1 to nB).map(i => col(s"bx$i")): _*)
-    val bys = array((1 to nB).map(i => col(s"by$i")): _*)
-    convexIntersectsJoin(as, bs, nA, nB, cellDeg, validate)
-      .withColumn("area", geo.clip_area(axs, ays, bxs, bys))
-  }
-
-  /** All intersecting (a_id, b_id) triangle pairs — the nA = nB = 3
-    * case of [[convexIntersectsJoin]] (validation off: the triangle
-    * callers predate the guard and 3-rings are convex by construction).
-    */
-  def triangleIntersectsJoin(as: DataFrame, bs: DataFrame,
-                             cellDeg: Double): DataFrame =
-    convexIntersectsJoin(as, bs, nA = 3, nB = 3, cellDeg, validate = false)
+  def clipAreaJoin(as: DataFrame, bs: DataFrame, cellDeg: Double,
+                   validate: Boolean = true): DataFrame =
+    convexIntersectsJoin(as, bs, cellDeg, validate)
+      .withColumn("area", graft.functions.geo.clip_area(
+        col("ax"), col("ay"), col("bx"), col("by")))
 
   /** SQL text of the PROPER segment-segment crossing predicate: the two
     * segments cross at exactly one interior point of each — the four
@@ -238,33 +220,5 @@ object Overlay {
     val dx = s"(($ax2) - ($ax1))"; val dy = s"(($ay2) - ($ay1))"
     s"(CASE WHEN $tmax > $tmin THEN ($tmax - $tmin) * " +
       s"sqrt($dx * $dx + $dy * $dy) ELSE CAST(0.0 AS DOUBLE) END)"
-  }
-
-  /** Bridge from this engine's hull WKT (`POLYGON ((x y, …, x0 y0))`,
-    * closing vertex repeated — [[Dbscan.clusterHulls]] output) to the
-    * fixed-width padded vertex layout of [[convexIntersectsJoin]]:
-    * columns `<prefix>x1..<prefix>x{maxN}` / `<prefix>y…`, short rings
-    * padded by repeating the last vertex. Pure column arithmetic — the
-    * parse stays codegen'd and distributed. Non-POLYGON rows
-    * (degenerate ≤2-point hulls) are dropped; a ring wider than `maxN`
-    * raises (fail-fast — silently truncating vertices would silently
-    * shrink the polygon).
-    */
-  def wktConvexCols(df: DataFrame, idCol: String, wktCol: String,
-                    maxN: Int, prefix: String): DataFrame = {
-    require(maxN >= 3)
-    val ring = expr(
-      s"slice(split(regexp_replace($wktCol, '^POLYGON \\\\(\\\\(|\\\\)\\\\)$$', ''), ', '), " +
-        s"1, size(split(regexp_replace($wktCol, '^POLYGON \\\\(\\\\(|\\\\)\\\\)$$', ''), ', ')) - 1)")
-    val base = df.filter(col(wktCol).startsWith("POLYGON"))
-      .withColumn("__ring", ring)
-      .filter(assert_true(size(col("__ring")) <= maxN,
-        lit(s"hull ring wider than maxN=$maxN vertices — raise maxN")).isNull)
-    val cols = col(idCol) +: (1 to maxN).flatMap { i =>
-      val v = split(element_at(col("__ring"), least(lit(i), size(col("__ring")))), " ")
-      Seq(v.getItem(0).cast("double").as(s"${prefix}x$i"),
-        v.getItem(1).cast("double").as(s"${prefix}y$i"))
-    }
-    base.select(cols: _*)
   }
 }

@@ -102,35 +102,23 @@ class ConvexClipSpec extends AnyFunSuite {
 
   test("q110 join path: area positive iff SAT-intersecting with interior overlap; codegen'd kernel") {
     import spark.implicits._
-    def toDf(prefix: String, n: Int, polys: Seq[(Long, Seq[(Double, Double)])]) = {
-      val rows = polys.map { case (id, vs) =>
-        val p = vs ++ Seq.fill(n - vs.size)(vs.last)
-        (id, p.flatMap(v => Seq(v._1, v._2)))
-      }
-      val cols = col("_1").as(s"${prefix}_id") +:
-        (1 to n).flatMap(i => Seq(
-          col("_2")(2 * (i - 1)).as(s"${prefix}x$i"),
-          col("_2")(2 * i - 1).as(s"${prefix}y$i")))
-      rows.toDF().select(cols: _*)
-    }
+    // one ring per row as (id, x array, y array), widths 3..7
+    def toDf(prefix: String, polys: Seq[(Long, Seq[(Double, Double)])]) =
+      polys.map { case (id, vs) => (id, vs.map(_._1), vs.map(_._2)) }
+        .toDF(s"${prefix}_id", s"${prefix}x", s"${prefix}y")
     val rnd = new scala.util.Random(11)
     val as = (0L until 60L).map(i => (i, randConvex(rnd)))
     val bs = (100L until 160L).map(i => (i, randConvex(rnd)))
-    val out = Overlay.clipAreaJoin(toDf("a", 8, as), toDf("b", 8, bs),
-      nA = 8, nB = 8, cellDeg = 3.0)
+    val out = Overlay.clipAreaJoin(toDf("a", as), toDf("b", bs),
+      cellDeg = 3.0)
       .select("a_id", "b_id", "area")
     val got = out.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // every SAT pair appears; area matches the serial kernel BIT-EXACTLY
-    // on the same padded rings the frame carries (padding adds exact-zero
-    // shoelace terms but changes the FP summation order, so the serial
-    // twin must pad identically)
-    def pad(vs: Seq[(Double, Double)], n: Int) =
-      vs ++ Seq.fill(n - vs.size)(vs.last)
+    // every joined pair's area matches the serial kernel BIT-EXACTLY on
+    // the same ragged-width rings the frame carries
     val aById = as.toMap; val bById = bs.toMap
     got.foreach { case ((ia, ib), v) =>
-      assert(v === area(pad(aById(ia), 8), pad(bById(ib), 8)),
-        s"pair ($ia,$ib)")
+      assert(v === area(aById(ia), bById(ib)), s"pair ($ia,$ib)")
     }
     assert(got.nonEmpty && got.values.exists(_ > 0))
     // the kernel stays in whole-stage codegen: the project evaluating

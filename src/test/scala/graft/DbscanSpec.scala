@@ -214,6 +214,68 @@ class DbscanSpec extends AnyFunSuite {
     }
   }
 
+  test("hull vertex arrays: POLYGON xs/ys are the WKT ring minus its closing vertex, bit for bit; LINESTRING hulls have n_hull < 3") {
+    import spark.implicits._
+    // q103-style blobs plus one collinear cluster (a 2-vertex hull)
+    val blobs = (0 until 400).map { i =>
+      val lon = (i * 17.000170000017) % 360.0 - 180.0
+      val lat = (i * 7.000070000007) % 170.0 - 85.0
+      (i.toLong, (i % 8) * 45.0 - 157.5 + lon * 0.05,
+        (i % 8) * 20.0 - 70.0 + lat * 0.05)
+    }
+    val line = (0 until 12).map(k => (1000L + k, -20.0 + k * 0.5, 80.0))
+    val rows = graft.operators.Dbscan
+      .clusterHulls((blobs ++ line).toDF("doc_id", "lon", "lat"), "doc_id",
+        epsDeg = 5.0, minPts = 8, res = 1)
+      .select("n_hull", "wkt", "xs", "ys").collect()
+    val kinds = rows.map { r =>
+      val (nHull, wkt) = (r.getLong(0), r.getString(1))
+      val xs = r.getSeq[Double](2); val ys = r.getSeq[Double](3)
+      assert(xs.length === nHull && ys.length === nHull, wkt)
+      if (wkt.startsWith("POLYGON")) {
+        val ring = wkt.stripPrefix("POLYGON ((").stripSuffix("))")
+          .split(", ").map(_.split(" ").map(java.lang.Double.parseDouble))
+        assert(ring.length === nHull + 1 && ring.head.toSeq === ring.last.toSeq)
+        def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+        assert(bits(xs) === bits(ring.init.map(_(0)).toSeq), wkt)
+        assert(bits(ys) === bits(ring.init.map(_(1)).toSeq), wkt)
+      } else {
+        assert(wkt.startsWith("LINESTRING") && nHull < 3, wkt)
+      }
+      wkt.takeWhile(_ != ' ')
+    }
+    assert(kinds.count(_ == "POLYGON") === 8 && kinds.count(_ == "LINESTRING") === 1)
+  }
+
+  test("cluster moments: exact decimal sums on a 400k-point cluster near lon 180, in both codegen modes") {
+    // per-row lon² quantized to 1e-9 is ~3.2e13, so 400k rows sum past
+    // Long.MaxValue: a long sum would raise under ANSI mode
+    val n = 400000
+    val pts = spark.range(n).select(col("id").as("doc_id"),
+      (lit(179.9) + (col("id") % 1000).cast("double") * lit(1e-5)).as("lon"),
+      ((col("id") / 1000).cast("long").cast("double") * lit(1e-4)).as("lat"))
+    val coords = pts.select("lon", "lat").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    def q9(v: Double): BigInt = BigInt(math.floor(v * 1e9 + 0.5).toLong)
+    val want = Seq[((Double, Double)) => Double](_._1, p => p._1 * p._1,
+        _._2, p => p._2 * p._2, p => p._1 * p._2)
+      .map(f => coords.iterator.map(p => q9(f(p))).sum)
+    assert(want(1) > BigInt(Long.MaxValue))
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        withConf("spark.sql.codegen.factoryMode" -> mode,
+            "spark.sql.codegen.wholeStage" -> wholeStage) {
+          val got = SparkEntry.clusterMoments(pts).collect()
+          assert(got.length === 1, mode)
+          val r = got.head
+          assert(r.getAs[Long]("n_pts") === n.toLong, mode)
+          val sums = Seq("sx", "sx2", "sy", "sy2", "sxy")
+            .map(c => BigInt(r.getAs[java.math.BigDecimal](c).toBigIntegerExact))
+          assert(sums === want, mode)
+        }
+    }
+  }
+
   test("partial-hull pre-reduce is exact: hull(points) == hull(per-cell partial hulls); operator output invariant to preCellDeg") {
     import graft.core.ConvexHull
     // kernel property on random scattered sets: the global hull equals

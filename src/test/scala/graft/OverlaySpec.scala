@@ -26,22 +26,17 @@ class OverlaySpec extends AnyFunSuite {
     !(sep(a, b) || sep(b, a))
   }
 
-  private def toDfA(tris: Seq[(Long, Tri)]) = {
+  // one ring per row as (id, x array, y array), unclosed
+  private def toRingDf(prefix: String, polys: Seq[(Long, Tri)]) = {
     import spark.implicits._
-    tris.map { case (id, t) => (id, t(0)._1, t(0)._2, t(1)._1, t(1)._2,
-      t(2)._1, t(2)._2) }
-      .toDF("a_id", "ax1", "ay1", "ax2", "ay2", "ax3", "ay3")
-  }
-  private def toDfB(tris: Seq[(Long, Tri)]) = {
-    import spark.implicits._
-    tris.map { case (id, t) => (id, t(0)._1, t(0)._2, t(1)._1, t(1)._2,
-      t(2)._1, t(2)._2) }
-      .toDF("b_id", "bx1", "by1", "bx2", "by2", "bx3", "by3")
+    polys.map { case (id, vs) => (id, vs.map(_._1), vs.map(_._2)) }
+      .toDF(s"${prefix}_id", s"${prefix}x", s"${prefix}y")
   }
 
   private def run(as: Seq[(Long, Tri)], bs: Seq[(Long, Tri)],
                   cellDeg: Double): Set[(Long, Long)] =
-    Overlay.triangleIntersectsJoin(toDfA(as), toDfB(bs), cellDeg)
+    Overlay.convexIntersectsJoin(toRingDf("a", as), toRingDf("b", bs),
+        cellDeg, validate = false)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -65,8 +60,9 @@ class OverlaySpec extends AnyFunSuite {
     // both triangles span several 2°-cells and overlap over many of them
     val a: Tri = Seq((0.0, 0.0), (9.0, 0.0), (0.0, 9.0))
     val b: Tri = Seq((-1.0, -1.0), (8.0, -1.0), (-1.0, 8.0))
-    val rows = Overlay.triangleIntersectsJoin(
-        toDfA(Seq(7L -> a)), toDfB(Seq(9L -> b)), cellDeg = 2.0)
+    val rows = Overlay.convexIntersectsJoin(
+        toRingDf("a", Seq(7L -> a)), toRingDf("b", Seq(9L -> b)),
+        cellDeg = 2.0, validate = false)
       .select("a_id", "b_id").collect()
     assert(rows.length === 1 && rows.head.getLong(0) === 7L)
   }
@@ -86,23 +82,9 @@ class OverlaySpec extends AnyFunSuite {
     !(sep(a, b) || sep(b, a))
   }
 
-  private def toNgonDf(prefix: String, n: Int, polys: Seq[(Long, Tri)]) = {
-    import spark.implicits._
-    val rows = polys.map { case (id, vs) =>
-      // pad short rings by repeating the last vertex (the documented
-      // fixed-width layout)
-      val p = vs ++ Seq.fill(n - vs.size)(vs.last)
-      (id, p.flatMap(v => Seq(v._1, v._2)))
-    }
-    val cols = col("_1").as(s"${prefix}_id") +:
-      (1 to n).flatMap(i => Seq(
-        col("_2")(2 * (i - 1)).as(s"${prefix}x$i"),
-        col("_2")(2 * i - 1).as(s"${prefix}y$i")))
-    rows.toDF().select(cols: _*)
-  }
-
   test("convex n-gons: pentagon×hexagon parity with serial SAT, padded rings, cross-n widths") {
-    // pentagons (5 genuine vertices) vs hexagons, some rings padded up
+    // pentagons (5 genuine vertices) vs hexagons, with narrower rings
+    // mixed into the same columns
     def pent(i: Long, shift: Double): (Long, Tri) = {
       val x = (i * 17.000170000017) % 340.0 - 170.0 + shift
       val y = (i * 7.000070000007) % 160.0 - 80.0 + shift
@@ -118,15 +100,14 @@ class OverlaySpec extends AnyFunSuite {
         (x + 1.0, y + h), (x, y + h - 1.0)))
     }
     val as = (0L until 80L).map(pent(_, 0.0)) ++
-      // padded: triangles and quads carried in the 5-wide layout
+      // ragged: triangles in the same array columns as the pentagons
       (200L until 220L).map(i => (i, Seq((i * 1.7 % 300 - 150, 40.0),
         (i * 1.7 % 300 - 148, 40.0), (i * 1.7 % 300 - 150, 42.0))))
     val bs = (0L until 80L).map(hexa(_, 1.0))
     val want = (for { (ia, ta) <- as; (ib, tb) <- bs
       if refConvex(ta, tb) } yield (ia, ib)).toSet
     val out = Overlay.convexIntersectsJoin(
-      toNgonDf("a", 5, as), toNgonDf("b", 6, bs), nA = 5, nB = 6,
-      cellDeg = 8.0)
+      toRingDf("a", as), toRingDf("b", bs), cellDeg = 8.0)
     val got = out.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want)
@@ -143,15 +124,55 @@ class OverlaySpec extends AnyFunSuite {
       (10.0, 12.0))
     val e = intercept[Exception] {
       Overlay.convexIntersectsJoin(
-        toNgonDf("a", 4, Seq(1L -> dart)), toNgonDf("b", 4, Seq(2L -> square)),
-        nA = 4, nB = 4, cellDeg = 8.0).collect()
+        toRingDf("a", Seq(1L -> dart)), toRingDf("b", Seq(2L -> square)),
+        cellDeg = 8.0).collect()
     }
     assert(e.getMessage != null && e.getMessage.contains("non-convex"),
       String.valueOf(e.getMessage))
     // same ring with validation off: caller's contract, no raise
     Overlay.convexIntersectsJoin(
-      toNgonDf("a", 4, Seq(1L -> dart)), toNgonDf("b", 4, Seq(2L -> square)),
-      nA = 4, nB = 4, cellDeg = 8.0, validate = false).collect()
+      toRingDf("a", Seq(1L -> dart)), toRingDf("b", Seq(2L -> square)),
+      cellDeg = 8.0, validate = false).collect()
+  }
+
+  test("convex_sat and clip_area: a null ring, null vertex or NaN vertex gives null, in both codegen modes") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val sq = Seq(0.0, 2.0, 2.0, 0.0)
+    val sqY = Seq(0.0, 0.0, 2.0, 2.0)
+    val far = sq.map(_ + 50.0)
+    def ring(v: Seq[Double], i: Int, bad: java.lang.Double): Seq[java.lang.Double] =
+      v.map(java.lang.Double.valueOf).updated(i, bad)
+    val nan = java.lang.Double.valueOf(Double.NaN)
+    // row 0 is the valid control; every other row is disjoint or
+    // overlapping in a way a 0.0 or NaN reading would misjudge
+    val rows = Seq(
+      Row(0, sq, sqY, sq.map(_ + 1.0), sqY),
+      Row(1, null, sqY, sq, sqY),
+      Row(2, sq, sqY, ring(far, 0, null), sqY.map(_ + 50.0)),
+      Row(3, sq, ring(sqY, 2, null), sq, sqY),
+      Row(4, sq, sqY, ring(far, 1, nan), sqY.map(_ + 50.0)),
+      Row(5, sq, sqY, far, ring(sqY.map(_ + 50.0), 3, nan)),
+      Row(6, ring(sq, 0, nan), sqY, sq, sqY))
+    val arr = ArrayType(DoubleType, containsNull = true)
+    val schema = StructType(StructField("id", IntegerType) +:
+      Seq("ax", "ay", "bx", "by").map(StructField(_, arr)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        withConf("spark.sql.codegen.factoryMode" -> mode,
+            "spark.sql.codegen.wholeStage" -> wholeStage) {
+          val (ax, ay, bx, by) = (col("ax"), col("ay"), col("bx"), col("by"))
+          val got = df.select(col("id"),
+              graft.functions.geo.convex_sat(ax, ay, bx, by),
+              graft.functions.geo.clip_area(ax, ay, bx, by))
+            .collect().map(r => r.getInt(0) -> r).toMap
+          assert(got(0).getBoolean(1) && got(0).getDouble(2) === 2.0, mode)
+          (1 to 6).foreach { i =>
+            assert(got(i).isNullAt(1) && got(i).isNullAt(2), s"$mode row $i")
+          }
+        }
+    }
   }
 
   test("segment crossing join: proper-crossing parity with a serial reference; touch excluded; no cartesian") {
@@ -197,34 +218,6 @@ class OverlaySpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("wktConvexCols: ring parsed to padded fixed-width doubles; non-POLYGON dropped; over-width raises") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, "POLYGON ((0.5 1.25, 4.5 1.25, 4.5 6.75, 0.5 1.25))"), // triangle
-      (2L, "POLYGON ((10 10, 14 10, 14 14, 10 14, 10 10))"),       // quad
-      (3L, "LINESTRING (0 0, 1 1)"),                               // degenerate hull
-      (4L, "POINT (2 2)"))
-    val out = Overlay.wktConvexCols(rows.toDF("id", "wkt"), "id", "wkt",
-      maxN = 5, prefix = "a").collect().map(r => r.getLong(0) -> r).toMap
-    assert(out.keySet === Set(1L, 2L)) // non-POLYGON rows dropped
-    val t = out(1L)
-    // closing vertex is stripped; short ring pads by repeating the last
-    assert((1 to 5).map(i => (t.getDouble(2 * i - 1), t.getDouble(2 * i))) ===
-      Seq((0.5, 1.25), (4.5, 1.25), (4.5, 6.75), (4.5, 6.75), (4.5, 6.75)))
-    val q = out(2L)
-    assert((q.getDouble(1), q.getDouble(2), q.getDouble(7), q.getDouble(8)) ===
-      ((10.0, 10.0, 10.0, 14.0)))
-    // a ring wider than maxN fails fast instead of silently truncating
-    val wide = Seq((9L,
-      "POLYGON ((0 0, 1 0, 2 1, 2 2, 1 3, 0 3, -1 2, -1 1, 0 0))"))
-    val e = intercept[Exception] {
-      Overlay.wktConvexCols(wide.toDF("id", "wkt"), "id", "wkt",
-        maxN = 4, prefix = "a").collect()
-    }
-    assert(String.valueOf(e.getMessage).contains("maxN") ||
-      String.valueOf(e.getCause).contains("maxN"))
-  }
-
   test("brute-force parity on scattered sets; equi-join plan (no cartesian)") {
     def tri(i: Long, shift: Double): (Long, Tri) = {
       val lon = (i * 17.000170000017) % 340.0 - 170.0 + shift
@@ -237,7 +230,8 @@ class OverlaySpec extends AnyFunSuite {
     })
     val want = (for { (ia, ta) <- as; (ib, tb) <- bs
       if refIntersects(ta, tb) } yield (ia, ib)).toSet
-    val out = Overlay.triangleIntersectsJoin(toDfA(as), toDfB(bs), 8.0)
+    val out = Overlay.convexIntersectsJoin(toRingDf("a", as),
+      toRingDf("b", bs), 8.0, validate = false)
     val got = out.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want)

@@ -64,4 +64,14 @@ class PlanSpec extends AnyFunSuite {
     val nExchanges = "(?<!Broadcast)Exchange".r.findAllIn(p).length
     assert(nExchanges === 1, s"expected 1 shuffle, got $nExchanges:\n${p.take(2000)}")
   }
+
+  test("q107/q111 plan the hull chain once: two MapGroups, no barrier") {
+    // the two hull stages (partial hulls, final hull) each plan as one
+    // MapGroups; a checkpoint between hulls and overlay would hide them
+    Seq("q107_hull_admin_overlay", "q111_zonal_overlap").foreach { q =>
+      val p = planOf(q)
+      val n = "\\bMapGroups\\b".r.findAllIn(p).length
+      assert(n === 2, s"$q: expected 2 MapGroups, got $n:\n${p.take(3000)}")
+    }
+  }
 }

@@ -18,6 +18,17 @@ object SharedSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with session confs set, then restores the old values. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 class SynthPagesSpec extends AnyFunSuite {

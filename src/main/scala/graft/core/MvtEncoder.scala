@@ -210,7 +210,8 @@ object MvtEncoder {
     * every pipeline tile has. Byte-for-byte identical to
     * `encodeTile(Seq(name → features))` with one GeomPoint feature per
     * (x, y, kind, name) row, ids 1..n, tags `kind` plus `name` when
-    * nonempty (parity pinned in MvtEncoderSpec), but with none of the
+    * nonempty (a null name counts as empty; parity pinned in
+    * MvtEncoderSpec), but with none of the
     * generic path's per-feature allocation: no Feature/TagValue objects,
     * no boxed geometry buffers, two scratch ByteBufs reused across the
     * whole tile. This stage is the single largest pipeline cost (the
@@ -231,7 +232,7 @@ object MvtEncoder {
     while (i < n) {
       if (!keyIdx.containsKey("kind")) keyIdx.put("kind", keyIdx.size)
       if (!valIdx.containsKey(kinds(i))) valIdx.put(kinds(i), valIdx.size)
-      if (names(i).nonEmpty) {
+      if (names(i) != null && names(i).nonEmpty) {
         if (!keyIdx.containsKey("name")) keyIdx.put("name", keyIdx.size)
         if (!valIdx.containsKey(names(i))) valIdx.put(names(i), valIdx.size)
       }
@@ -252,7 +253,7 @@ object MvtEncoder {
       scratch.reset() // tags
       scratch.writeVarint(0L) // keyIdx("kind") — always the first key
       scratch.writeVarint(valIdx.get(kinds(i)).toLong)
-      if (names(i).nonEmpty) {
+      if (names(i) != null && names(i).nonEmpty) {
         scratch.writeVarint(nameKey)
         scratch.writeVarint(valIdx.get(names(i)).toLong)
       }

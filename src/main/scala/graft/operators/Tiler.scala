@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import graft.core.{MvtEncoder, WebMercator}
 
@@ -28,8 +29,9 @@ final case class TileRowF(zoom: Int, x: Long, y: Long, n_features: Int,
   *    pass, O(cap) memory per tile regardless of tile heat. This
   *    enforces the "hot tile ≤ 2× median partition" gate structurally,
   *    with AQE skew handling enabled as backstop.
-  *  - per-tile MVT encode streams through mapGroups (iterator, no
-  *    collect_list materialization spike).
+  *  - the top-cap and the per-tile MVT encode are one Catalyst
+  *    aggregate ([[TopKTileAgg]]) that reads the input rows directly: no
+  *    collect_list materialization spike, no per-row object decode.
   *
   * This is the reference's grouped robust-stack + fit/persist stage
   * reshaped for tiles (reference: mvt/stack.py, mvt/run_mvt_espre.py:
@@ -64,33 +66,32 @@ object Tiler {
   /** Encode pre-assigned (zoom, tile_id, fkey, lon, lat, kind, name) rows
     * into MVT tiles.
     *
-    * Hot-tile bound: a bounded max-heap of size `cap` inside mapGroups —
-    * the EXACT deterministic top-cap by (fkey, lon, lat) in one streaming
-    * pass with O(cap) memory per tile, no count pre-pass, no extra join
-    * (one shuffle total; a mega-hot urban tile streams through the
-    * iterator but never materializes).
+    * Hot-tile bound: a bounded max-heap of size `cap` inside the per-tile
+    * aggregate — the EXACT deterministic top-cap by (fkey, lon, lat) in
+    * one streaming pass with O(cap) memory per tile, no count pre-pass, no
+    * extra join (one shuffle total; a mega-hot urban tile streams through
+    * the heap but never materializes).
     */
   def encodeTiles(zoomed: DataFrame, cap: Int = 4096,
                   layerName: String = "features"): Dataset[TileRow] = {
-    val spark = zoomed.sparkSession
-    import spark.implicits._
+    import zoomed.sparkSession.implicits._
+    topCapTiles(zoomed, cap, layerName, keepFeatures = false).as[TileRow]
+  }
 
-    val proj = zoomed.select(
-        col("tile_id"), col("fkey"), col("lon"), col("lat"),
-        col("kind"), col("name"))
-      .as[(Long, Long, Double, Double, String, String)]
-
-    // encode fused into the aggregator's finish (TopKTileEncode): the
-    // buffer → TileRow conversion happens once inside the agg, never as
-    // a kryo'd agg-output row + downstream map. The trailing select is a
-    // Tungsten struct projection (no object round trip).
-    val enc = new TopKTileEncode(cap, layerName).toColumn
-    proj.groupByKey(_._1)
-      .mapValues(r => (r._1, Feat(r._2, r._3, r._4, r._5, r._6)))
-      .agg(enc)
-      .toDF("__tid", "tile")
+  /** groupBy(tile_id) → [[TopKTileAgg]] over the (tile_id, fkey, lon, lat,
+    * kind, name) columns of `rows` → one tile row per tile_id. Every
+    * entry point that takes a cap comes through here, so a cap < 1 fails
+    * on the driver before any job runs. The encode happens once inside
+    * the aggregate; the trailing select is a Tungsten struct projection.
+    */
+  private def topCapTiles(rows: DataFrame, cap: Int, layerName: String,
+                          keepFeatures: Boolean): DataFrame = {
+    require(cap >= 1, s"tile cap must be >= 1, got $cap")
+    val agg = TopKTileAgg(Seq("tile_id", "fkey", "lon", "lat", "kind", "name")
+      .map(c => expression(col(c))), cap, layerName, keepFeatures)
+    rows.groupBy(col("tile_id"))
+      .agg(column(agg.toAggregateExpression()).as("tile"))
       .select("tile.*")
-      .as[TileRow]
   }
 
   /** Encode one tile's top-capped (sorted) feature buffer into its MVT
@@ -122,13 +123,6 @@ object Tiler {
     TileRow(zoom, tx, ty, n, bytes)
   }
 
-  /** Encode per-tile top-capped feature buffers into MVT rows. */
-  private def encodeBuffered(buffered: Dataset[(Long, Array[Feat])],
-                             layerName: String): Dataset[TileRow] = {
-    import buffered.sparkSession.implicits._
-    buffered.map { case (tileId, feats) => encodeOne(tileId, feats, layerName) }
-  }
-
   /** Pyramid tile build: assign ONLY the finest zoom (1× fan-out of the
     * heavy base stage instead of ×|zooms|), then roll every coarser zoom
     * up from the finest per-tile top-cap buffers. EXACT, not approximate:
@@ -145,40 +139,28 @@ object Tiler {
   def buildTilesPyramid(features: DataFrame, zooms: Seq[Int],
                         cap: Int = 4096,
                         layerName: String = "features"): Dataset[TileRow] = {
-    val spark = features.sparkSession
-    import spark.implicits._
+    import features.sparkSession.implicits._
     val zs = zooms.distinct.sorted
     val finest = zs.max
-    val proj = assignTiles(features, Seq(finest)).select(
-        col("tile_id"), col("fkey"), col("lon"), col("lat"),
-        col("kind"), col("name"))
-      .as[(Long, Long, Double, Double, String, String)]
-    val topk = new TopKFeatures(cap).toColumn
-    // reused by every coarser level and its own encode — materialize the
-    // small (tiles × cap) buffer table once, not the raw input. An eager
-    // localCheckpoint (not persist) so the blocks are released by the
-    // ContextCleaner when the pyramid result is dropped, instead of
-    // staying pinned on executors for the rest of the session.
-    val base = proj.groupByKey(_._1)
-      .mapValues(r => Feat(r._2, r._3, r._4, r._5, r._6))
-      .agg(topk)
-      .localCheckpoint(true)
+    // the finest tiles with their sorted top-cap buffers (`feats`), reused
+    // by every coarser level — materialize the small (tiles × cap) table
+    // once, not the raw input. An eager localCheckpoint (not persist) so
+    // the blocks are released by the ContextCleaner when the pyramid
+    // result is dropped, instead of staying pinned on executors for the
+    // rest of the session.
+    val base = topCapTiles(assignTiles(features, Seq(finest)), cap, layerName,
+      keepFeatures = true).localCheckpoint(true)
     val coarser = zs.init.map { z =>
       val dz = finest - z
-      val rolled = base.flatMap { case (tid, feats) =>
-        val pid = WebMercator.tileId(z,
-          WebMercator.tileIdX(tid) >> dz, WebMercator.tileIdY(tid) >> dz)
-        feats.iterator.map(f => (pid, f))
-      }
-      // fused agg (same object-boundary reasoning as encodeTiles): the
-      // rollup's (pid, Feat) rows ARE the TopKTileEncode input shape
-      val enc = new TopKTileEncode(cap, layerName).toColumn
-      rolled.groupByKey(_._1).agg(enc)
-        .toDF("__tid", "tile")
-        .select("tile.*")
-        .as[TileRow]
+      // parent tile id = WebMercator.tileId(z, x >> dz, y >> dz)
+      val pid = shiftleft(lit(z.toLong), 58)
+        .bitwiseOR(shiftleft(shiftright(col("x"), dz), 29))
+        .bitwiseOR(shiftright(col("y"), dz))
+      val rolled = base.select(pid.as("tile_id"), explode(col("feats")).as("f"))
+        .select("tile_id", "f.*")
+      topCapTiles(rolled, cap, layerName, keepFeatures = false).as[TileRow]
     }
-    coarser.foldLeft(encodeBuffered(base, layerName))(_ unionByName _)
+    coarser.foldLeft(base.drop("feats").as[TileRow])(_ unionByName _)
   }
 
   /** Encode pre-assigned rows into MVT tiles AND keep the top-capped
@@ -195,19 +177,8 @@ object Tiler {
     */
   def encodeTilesKeepFeatures(zoomed: DataFrame, cap: Int = 4096,
                               layerName: String = "features"): Dataset[TileRowF] = {
-    val spark = zoomed.sparkSession
-    import spark.implicits._
-    val proj = zoomed.select(
-        col("tile_id"), col("fkey"), col("lon"), col("lat"),
-        col("kind"), col("name"))
-      .as[(Long, Long, Double, Double, String, String)]
-    val enc = new TopKTileEncodeF(cap, layerName).toColumn
-    proj.groupByKey(_._1)
-      .mapValues(r => (r._1, Feat(r._2, r._3, r._4, r._5, r._6)))
-      .agg(enc)
-      .toDF("__tid", "tile")
-      .select("tile.*")
-      .as[TileRowF]
+    import zoomed.sparkSession.implicits._
+    topCapTiles(zoomed, cap, layerName, keepFeatures = true).as[TileRowF]
   }
 
   /** Merge tiles committed WITH feature buffers (the delta layout) into
@@ -219,20 +190,11 @@ object Tiler {
     */
   def mergeTiles(tilesWithFeats: DataFrame, cap: Int = 4096,
                  layerName: String = "features"): Dataset[TileRowF] = {
-    val spark = tilesWithFeats.sparkSession
-    import spark.implicits._
+    import tilesWithFeats.sparkSession.implicits._
     val feats = tilesWithFeats
       .select(col("tile_id"), explode(col("feats")).as("f"))
-      .select(col("tile_id"), col("f.fkey"), col("f.lon"), col("f.lat"),
-        col("f.kind"), col("f.name"))
-      .as[(Long, Long, Double, Double, String, String)]
-    val enc = new TopKTileEncodeF(cap, layerName).toColumn
-    feats.groupByKey(_._1)
-      .mapValues(r => (r._1, Feat(r._2, r._3, r._4, r._5, r._6)))
-      .agg(enc)
-      .toDF("__tid", "tile")
-      .select("tile.*")
-      .as[TileRowF]
+      .select("tile_id", "f.*")
+    topCapTiles(feats, cap, layerName, keepFeatures = true).as[TileRowF]
   }
 
   /** Combine two tile sets into MULTI-LAYER tiles on (zoom, x, y) — e.g.

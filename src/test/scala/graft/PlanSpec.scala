@@ -65,6 +65,18 @@ class PlanSpec extends AnyFunSuite {
     assert(nExchanges === 1, s"expected 1 shuffle, got $nExchanges:\n${p.take(2000)}")
   }
 
+  test("tile encode is one native aggregate: no object decode or key lambda") {
+    import spark.implicits._
+    val feats = (0 until 200).map(i => (i * 0.7 - 70.0, i * 0.3 - 30.0, s"n$i"))
+      .toDF("lon", "lat", "name")
+    val p = graft.operators.Tiler.buildTiles(feats, Seq(4, 8))
+      .queryExecution.executedPlan.toString
+    Seq("AppendColumns", "MapElements", "DeserializeToObject").foreach { op =>
+      assert(!p.contains(op), s"$op in the tile plan:\n${p.take(2000)}")
+    }
+    assert(p.contains("topk_tile"), p.take(2000))
+  }
+
   test("q107/q111 plan the hull chain once: two MapGroups, no barrier") {
     // the two hull stages (partial hulls, final hull) each plan as one
     // MapGroups; a checkpoint between hulls and overlay would hide them

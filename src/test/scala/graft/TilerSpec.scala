@@ -155,6 +155,34 @@ class TilerSpec extends AnyFunSuite {
     assert(tiles.length === 1)
     assert(tiles.head.n_features === 256)
   }
+
+  test("a tile cap below 1 fails on the driver at every entry point") {
+    import spark.implicits._
+    import graft.operators.Tiler
+    val df = Seq((2.35, 48.85, "a"), (2.36, 48.86, "b")).toDF("lon", "lat", "name")
+    val zoomed = Tiler.assignTiles(df, Seq(8))
+    val kept = Tiler.withStats(Tiler.encodeTilesKeepFeatures(zoomed, 4).toDF())
+    val calls: Seq[(String, Int => Any)] = Seq(
+      "buildTiles" -> (c => Tiler.buildTiles(df, Seq(8), c)),
+      "encodeTiles" -> (c => Tiler.encodeTiles(zoomed, c)),
+      "buildTilesPyramid" -> (c => Tiler.buildTilesPyramid(df, Seq(4, 8), c)),
+      "encodeTilesKeepFeatures" -> (c => Tiler.encodeTilesKeepFeatures(zoomed, c)),
+      "mergeTiles" -> (c => Tiler.mergeTiles(kept, c)))
+    calls.foreach { case (name, call) =>
+      Seq(0, -1).foreach { cap =>
+        val e = intercept[IllegalArgumentException](call(cap))
+        assert(e.getMessage.contains("tile cap"), s"$name cap=$cap: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("a null coordinate fails the encode instead of landing at 0.0") {
+    import spark.implicits._
+    val df = Seq((Some(2.35), 48.85, "a"), (None, 48.86, "b")).toDF("lon", "lat", "name")
+    val e = intercept[org.apache.spark.SparkException](
+      graft.operators.Tiler.buildTiles(df, Seq(8)).collect())
+    assert(e.getMessage.toLowerCase.contains("null"), e.getMessage)
+  }
 }
 
 class LineageSpec extends AnyFunSuite {

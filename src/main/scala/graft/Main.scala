@@ -281,11 +281,12 @@ object Main {
           xxhash64(col("url"), col("name"), col("lon"), col("lat")).as("pid"),
           col("lon"), col("lat")).distinct()
         .localCheckpoint(true)
-      val hulls =
-        if (exact) graft.operators.Dbscan.clusterHulls(pts, "pid",
+      val labels =
+        if (exact) graft.operators.Dbscan.cluster(pts, "pid",
           epsDeg = 3.0, minPts = 25, res = 2)
-        else graft.operators.Dbscan.clusterGridHulls(pts, "pid",
+        else graft.operators.Dbscan.clusterGrid(pts, "pid",
           epsDeg = 3.0, minPts = 25, cellDeg = 0.5, res = 2)
+      val hulls = graft.operators.Dbscan.hulls(pts, "pid", labels)
       // dense non-negative ids for the MVT feature ids (cluster_id is a
       // min content hash — possibly negative, meaningless to a client)
       val w = org.apache.spark.sql.expressions.Window.orderBy("cluster_id")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Dbscan.momentMean
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2), with a DuckDB-runnable oracle in `oracleSql` wherever
@@ -120,44 +121,28 @@ object SparkEntry {
       ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
         + col("lat") * lit(0.05)).as("lat"))
 
-  /** Per-cluster moments of `pts`(doc_id, lon, lat) under the q104-style
-    * grid-DBSCAN labels (noise excluded): n_pts and the sums sx, sx2, sy,
-    * sy2, sxy of per-row 1e-9-quantized longs, so the distributed sums
-    * are order-insensitive. The sums are exact `decimal(38,0)`: a long
-    * sum of lon² over a few hundred thousand points near ±180° would
-    * overflow, and decimal→double rounds correctly like long→double.
+  /** q104-style grid-DBSCAN labels of the 8-blob input `pts` — the
+    * clusters of q106, q107, q111, q117 and q119.
     */
-  private[graft] def clusterMoments(pts: DataFrame): DataFrame = {
-    val labels = graft.operators.Dbscan.clusterGrid(pts, "doc_id",
+  private def blobGridLabels(pts: DataFrame): DataFrame =
+    graft.operators.Dbscan.clusterGrid(pts, "doc_id",
       epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
-      .filter(col("role") =!= "noise")
-      .select(col("doc_id"), col("cluster_id"))
-    def q9(c: Column) =
-      floor(c * lit(1e9) + lit(0.5)).cast("long").cast("decimal(38,0)")
-    pts.join(labels, Seq("doc_id"))
-      .select(col("cluster_id"),
-        q9(col("lon")).as("xl"), q9(col("lon") * col("lon")).as("xl2"),
-        q9(col("lat")).as("yl"), q9(col("lat") * col("lat")).as("yl2"),
-        q9(col("lon") * col("lat")).as("xyl"))
-      .groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_pts"),
-        sum(col("xl")).as("sx"), sum(col("xl2")).as("sx2"),
-        sum(col("yl")).as("sy"), sum(col("yl2")).as("sy2"),
-        sum(col("xyl")).as("sxy"))
-  }
-
-  /** A [[clusterMoments]] sum as a per-point mean in degrees (or
-    * degrees²).
-    */
-  private def momentMean(sum: Column): Column =
-    sum.cast("double") / lit(1e9) / col("n_pts")
 
   /** Grid-DBSCAN hulls of the 8-blob input (q106), also the hull side of
     * the q107/q111 overlays.
     */
-  private def blobGridHulls(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dbscan.clusterGridHulls(blobPoints(s, dir), "doc_id",
-      epsDeg = 5.0, minPts = 8, cellDeg = 0.25, res = 1)
+  private def blobGridHulls(s: SparkSession, dir: String): DataFrame = {
+    val pts = blobPoints(s, dir)
+    graft.operators.Dbscan.hulls(pts, "doc_id", blobGridLabels(pts))
+  }
+
+  /** [[graft.operators.Dbscan.clusterMoments]] of the 8-blob clusters
+    * (q117, q119).
+    */
+  private def blobMoments(s: SparkSession, dir: String): DataFrame = {
+    val pts = blobPoints(s, dir)
+    graft.operators.Dbscan.clusterMoments(pts, "doc_id", blobGridLabels(pts))
+  }
 
   /** The oracle triangles as overlay-join rings (b_id, bx, by); the
     * registry stores closed 4-entry rings, the join takes them unclosed.
@@ -1183,9 +1168,8 @@ object SparkEntry {
     //      longs, so the distributed sums are order-insensitive and the
     //      final doubles evaluate identically in both engines ----
     "q117_cluster_dispersion" -> ((s, dir) => {
-      val agg = clusterMoments(blobPoints(s, dir))
       val (mx, my) = (momentMean(col("sx")), momentMean(col("sy")))
-      agg.select(col("cluster_id"), col("n_pts"),
+      blobMoments(s, dir).select(col("cluster_id"), col("n_pts"),
         round(mx, 6).as("cen_lon"),
         round(my, 6).as("cen_lat"),
         round(sqrt(greatest(lit(0.0),
@@ -1199,14 +1183,13 @@ object SparkEntry {
     //      full ellipse-axis formula ships in the oracle (orientation
     //      would need atan2, which is libm-dependent — omitted) ----
     "q119_cluster_anisotropy" -> ((s, dir) => {
-      val agg = clusterMoments(blobPoints(s, dir))
       val (mx, my) = (momentMean(col("sx")), momentMean(col("sy")))
       val vx = momentMean(col("sx2")) - mx * mx
       val vy = momentMean(col("sy2")) - my * my
       val cv = momentMean(col("sxy")) - mx * my
       val half = (vx + vy) / lit(2.0)
       val disc = sqrt((vx - vy) / lit(2.0) * ((vx - vy) / lit(2.0)) + cv * cv)
-      agg.select(col("cluster_id"), col("n_pts"),
+      blobMoments(s, dir).select(col("cluster_id"), col("n_pts"),
         round(sqrt(greatest(lit(0.0), half + disc)), 6).as("axis_major"),
         round(sqrt(greatest(lit(0.0), half - disc)), 6).as("axis_minor"),
         round(cv, 6).as("cov"))
@@ -1215,8 +1198,10 @@ object SparkEntry {
     //      border members) — registry-sized output regardless of member
     //      count; the polygon layer a tile map draws over the density ----
     "q103_cluster_hulls" -> ((s, dir) => {
-      graft.operators.Dbscan.clusterHulls(blobPoints(s, dir), "doc_id",
-          epsDeg = 5.0, minPts = 8, res = 1)
+      val pts = blobPoints(s, dir)
+      graft.operators.Dbscan.hulls(pts, "doc_id",
+          graft.operators.Dbscan.cluster(pts, "doc_id", epsDeg = 5.0,
+            minPts = 8, res = 1))
         .select("cluster_id", "n_pts", "n_hull", "area", "wkt")
     }),
     // ---- hot-region polygons on the SCALE path: grid (weighted)

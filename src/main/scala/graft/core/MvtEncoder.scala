@@ -209,8 +209,8 @@ object MvtEncoder {
   /** HOT-LOOP fast path for a single-layer all-POINTS tile — the shape
     * every pipeline tile has. Byte-for-byte identical to
     * `encodeTile(Seq(name → features))` with one GeomPoint feature per
-    * (x, y, kind, name) row, ids 1..n, tags `kind` plus `name` when
-    * nonempty (a null name counts as empty; parity pinned in
+    * (x, y, kind, name) row, ids 1..n, tags `kind` when non-null plus
+    * `name` when nonempty (a null name counts as empty; parity pinned in
     * MvtEncoderSpec), but with none of the
     * generic path's per-feature allocation: no Feature/TagValue objects,
     * no boxed geometry buffers, two scratch ByteBufs reused across the
@@ -230,16 +230,18 @@ object MvtEncoder {
     val valIdx = new java.util.LinkedHashMap[String, Integer]()
     var i = 0
     while (i < n) {
-      if (!keyIdx.containsKey("kind")) keyIdx.put("kind", keyIdx.size)
-      if (!valIdx.containsKey(kinds(i))) valIdx.put(kinds(i), valIdx.size)
+      if (kinds(i) != null) {
+        if (!keyIdx.containsKey("kind")) keyIdx.put("kind", keyIdx.size)
+        if (!valIdx.containsKey(kinds(i))) valIdx.put(kinds(i), valIdx.size)
+      }
       if (names(i) != null && names(i).nonEmpty) {
         if (!keyIdx.containsKey("name")) keyIdx.put("name", keyIdx.size)
         if (!valIdx.containsKey(names(i))) valIdx.put(names(i), valIdx.size)
       }
       i += 1
     }
-    val nameKey: Long =
-      if (keyIdx.containsKey("name")) keyIdx.get("name").toLong else -1L
+    val kindKey = keyIdx.getOrDefault("kind", -1).toLong
+    val nameKey = keyIdx.getOrDefault("name", -1).toLong
 
     val layer = new ByteBuf(1024)
     layer.writeUInt(15, 2L) // version
@@ -251,13 +253,15 @@ object MvtEncoder {
       feat.reset()
       feat.writeUInt(1, (i + 1).toLong) // id
       scratch.reset() // tags
-      scratch.writeVarint(0L) // keyIdx("kind") — always the first key
-      scratch.writeVarint(valIdx.get(kinds(i)).toLong)
+      if (kinds(i) != null) {
+        scratch.writeVarint(kindKey)
+        scratch.writeVarint(valIdx.get(kinds(i)).toLong)
+      }
       if (names(i) != null && names(i).nonEmpty) {
         scratch.writeVarint(nameKey)
         scratch.writeVarint(valIdx.get(names(i)).toLong)
       }
-      feat.writeLenDelim(2, scratch)
+      if (scratch.size > 0) feat.writeLenDelim(2, scratch)
       feat.writeUInt(3, GeomPoint.toLong)
       scratch.reset() // geometry: MoveTo ×1 from (0,0)
       scratch.writeVarint(cmdInt(1, 1))

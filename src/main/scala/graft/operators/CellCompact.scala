@@ -60,29 +60,26 @@ object CellCompact {
     */
   def compact(cells: DataFrame, cellCol: String,
               groupCols: Seq[String] = Nil,
-              collectMax: Long = -1L): DataFrame = {
+              collectMax: Long = Dedup.DriverCollectMax): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
     val g = groupCols.map(col)
-    var cur = cells.select((g :+ col(cellCol).cast("long").as("cell")): _*)
-      .distinct().localCheckpoint(true)
+    val distinctCells = cells
+      .select((g :+ col(cellCol).cast("long").as("cell")): _*).distinct()
     // Scale-adaptive fast path (the Dedup.connectedComponents shape): a
-    // bounded distinct cover resolves its whole cascade in one driver
-    // pass instead of ~3 jobs per cascade level — the superstep chain's
-    // fixed latency dominates whenever the cover is small. Above the
-    // threshold (env SPARK_GRAFT_COMPACT_COLLECT_MAX) the superstep
-    // path runs unchanged, so planet-scale fine-level covers never
-    // touch the driver. Grouped compaction stays on the generic path
-    // (group columns are arbitrary types).
-    // collectMax < 0 (the default) defers to the env knob; an explicit
-    // value wins — tests pass 0 to force the superstep path
-    val cMax =
-      if (collectMax >= 0L) collectMax
-      else sys.env.getOrElse("SPARK_GRAFT_COMPACT_COLLECT_MAX",
-        "4000000").toLong
-    if (groupCols.isEmpty && cur.count() <= cMax) {
-      val spark = cells.sparkSession
-      import spark.implicits._
+    // distinct cover of at most `collectMax` cells resolves its whole
+    // cascade in one driver pass instead of ~3 jobs per cascade level —
+    // the superstep chain's fixed latency dominates whenever the cover
+    // is small. One bounded collect decides; above the bound the
+    // superstep path runs, so planet-scale fine-level covers never touch
+    // the driver (tests pass 0 to force it). Grouped compaction stays
+    // on the generic path (group columns are arbitrary types).
+    val small =
+      if (groupCols.isEmpty) Dedup.collectAtMost(distinctCells.as[Long], collectMax)
+      else None
+    if (small.isDefined) {
       val set = new java.util.HashSet[java.lang.Long]()
-      cur.select("cell").as[Long].collect().foreach(set.add(_))
+      small.get.foreach(set.add(_))
       // cascade to the fixpoint: a quadruple completes iff all four
       // siblings are present — same predicate as the distributed
       // count-4 aggregation, applied level-by-level bottom-up
@@ -118,6 +115,7 @@ object CellCompact {
         .map(_.longValue())
       return spark.createDataset(out.toIndexedSeq).toDF("cell")
     }
+    var cur = distinctCells.localCheckpoint(true)
     var changed = true
     while (changed) {
       val splittable = cur.filter(levelOf(col("cell")) > 0)

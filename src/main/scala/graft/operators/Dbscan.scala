@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact distributed DBSCAN (Ester et al. KDD'96) over planar points —
@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Decomposition into the engine's existing scale-shaped pieces:
   *  1. ε-neighborhood pairs via [[KnnJoin.withinRadius]] — cell-ring
   *     candidates → ONE equi join, never an all-pairs nested loop;
-  *  2. core points = one count aggregation over the pairs (a point's
-  *     neighborhood INCLUDES itself, the standard minPts convention);
+  *  2. core points = one weighted count aggregation over the pairs (a
+  *     point's neighborhood INCLUDES itself, the standard minPts
+  *     convention; every point weighs 1);
   *  3. clusters = connected components over CORE–CORE edges
   *     ([[Dedup.connectedComponents]] label propagation, eager
   *     checkpoints per superstep) — cluster_id = min member id;
@@ -30,8 +31,9 @@ import org.apache.spark.sql.functions._
   * them. The standard remedy at that density is cell-level
   * pre-aggregation (collapse points to fine-cell representatives with
   * weights, run the weighted core condition Σw ≥ minPts — grid DBSCAN),
-  * trading exact point labels for cell-resolution labels; wire it
-  * upstream of [[cluster]] when blobs outgrow executors.
+  * trading exact point labels for cell-resolution labels. That is
+  * [[clusterGrid]]; exact, ST and grid DBSCAN differ only in how they
+  * build pairs, weights and supercells, and share steps 2–4 ([[label]]).
   */
 object Dbscan {
 
@@ -50,48 +52,30 @@ object Dbscan {
     * AND time. The 8-byte time column rides BOTH SIDES of the one cell
     * equi join (`withinRadius` carry columns), so the temporal filter
     * applies in the same stage as the distance filter — no join-back of
-    * the pair set; everything downstream — core counts, components,
-    * border assign — is unchanged.
+    * the pair set; everything downstream is the shared [[label]] chain.
     */
   def clusterST(points: DataFrame, idCol: String, epsDeg: Double,
                 minPts: Int, res: Int,
                 timeEps: Option[(String, Double)]): DataFrame = {
-    require(minPts >= 1)
-    val timed = timeEps.isDefined
-    val qs = points.select(
-      Seq(col(idCol).as("q_id"), col("lon").as("q_lon"),
-        col("lat").as("q_lat")) ++
-        timeEps.map { case (tCol, _) =>
-          col(tCol).cast("double").as("__tq") }: _*)
-    val ps = points.select(
-      Seq(col(idCol).as("p_id"), col("lon"), col("lat")) ++
-        timeEps.map { case (tCol, _) =>
-          col(tCol).cast("double").as("__tp") }: _*)
-    val spatial = KnnJoin.withinRadius(qs, ps, epsDeg, res,
-      carry = if (timed) Seq("__tq", "__tp") else Nil)
+    timeEps.foreach { case (_, et) => require(et >= 0.0) }
+    def side(id: String, lon: String, lat: String, t: String) = points.select(
+      Seq(col(idCol).as(id), col("lon").as(lon), col("lat").as(lat)) ++
+        timeEps.map { case (tCol, _) => col(tCol).cast("double").as(t) }: _*)
+    val spatial = KnnJoin.withinRadius(side("q_id", "q_lon", "q_lat", "__tq"),
+      side("p_id", "lon", "lat", "__tp"), epsDeg, res,
+      carry = if (timeEps.isDefined) Seq("__tq", "__tp") else Nil)
     // all ordered (q, p) pairs with dist ≤ ε (∧ |Δt| ≤ εt), self
-    // included — consumed by the count, the core-edge builder, and the
-    // border assign
-    val pairs = (timeEps match {
-      case None => spatial.select("q_id", "p_id")
-      case Some((_, et)) =>
-        require(et >= 0.0)
-        spatial.filter(abs(col("__tq") - col("__tp")) <= lit(et))
-          .select("q_id", "p_id")
-    }).localCheckpoint(true)
-    val cores = pairs.groupBy("q_id").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= minPts)
-      .select(col("q_id").as("id"))
-      .localCheckpoint(true)
-    // geometric contraction (see contractedCoreLabels): cores keyed by an
-    // eps/2 supercell — same-cell cores are pairwise ≤ eps/√2 < eps apart,
-    // i.e. true ε-graph neighbors, so components are unchanged. For
-    // ST-DBSCAN the supercell gains an εt/2 time slab: same-slab members
-    // are within εt, so the temporal edge condition holds inside a cell
-    // too (a purely spatial supercell would merge cores that are NOT
-    // temporally reachable).
+    // included, each of unit weight
+    val pairs = timeEps.fold(spatial) { case (_, et) =>
+      spatial.filter(abs(col("__tq") - col("__tp")) <= lit(et)) }
+      .select(col("q_id"), col("p_id"), lit(1L).as("__w"))
+    // eps/2 supercells: same-cell points are pairwise ≤ eps/√2 < eps
+    // apart, i.e. true ε-graph neighbors. For ST-DBSCAN the supercell
+    // gains an εt/2 time slab: same-slab members are within εt, so the
+    // temporal edge condition holds inside a cell too (a purely spatial
+    // supercell would merge cores that are NOT temporally reachable).
     val s2 = epsDeg / 2.0
-    val coreCell = points.select(
+    val superCell = points.select(
       Seq(col(idCol).cast("long").as("id"),
         floor(col("lon") / lit(s2)).cast("long").as("__sc1"),
         floor(col("lat") / lit(s2)).cast("long").as("__sc2")) ++
@@ -99,25 +83,8 @@ object Dbscan {
           (if (et > 0.0)
              floor(col(tCol).cast("double") / lit(et / 2.0)).cast("long")
            else col(tCol).cast("double")).as("__sc3") }: _*)
-      .join(cores, Seq("id"), "left_semi")
-    // no checkpoint: both consumers re-derive it as ONE join over the
-    // checkpointed coreNode and the (small or checkpointed) component
-    // labels — cheaper than another materialization job
-    val coreLabels = contractedCoreLabels(pairs, coreCell)
-    val borderLabels = pairs
-      .join(cores.select(col("id").as("q_id")), Seq("q_id"), "left_anti")
-      .join(coreLabels.select(col("id").as("p_id"),
-        col("cluster_id")), Seq("p_id"))
-      .groupBy("q_id")
-      .agg(min(col("cluster_id")).as("cluster_id"))
-      .select(col("q_id").as("id"), col("cluster_id"))
-    val labeled = coreLabels.withColumn("role", lit("core"))
-      .unionByName(borderLabels.withColumn("role", lit("border")))
-    points.select(col(idCol).as("id"))
-      .join(labeled, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("role"), lit("noise")).as("role"),
-        coalesce(col("cluster_id"), lit(-1L)).as("cluster_id"))
+    label(pairs, minPts, superCell,
+      points.select(col(idCol), col(idCol).as("id")), idCol)
   }
 
   /** Grid (weighted) DBSCAN — the dense-blob remedy from the scaladoc
@@ -139,7 +106,7 @@ object Dbscan {
     */
   def clusterGrid(points: DataFrame, idCol: String, epsDeg: Double,
                   minPts: Int, cellDeg: Double, res: Int = 1): DataFrame = {
-    require(minPts >= 1 && cellDeg >= 0.01) // rep_id packing bound
+    require(cellDeg >= 0.01) // rep_id packing bound
     val withCell = points
       .withColumn("__cx",
         floor((col("lon") + lit(180.0)) / lit(cellDeg)).cast("long"))
@@ -160,71 +127,61 @@ object Dbscan {
     // the rep weight rides the ONE cell equi join as a carry column, so
     // the weighted core count needs no join-back against the rep table
     val pairs = KnnJoin.withinRadius(qs, ps, epsDeg, res, carry = Seq("__w"))
-      .select("q_id", "p_id", "__w").localCheckpoint(true)
-    val cores = pairs
-      .groupBy("q_id").agg(sum("__w").as("__n"))
+      .select("q_id", "p_id", "__w")
+    // k×k lattice blocks, k·cellDeg ≤ eps/2: same-block rep centers are
+    // pairwise < eps/√2 < eps apart
+    val k = math.max(1L, math.floor((epsDeg / 2.0) / cellDeg).toLong)
+    val superCell = reps.select(col("__rep").as("id"),
+      floor(col("__cx") / lit(k)).cast("long").as("__sc1"),
+      floor(col("__cy") / lit(k)).cast("long").as("__sc2"))
+    label(pairs, minPts, superCell,
+      withCell.select(col(idCol), col("__rep").as("id")), idCol)
+  }
+
+  /** The one DBSCAN labeling chain every front end shares:
+    *
+    *  - `pairs` (q_id, p_id, __w): every ordered ε-reachable node pair,
+    *    self included, __w = p's weight (1 for a point, the point count
+    *    for a grid rep); a node is core iff Σ__w ≥ `minPts`;
+    *  - `superCell` (id, __sc*): every node's supercell, chosen so that
+    *    any two members of one supercell are TRUE ε-graph neighbors;
+    *  - `members` (idCol, id): the node each output row takes its label
+    *    from.
+    *
+    * Clusters come from GEOMETRIC CONTRACTION of the core-core ε-graph:
+    * contraction only adds edges that exist in the true graph
+    * (intra-cell cliques), and every true edge survives as a supercell
+    * edge or an intra-cell pair, so components are IDENTICAL; the
+    * supernode id is the min core id of its cell, so the component
+    * minimum over supernodes IS the minimum over cores — the label the
+    * uncontracted closure computes. The contracted edge set is bounded
+    * by occupied-supercell geometry (cells of size eps/2 — the world
+    * holds ≤ 360·180/(eps/2)² of them), not by |pairs|: a 10⁸-member
+    * dense blob contributes a handful of supercell edges instead of 10¹⁶
+    * core-core edges through the component supersteps. A border node
+    * takes the min cluster_id of its core neighbors. Returns (idCol,
+    * role ∈ core|border|noise, cluster_id; −1 for noise).
+    */
+  private def label(pairs: DataFrame, minPts: Int, superCell: DataFrame,
+                    members: DataFrame, idCol: String): DataFrame = {
+    require(minPts >= 1)
+    // consumed by the count, the core-edge builder and the border assign
+    val ps = pairs.localCheckpoint(true)
+    val cores = ps.groupBy("q_id").agg(sum("__w").as("__n"))
       .filter(col("__n") >= minPts)
       .select(col("q_id").as("id"))
       .localCheckpoint(true)
-    // geometric contraction over k×k lattice blocks, k·cellDeg ≤ eps/2:
-    // same-block rep centers are pairwise < eps/√2 < eps apart (true
-    // ε-graph neighbors), so components over the contracted graph equal
-    // components over the full core-core edge set
-    val k = math.max(1L, math.floor((epsDeg / 2.0) / cellDeg).toLong)
-    val coreCell = reps.select(col("__rep").as("id"),
-        floor(col("__cx") / lit(k)).cast("long").as("__sc1"),
-        floor(col("__cy") / lit(k)).cast("long").as("__sc2"))
-      .join(cores, Seq("id"), "left_semi")
-    // no checkpoint — same reasoning as clusterST's coreLabels
-    val coreLabels = contractedCoreLabels(pairs.select("q_id", "p_id"),
-        coreCell)
-    val borderLabels = pairs
-      .join(cores.select(col("id").as("q_id")), Seq("q_id"), "left_anti")
-      .join(coreLabels.select(col("id").as("p_id"), col("cluster_id")),
-        Seq("p_id"))
-      .groupBy("q_id").agg(min(col("cluster_id")).as("cluster_id"))
-      .select(col("q_id").as("id"), col("cluster_id"))
-    val labeled = coreLabels.withColumn("role", lit("core"))
-      .unionByName(borderLabels.withColumn("role", lit("border")))
-    withCell.select(col(idCol), col("__rep").as("id"))
-      .join(labeled, Seq("id"), "left")
-      .select(col(idCol),
-        coalesce(col("role"), lit("noise")).as("role"),
-        coalesce(col("cluster_id"), lit(-1L)).as("cluster_id"))
-  }
-
-  /** Core labels via GEOMETRIC CONTRACTION of the core-core ε-graph —
-    * the optimization that keeps connected components off the full pair
-    * set. `coreCell` maps every core id to a supercell (columns named
-    * `__sc*`) chosen by the caller so that any two members of one
-    * supercell are TRUE ε-graph neighbors (pairwise distance ≤ eps/√2 <
-    * eps; for ST also |Δt| ≤ εt). Then:
-    *
-    *  - contraction only adds edges that exist in the true graph
-    *    (intra-cell cliques), and every true edge survives as a
-    *    supercell edge or intra-cell pair ⇒ components are IDENTICAL;
-    *  - the supernode id is the min core id of its cell (unique — cells
-    *    partition the cores), so the component minimum over supernodes
-    *    IS the component minimum over cores — the exact label the
-    *    uncontracted closure computes.
-    *
-    * The contracted edge set is bounded by occupied-supercell geometry
-    * (cells of size eps/2 — the world holds ≤ 360·180/(eps/2)² of them),
-    * not by |pairs|: a 10⁸-member dense blob contributes a handful of
-    * supercell edges instead of 10¹⁶ core-core edges through the
-    * component supersteps. Returns (id, cluster_id) for every core.
-    */
-  private def contractedCoreLabels(pairs: DataFrame,
-                                   coreCell: DataFrame): DataFrame = {
+    val edges = ps.select("q_id", "p_id")
+    val coreCell = superCell.join(cores, Seq("id"), "left_semi")
     val scCols = coreCell.columns.filter(_.startsWith("__sc")).toSeq
     val cellMin = coreCell.groupBy(scCols.map(col): _*)
       .agg(min(col("id")).as("__cid"))
     val coreNode = coreCell.join(cellMin, scCols)
       .select(col("id"), col("__cid"))
       .localCheckpoint(true)
-    // inner joins double as the old core/core semi-filters: only pairs
-    // with BOTH endpoints core survive, now carrying their supernode ids
-    val superEdges = pairs
+    // inner joins double as core/core semi-filters: only pairs with BOTH
+    // endpoints core survive, carrying their supernode ids
+    val superEdges = edges
       .join(coreNode.select(col("id").as("q_id"), col("__cid").as("__ca")),
         Seq("q_id"))
       .join(coreNode.select(col("id").as("p_id"), col("__cid").as("__cb")),
@@ -232,14 +189,30 @@ object Dbscan {
       .filter(col("__ca") =!= col("__cb"))
       .select(col("__ca").as("id_a"), col("__cb").as("id_b"))
     val cc = Dedup.connectedComponents(superEdges)
-    coreNode.join(cc, coreNode("__cid") === cc("id"), "left")
+    // no checkpoint: both consumers re-derive it as ONE join over the
+    // checkpointed coreNode and the (small or checkpointed) component
+    // labels — cheaper than another materialization job
+    val coreLabels = coreNode.join(cc, coreNode("__cid") === cc("id"), "left")
       .select(coreNode("id"),
         coalesce(col("cluster_id"), col("__cid")).as("cluster_id"))
+    val borderLabels = edges
+      .join(cores.select(col("id").as("q_id")), Seq("q_id"), "left_anti")
+      .join(coreLabels.select(col("id").as("p_id"), col("cluster_id")),
+        Seq("p_id"))
+      .groupBy("q_id").agg(min(col("cluster_id")).as("cluster_id"))
+      .select(col("q_id").as("id"), col("cluster_id"))
+    val labeled = coreLabels.withColumn("role", lit("core"))
+      .unionByName(borderLabels.withColumn("role", lit("border")))
+    members.join(labeled, Seq("id"), "left")
+      .select(col(idCol),
+        coalesce(col("role"), lit("noise")).as("role"),
+        coalesce(col("cluster_id"), lit(-1L)).as("cluster_id"))
   }
 
   /** Hot-region polygons: the convex hull of every cluster's member
-    * points (core + border; noise excluded) — what a tile layer
-    * displays on top of the point density. Labels join back to
+    * points (core + border; noise excluded) under `labels`, the
+    * (idCol, role, cluster_id) output of any labeler here — what a tile
+    * layer displays on top of the point density. Labels join back to
     * coordinates, then the hull runs in TWO bounded stages:
     *
     *  1. partial hulls per (cluster_id, `preCellDeg`-degree coarse
@@ -255,51 +228,22 @@ object Dbscan {
     * payoff at scale: no task ever materializes a whole cluster — a
     * percolated planetary cluster (10⁸+ members) reduces to per-cell
     * vertex sets bounded by each cell's hull size, and stage 2 sees
-    * only those vertices. Returns (cluster_id, n_pts, n_hull, area,
-    * wkt, xs, ys) — wkt a closed CCW `POLYGON ((…))` at 6 dp (LINESTRING
-    * for degenerate ≤2-point hulls), area the shoelace value rounded
-    * 6 dp, and xs/ys the same 6-dp vertices as unclosed `array<double>`
-    * rings, the input shape of the overlay joins.
+    * only those vertices. With [[clusterGrid]] labels the hulls still
+    * run over the member POINTS, so the polygons keep full point
+    * resolution while the ε-pair set stays bounded by occupied-cell
+    * geometry. Returns (cluster_id, n_pts, n_hull, area, wkt, xs, ys) —
+    * wkt a closed CCW `POLYGON ((…))` at 6 dp (LINESTRING for
+    * degenerate ≤2-point hulls), area the shoelace value rounded 6 dp,
+    * and xs/ys the same 6-dp vertices as unclosed `array<double>` rings,
+    * the input shape of the overlay joins.
     */
-  def clusterHulls(points: DataFrame, idCol: String, epsDeg: Double,
-                   minPts: Int, res: Int = 1,
-                   preCellDeg: Double = 15.0): DataFrame = {
-    val labels = cluster(points, idCol, epsDeg, minPts, res)
-      .filter(col("role") =!= "noise")
-      .select(col(idCol).as("__id"), col("cluster_id"))
-    hullsOfLabels(points, idCol, labels, preCellDeg)
-  }
-
-  /** [[clusterHulls]] with GRID (weighted) DBSCAN labeling — the
-    * dense-blob scale path for the hot-region product: labels come from
-    * [[clusterGrid]] (ε-pair set bounded by occupied-cell geometry, not
-    * Σ|blob|² point pairs), hulls still run over the actual member
-    * POINTS, so the polygons keep full point resolution even though the
-    * density labels are cell-resolution. On blob-shaped input this is
-    * the difference between minutes and seconds at 10⁵ points — and
-    * between feasible and intractable at 10⁸.
-    */
-  def clusterGridHulls(points: DataFrame, idCol: String, epsDeg: Double,
-                       minPts: Int, cellDeg: Double, res: Int = 1,
-                       preCellDeg: Double = 15.0): DataFrame = {
-    val labels = clusterGrid(points, idCol, epsDeg, minPts, cellDeg, res)
-      .filter(col("role") =!= "noise")
-      .select(col(idCol).as("__id"), col("cluster_id"))
-    hullsOfLabels(points, idCol, labels, preCellDeg)
-  }
-
-  /** Shared hull stage: coordinates × non-noise labels → one polygon per
-    * cluster via the partial-hull pre-reduce documented on
-    * [[clusterHulls]]. `labels` must be (__id, cluster_id).
-    */
-  private def hullsOfLabels(points: DataFrame, idCol: String,
-                            labels: DataFrame,
-                            preCellDeg: Double): DataFrame = {
+  def hulls(points: DataFrame, idCol: String, labels: DataFrame,
+            preCellDeg: Double = 15.0): DataFrame = {
     require(preCellDeg > 0.0)
     val spark = points.sparkSession
     import spark.implicits._
-    val members = points.select(col(idCol).as("__id"), col("lon"), col("lat"))
-      .join(labels, Seq("__id"))
+    val members = points.select(col(idCol), col("lon"), col("lat"))
+      .join(clustered(labels, idCol), Seq(idCol))
       .select(col("cluster_id"), col("lon"), col("lat"),
         floor(col("lon") / lit(preCellDeg)).cast("long").as("__gx"),
         floor(col("lat") / lit(preCellDeg)).cast("long").as("__gy"))
@@ -335,4 +279,38 @@ object Dbscan {
       }
       .toDF("cluster_id", "n_pts", "n_hull", "area", "wkt", "xs", "ys")
   }
+
+  /** Per-cluster moments of `points`(idCol, lon, lat) under `labels`
+    * (any labeler's output; noise excluded): n_pts and the sums sx, sx2,
+    * sy, sy2, sxy of per-row 1e-9-quantized longs, so the distributed
+    * sums are order-insensitive. The sums are exact `decimal(38,0)`: a
+    * long sum of lon² over a few hundred thousand points near ±180°
+    * would overflow, and decimal→double rounds correctly like
+    * long→double.
+    */
+  def clusterMoments(points: DataFrame, idCol: String,
+                     labels: DataFrame): DataFrame = {
+    def q9(c: Column) =
+      floor(c * lit(1e9) + lit(0.5)).cast("long").cast("decimal(38,0)")
+    points.join(clustered(labels, idCol), Seq(idCol))
+      .select(col("cluster_id"),
+        q9(col("lon")).as("xl"), q9(col("lon") * col("lon")).as("xl2"),
+        q9(col("lat")).as("yl"), q9(col("lat") * col("lat")).as("yl2"),
+        q9(col("lon") * col("lat")).as("xyl"))
+      .groupBy("cluster_id")
+      .agg(count(lit(1)).as("n_pts"),
+        sum(col("xl")).as("sx"), sum(col("xl2")).as("sx2"),
+        sum(col("yl")).as("sy"), sum(col("yl2")).as("sy2"),
+        sum(col("xyl")).as("sxy"))
+  }
+
+  /** A [[clusterMoments]] sum as a per-point mean in degrees (or
+    * degrees²).
+    */
+  def momentMean(sum: Column): Column =
+    sum.cast("double") / lit(1e9) / col("n_pts")
+
+  /** (idCol, cluster_id) of the non-noise rows of a labeler's output. */
+  private def clustered(labels: DataFrame, idCol: String): DataFrame =
+    labels.filter(col("role") =!= "noise").select(col(idCol), col("cluster_id"))
 }

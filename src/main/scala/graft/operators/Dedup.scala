@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.text
@@ -529,6 +529,26 @@ object Dedup {
       .withColumn("is_contaminated", col("contaminated_frac") >= threshold)
   }
 
+  /** Rows a driver-side fast path ([[connectedComponents]],
+    * [[CellCompact.compact]]) may collect: a quarter of the driver heap
+    * at 512 B per row, the measured 434 B/edge live peak of the
+    * union-find path rounded up (PLANS.md, "Driver-collect bound").
+    */
+  private[operators] val DriverCollectMax: Long =
+    Runtime.getRuntime.maxMemory / 4 / 512
+
+  /** All rows of `ds` if it has at most `collectMax`, else None — decided
+    * by ONE job that brings at most collectMax + 1 rows to the driver (no
+    * sizing count, no checkpoint before the decision). The limit stays
+    * in Int range, so collectMax = Long.MaxValue means "always collect".
+    */
+  private[operators] def collectAtMost[T](ds: Dataset[T],
+                                          collectMax: Long): Option[Array[T]] = {
+    val cap = math.min(math.max(collectMax, 0L), Int.MaxValue - 1L).toInt + 1
+    val rows = ds.limit(cap).collect()
+    if (rows.length < cap) Some(rows) else None
+  }
+
   /** Connected components over a near-dup pair list — the step between
     * pair detection and "keep one canonical doc per duplicate family".
     * Min-label propagation in driver-coordinated supersteps (the standard
@@ -551,7 +571,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20,
-                          collectMax: Long = -1L): DataFrame = {
+                          collectMax: Long = DriverCollectMax): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val edges = pairs.select(col(idA).cast("long").as("src"),
@@ -562,25 +582,17 @@ object Dedup {
     val uniq = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-      .distinct().localCheckpoint(true)
+      .distinct()
     // Scale-adaptive fast path: a BOUNDED edge set (the contracted
     // supercell graphs of Dbscan, polygonize's region adjacency, small
     // dedup families) resolves in one driver-side union-find instead of
     // O(log diameter) supersteps of ~3 jobs each — the superstep chain's
     // fixed per-job latency dominates whenever the data is small (guide
-    // §1.2: fix the algorithm before the configuration). Above the
-    // threshold (env SPARK_GRAFT_CC_COLLECT_MAX, default 4M edges ≈
-    // 200 MB of boxed tuples on the driver — sized for a production
-    // driver heap, not this sandbox) the distributed superstep path runs
-    // unchanged, so 100 TB edge sets never touch the driver.
-    // collectMax < 0 (the default) defers to the env knob; an explicit
-    // value wins — tests pass 0 to force the superstep path
-    val cMax =
-      if (collectMax >= 0L) collectMax
-      else sys.env.getOrElse("SPARK_GRAFT_CC_COLLECT_MAX", "4000000").toLong
-    val nEdges = uniq.count()
-    if (nEdges <= cMax) {
-      val es = uniq.as[(Long, Long)].collect()
+    // §1.2: fix the algorithm before the configuration). Above
+    // `collectMax` edges the distributed superstep path runs, so 100 TB
+    // edge sets never touch the driver; tests pass 0 to force it.
+    val small = collectAtMost(uniq.as[(Long, Long)], collectMax)
+    if (small.isDefined) {
       // union-find, union-by-min root + path compression: the root of a
       // set is always its minimum member, so the final find(id) IS the
       // transitive-closure min label the superstep path computes
@@ -592,7 +604,7 @@ object Dedup {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      es.foreach { case (a, b) =>
+      small.get.foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
         val ra = find(a); val rb = find(b)
@@ -603,8 +615,9 @@ object Dedup {
       return spark.createDataset(out.toIndexedSeq)
         .toDF("id", "cluster_id")
     }
-    val sym = uniq
-      .union(uniq.select(col("dst").as("src"), col("src").as("dst")))
+    val cut = uniq.localCheckpoint(true)
+    val sym = cut
+      .union(cut.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))

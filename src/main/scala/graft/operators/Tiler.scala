@@ -39,10 +39,6 @@ final case class TileRowF(zoom: Int, x: Long, y: Long, n_features: Int,
   * one compact artifact per group.
   */
 object Tiler {
-  /** features(lon, lat, kind, name, admin_name?) → tiles at the given
-    * zooms. `cap` = max features retained per tile (deterministic
-    * rank: hash of feature identity).
-    */
   /** Zoom fan-out + tile assignment + feature key (pure column math, no
     * shuffle). Output carries zoom, tile_id, fkey — ready for a resume
     * anti-join before the heavy encode.
@@ -59,6 +55,10 @@ object Tiler {
       .withColumn("fkey", xxhash64(col("lon"), col("lat"), col("kind"), col("name")))
   }
 
+  /** features(lon, lat, kind?, name?, admin_name?) → tiles at the given
+    * zooms: [[assignTiles]] then [[encodeTiles]]. `cap` = max features
+    * retained per tile (deterministic rank: hash of feature identity).
+    */
   def buildTiles(features: DataFrame, zooms: Seq[Int], cap: Int = 4096,
                  layerName: String = "features"): Dataset[TileRow] =
     encodeTiles(assignTiles(features, zooms), cap, layerName)

@@ -205,9 +205,9 @@ class MvtEncoderSpec extends AnyFunSuite {
 
   test("encodePointTile is byte-identical to the generic path (randomized)") {
     // the fast path must reproduce the generic encoder EXACTLY — ids
-    // 1..n, kind tag always, name tag only when nonempty, shared
-    // key/value tables in first-appearance order
-    val kinds = Array("labeled", "geouri", "pair", "gazetteer", "point")
+    // 1..n, kind tag only when non-null, name tag only when nonempty,
+    // shared key/value tables in first-appearance order
+    val kinds = Array("labeled", "geouri", "pair", "gazetteer", "point", null)
     val names = Array("", "paris", "berlin", "", "rio", "paris", "labeled")
     val rng = new java.util.Random(7)
     for (trial <- 0 until 50) {
@@ -222,7 +222,7 @@ class MvtEncoderSpec extends AnyFunSuite {
       val ns = Array.fill(n)(names(rng.nextInt(names.length)))
       val generic = encodeTile(Seq("features" -> (0 until n).map { i =>
         Feature(i.toLong + 1, GeomPoint, Array(Array((xs(i), ys(i)))),
-          Seq("kind" -> SVal(ks(i))) ++
+          (if (ks(i) != null) Seq("kind" -> SVal(ks(i))) else Nil) ++
             (if (ns(i).nonEmpty) Seq("name" -> SVal(ns(i))) else Nil))
       }))
       val fast = encodePointTile("features", xs, ys, ks, ns)

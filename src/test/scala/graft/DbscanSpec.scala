@@ -158,6 +158,34 @@ class DbscanSpec extends AnyFunSuite {
     assert(g2.map(_._3).distinct.length === 2) // one cluster per blob
   }
 
+  test("one chain, two front ends: grid DBSCAN with one point per rep labels exactly like point DBSCAN") {
+    import spark.implicits._
+    // every point sits on its own cell center (exact in binary at
+    // cellDeg 0.5) and doc_id = rep_id, so both front ends see the same
+    // nodes, pairs, weights and ids: only the supercells differ
+    val cell = 0.5
+    val data = for {
+      cx <- 360L until 420L; cy <- 180L until 210L
+      density = if (cx < 380) 0.6 else if (cx < 400) 0.15 else 0.02
+      if graft.core.Rng.uniform(7L, cx * 1000L + cy, 1L) < density
+    } yield (cx * 100000L + cy, (cx.toDouble + 0.5) * cell - 180.0,
+      (cy.toDouble + 0.5) * cell - 90.0)
+    val df = data.toDF("doc_id", "lon", "lat")
+    def labels(out: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
+      out.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val exact = labels(graft.operators.Dbscan.cluster(df, "doc_id",
+      epsDeg = 1.0, minPts = 5, res = 2))
+    val grid = labels(graft.operators.Dbscan.clusterGrid(df, "doc_id",
+      epsDeg = 1.0, minPts = 5, cellDeg = cell, res = 2))
+    assert(exact.values.map(_._1).toSet === Set("core", "border", "noise"))
+    assert(exact.values.count(_._1 == "core") > 1)
+    assert(grid.view.mapValues(_._1).toMap === exact.view.mapValues(_._1).toMap)
+    def partition(m: Map[Long, (String, Long)]): Set[Set[Long]] =
+      m.filter(_._2._1 != "noise").groupBy(_._2._2).values.map(_.keySet).toSet
+    assert(partition(grid) === partition(exact))
+    assert(grid === exact)
+  }
+
   test("convex hull kernel: containment, vertex subset, known square, degenerate inputs") {
     import graft.core.ConvexHull
     // known case: unit square + interior/edge points → the 4 corners
@@ -196,7 +224,7 @@ class DbscanSpec extends AnyFunSuite {
     val labels = graft.operators.Dbscan.cluster(df, "doc_id", 20.0, 8, res = 0)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     val hulls = graft.operators.Dbscan
-      .clusterHulls(df, "doc_id", 20.0, 8, res = 0)
+      .hulls(df, "doc_id", graft.operators.Dbscan.cluster(df, "doc_id", 20.0, 8, res = 0))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getString(4)))).toMap
     val wantClusters = labels.values.filter(_._1 != "noise").map(_._2).toSet
@@ -224,9 +252,10 @@ class DbscanSpec extends AnyFunSuite {
         (i % 8) * 20.0 - 70.0 + lat * 0.05)
     }
     val line = (0 until 12).map(k => (1000L + k, -20.0 + k * 0.5, 80.0))
+    val df = (blobs ++ line).toDF("doc_id", "lon", "lat")
     val rows = graft.operators.Dbscan
-      .clusterHulls((blobs ++ line).toDF("doc_id", "lon", "lat"), "doc_id",
-        epsDeg = 5.0, minPts = 8, res = 1)
+      .hulls(df, "doc_id", graft.operators.Dbscan.cluster(df, "doc_id",
+        epsDeg = 5.0, minPts = 8, res = 1))
       .select("n_hull", "wkt", "xs", "ys").collect()
     val kinds = rows.map { r =>
       val (nHull, wkt) = (r.getLong(0), r.getString(1))
@@ -265,7 +294,9 @@ class DbscanSpec extends AnyFunSuite {
       case (mode, wholeStage) =>
         withConf("spark.sql.codegen.factoryMode" -> mode,
             "spark.sql.codegen.wholeStage" -> wholeStage) {
-          val got = SparkEntry.clusterMoments(pts).collect()
+          val got = graft.operators.Dbscan.clusterMoments(pts, "doc_id",
+            graft.operators.Dbscan.clusterGrid(pts, "doc_id", epsDeg = 5.0,
+              minPts = 8, cellDeg = 0.25, res = 1)).collect()
           assert(got.length === 1, mode)
           val r = got.head
           assert(r.getAs[Long]("n_pts") === n.toLong, mode)
@@ -295,11 +326,12 @@ class DbscanSpec extends AnyFunSuite {
     // byte-identical rows
     import spark.implicits._
     val df = pts(400).toDF("doc_id", "lon", "lat")
+    val labels = graft.operators.Dbscan.cluster(df, "doc_id", 20.0, 8, res = 0)
     val coarse = graft.operators.Dbscan
-      .clusterHulls(df, "doc_id", 20.0, 8, res = 0, preCellDeg = 1e6)
+      .hulls(df, "doc_id", labels, preCellDeg = 1e6)
       .collect().map(_.toSeq).toSet
     val fine = graft.operators.Dbscan
-      .clusterHulls(df, "doc_id", 20.0, 8, res = 0, preCellDeg = 7.0)
+      .hulls(df, "doc_id", labels, preCellDeg = 7.0)
       .collect().map(_.toSeq).toSet
     assert(coarse === fine)
   }
@@ -324,11 +356,12 @@ class DbscanSpec extends AnyFunSuite {
         (coords.map(_(0)).min, coords.map(_(1)).min,
           coords.map(_(0)).max, coords.map(_(1)).max)
       }.sortBy(b => (b._1, b._2)).toSeq
-    val exact = bboxes(graft.operators.Dbscan
-      .clusterHulls(df, "doc_id", epsDeg = 5.0, minPts = 8, res = 1))
-    val grid = bboxes(graft.operators.Dbscan
-      .clusterGridHulls(df, "doc_id", epsDeg = 5.0, minPts = 8,
-        cellDeg = cell, res = 1))
+    val exact = bboxes(graft.operators.Dbscan.hulls(df, "doc_id",
+      graft.operators.Dbscan.cluster(df, "doc_id", epsDeg = 5.0, minPts = 8,
+        res = 1)))
+    val grid = bboxes(graft.operators.Dbscan.hulls(df, "doc_id",
+      graft.operators.Dbscan.clusterGrid(df, "doc_id", epsDeg = 5.0,
+        minPts = 8, cellDeg = cell, res = 1)))
     assert(exact.length === 6 && grid.length === 6)
     exact.zip(grid).foreach { case (e, g) =>
       // grid labels are cell-resolution: an edge point can flip in/out,

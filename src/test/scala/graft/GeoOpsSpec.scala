@@ -44,8 +44,9 @@ class PolyTilerSpec extends AnyFunSuite {
       (i.toLong, (i % 8) * 45.0 - 157.5 + lon * 0.05,
         (i % 8) * 20.0 - 70.0 + lat * 0.05)
     }.toDF("doc_id", "lon", "lat")
-    val hulls = graft.operators.Dbscan.clusterHulls(pts, "doc_id",
-      epsDeg = 5.0, minPts = 8, res = 1)
+    val hulls = graft.operators.Dbscan.hulls(pts, "doc_id",
+      graft.operators.Dbscan.cluster(pts, "doc_id", epsDeg = 5.0, minPts = 8,
+        res = 1))
     val nHulls = hulls.count()
     assert(nHulls === 8L)
     val tiles = graft.operators.PolyTiler

@@ -176,6 +176,22 @@ class TilerSpec extends AnyFunSuite {
     }
   }
 
+  test("a null kind encodes as a feature without a kind tag") {
+    import spark.implicits._
+    def layerOf(kind: String, name: String) = {
+      val tiles = graft.operators.Tiler.buildTiles(
+        Seq((2.35, 48.85, kind, name)).toDF("lon", "lat", "kind", "name"),
+        Seq(4)).collect()
+      assert(tiles.length === 1 && tiles.head.n_features === 1)
+      MvtReader.readTile(tiles.head.mvt_bytes).head
+    }
+    val named = layerOf(null, "paris")
+    assert(named.keys === Seq("name"))
+    assert(named.features.map(_.tags) === Seq(Seq(0, 0)))
+    val bare = layerOf(null, null)
+    assert(bare.keys.isEmpty && bare.features.map(_.tags) === Seq(Nil))
+  }
+
   test("a null coordinate fails the encode instead of landing at 0.0") {
     import spark.implicits._
     val df = Seq((Some(2.35), 48.85, "a"), (None, 48.86, "b")).toDF("lon", "lat", "name")

@@ -167,7 +167,8 @@ class TopKAggParitySpec extends AnyFunSuite {
   private val Fallback = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
   private val Names = Array(null, "", "Zürich", "東京都", "𝔊𝔢𝔬 😀", "naïve café")
 
-  /** (lon, lat, kind, name, fkey override) rows, spread over 3 partitions.
+  /** (lon, lat, kind, name, fkey override) rows, spread over 3 partitions;
+    * some kinds are null.
     * 60% fall in one hot tile. 40 hot rows share one (fkey, lon, lat) and
     * rank first, so the tie order decides which of them survive the cap;
     * four more tie on (fkey, ±0.0, lat).
@@ -181,9 +182,11 @@ class TopKAggParitySpec extends AnyFunSuite {
       val lat = if (hot) 48.80 + Rng.uniform(seed, i, 4L) * 0.05
                 else Rng.uniform(seed, i, 5L) * 170.0 - 85.0
       val name = if (i % 3 == 0) Names(i / 3 % Names.length) else s"f$i"
-      (lon, lat, if (i % 7 == 0) "city" else "point", name, Option.empty[Long])
+      val kind = if (i % 11 == 0) null else if (i % 7 == 0) "city" else "point"
+      (lon, lat, kind, name, Option.empty[Long])
     } ++ (0 until 40).map { k =>
-      (2.31, 48.81, "point", if (k % 5 == 0) Names(k / 5 % Names.length) else s"tie$k",
+      (2.31, 48.81, if (k % 4 == 0) null else "point",
+        if (k % 5 == 0) Names(k / 5 % Names.length) else s"tie$k",
         Some(Long.MinValue + 1))
     } ++ Seq(-0.0, 0.0, 0.0, -0.0).zipWithIndex.map { case (lon, k) =>
       (lon, 10.0, "point", Names(k), Some(Long.MinValue + 2))
@@ -226,6 +229,7 @@ class TopKAggParitySpec extends AnyFunSuite {
     val fs = kept.flatMap(_._6)
     assert(kept.exists(_._4 == Cap))
     assert(fs.exists(_._5 == null) && fs.exists(_._5 == "") && fs.exists(_._5 == "𝔊𝔢𝔬 😀"))
+    assert(fs.exists(_._4 == null) && fs.exists(f => f._4 == null && f._5 == null))
     assert(fs.map(_._2).toSet.contains(java.lang.Double.doubleToRawLongBits(-0.0)))
     // two half batches regrouped by tile_id, as a serving compaction does
     val halves = Seq(0, 1).map(h => Tiler.withStats(Tiler.encodeTilesKeepFeatures(

@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * setup, not pipeline.
   *
   * Scaling evidence (N→4N gate, VERDICT r1 item 2) runs FIRST under its
-  * own reserved wall budget (SPARK_GRAFT_SCALE_BUDGET) so a slow query
+  * own reserved wall budget (ScaleBudget) so a slow query
   * sweep can never starve the gated artifact of its retries (the r2
   * failure mode): the same pipeline on identical input at local[2] vs
   * local[8], with
@@ -39,33 +39,32 @@ import org.apache.spark.sql.SparkSession
   *    attributable to a specific stage.
   */
 object Bench {
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      // upper bound only — AQE coalesces; 4×cores gives the reduce side
-      // several waves of small tasks, so one slow task can't stretch a
-      // single-wave stage (the 8-core tail observed in the stage audit)
-      .config("spark.sql.shuffle.partitions", math.max(cpus * 4, 32).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // small synthetic tables must still split across all cores —
-      // at 100 TB the default 128 MB splits are right, here they serialize
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // object-agg buffers are growth-bounded → keep hashing far longer
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // shuffle on tmpfs: the sandbox disk shows burst-credit-like IOPS
-      // collapse under sustained writes — RAM-backed local dirs decouple
-      // measurements from it
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private val Pages = 200000L
+  private val Budget = 420.0
+  // the scaling gate gets the FIRST slice of the wall budget: in r2 the
+  // query sweep hit a host-steal window, burned the shared budget, and
+  // the scaling loop never got its retries — the one artifact with a
+  // hard ≥0.8 gate must not depend on everything before it running clean
+  private val ScaleBudget = math.min(240.0, Budget * 0.5)
+  // scaling input is 8× the headline table: the fused-encode engine runs
+  // 200k pages in ~1 s at 8 cores, so fixed per-job cost (planning,
+  // stage setup, task dispatch) would eat 15%+ of a small scaling run
+  // and read as false inefficiency — measured sweep: 400k → eff 0.78,
+  // 800k → 0.81, 1.6M → 0.86 with work/cpu_ratio ≈ 1.03 (same code,
+  // same host window). 1.6M keeps a pair ~35 s, well inside the
+  // reserved budget's ~5 retries.
+  private val ScalePages = Pages * 8
+  // N → 4N cores. local[2] vs local[8] (not 8 vs 32): a 32-vCPU
+  // shared host saturates shared memory bandwidth / co-tenant CPU well
+  // below 32 threads, which would measure the HOST's ceiling, not the
+  // engine's scaling. 2→8 stays in the regime where added cores get
+  // real cycles — the same 4× ratio the gate asks for.
+  private val CoresLow = 2
+  private val CoresHigh = 8
+  // pairs stop EARLY on the first passing pair, so a higher ceiling
+  // only spends wall time when the host is in a bad steal window —
+  // exactly when more attempts are needed (still budget-bounded)
+  private val MaxPairs = 5
 
   private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -96,18 +95,9 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val nPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "200000").toLong
-    val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
-    val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "420").toDouble
-    // the scaling gate gets the FIRST slice of the wall budget: in r2 the
-    // query sweep hit a host-steal window, burned the shared budget, and
-    // the scaling loop never got its retries — the one artifact with a
-    // hard ≥0.8 gate must not depend on everything before it running clean
-    val scaleBudget = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET",
-      math.min(240.0, budget * 0.5).toString).toDouble
-    val pagesPath = s"/tmp/graft-bench-pages-$nPages"
-    val warmPath = s"/tmp/graft-bench-pages-warm-${nPages / 10}"
+    val pagesPath = s"/tmp/graft-bench-pages-$Pages"
+    val warmPath = s"/tmp/graft-bench-pages-warm-${Pages / 10}"
+    val scalePath = s"/tmp/graft-bench-pages-$ScalePages"
 
     var genSecs = 0.0
     def ensurePagesWith(s: SparkSession, path: String, n: Long): Unit =
@@ -118,43 +108,20 @@ object Bench {
         }
         genSecs += t
       }
-    // scaling input defaults to 8× the headline table: the fused-encode
-    // engine runs 200k pages in ~1 s at 8 cores, so fixed per-job cost
-    // (planning, stage setup, task dispatch) would eat 15%+ of a small
-    // scaling run and read as false inefficiency — measured sweep:
-    // 400k → eff 0.78, 800k → 0.81, 1.6M → 0.86 with work/cpu_ratio
-    // ≈ 1.03 (same code, same host window). 1.6M keeps a pair ~35 s,
-    // well inside the reserved budget's ~5 retries.
-    val scalePages = sys.env.get("SPARK_GRAFT_SCALE_PAGES").map(_.toLong)
-      .getOrElse(nPages * 8)
-    val scalePath =
-      if (scalePages == nPages) pagesPath else s"/tmp/graft-bench-pages-$scalePages"
     locally { // generate all inputs up front in a throwaway full-core session
-      val s = session(cpus)
-      ensurePagesWith(s, pagesPath, nPages)
-      ensurePagesWith(s, warmPath, nPages / 10)
-      if (doScaling && scalePath != pagesPath) ensurePagesWith(s, scalePath, scalePages)
+      val s = Main.session()
+      ensurePagesWith(s, pagesPath, Pages)
+      ensurePagesWith(s, warmPath, Pages / 10)
+      ensurePagesWith(s, scalePath, ScalePages)
       s.stop()
     }
 
     // ---- scaling evidence FIRST, inside its reserved budget ----
-    // N → 4N cores. local[2] vs local[8] (not 8 vs 32): the 32-vCPU
-    // sandbox host saturates shared memory bandwidth / co-tenant CPU well
-    // below 32 threads, which would measure the HOST's ceiling, not the
-    // engine's scaling. 2→8 stays in the regime where added cores get
-    // real cycles — the same 4× ratio the gate asks for.
-    var scalingJson = ""
-    if (doScaling) {
-      val coresLow = sys.env.getOrElse("SPARK_GRAFT_SCALE_LOW", "2").toInt
-      val coresHigh = sys.env.getOrElse("SPARK_GRAFT_SCALE_HIGH", "8").toInt
-      // pairs stop EARLY on the first passing pair, so a higher ceiling
-      // only spends wall time when the host is in a bad steal window —
-      // exactly when more attempts are needed (still budget-bounded)
-      val maxPairs = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "5").toInt
+    val scalingJson = {
       final case class Run(secs: Double, taskSec: Double, cpuSec: Double,
                            stages: Seq[(String, Double)])
       def once(cores: Int): Run = {
-        val s = session(cores)
+        val s = Main.session(cores)
         val listener = new graft.plans.TaskTimeListener
         s.sparkContext.addSparkListener(listener)
         pipeline(s, warmPath) // JIT + codegen + planner warmup (unmeasured)
@@ -171,7 +138,7 @@ object Bench {
         run
       }
       def effOf(p: (Run, Run)): Double =
-        (p._1.secs / p._2.secs) / (coresHigh.toDouble / coresLow)
+        (p._1.secs / p._2.secs) / (CoresHigh.toDouble / CoresLow)
       def workRatioOf(p: (Run, Run)): Double = p._2.taskSec / p._1.taskSec
       // work_ratio must be ≈1 from BOTH sides: ≪1 means the low run was
       // steal-inflated (fake efficiency), ≫1 means the high run did extra
@@ -185,9 +152,9 @@ object Bench {
       def scaleElapsed: Double = (System.nanoTime() - scaleStart) / 1e9
       val pairs = scala.collection.mutable.ArrayBuffer.empty[(Run, Run)]
       while (pairs.isEmpty ||
-          (!pairs.exists(passes) && pairs.length < maxPairs
-            && scaleElapsed < scaleBudget)) {
-        pairs += ((once(coresLow), once(coresHigh)))
+          (!pairs.exists(passes) && pairs.length < MaxPairs
+            && scaleElapsed < ScaleBudget)) {
+        pairs += ((once(CoresLow), once(CoresHigh)))
       }
       // best = highest efficiency among WORK-CONSERVING pairs (a
       // steal-inflated low run fakes high efficiency but shows up as
@@ -210,21 +177,21 @@ object Bench {
       val eff = effOf(best)
       val stagesJson = Seq(("low", lo), ("high", hi)).map { case (tag, r) =>
         "\"stage_sec_" + tag + "\":{" + r.stages.map { case (n, sec) =>
-          "\"" + n.replace("\\", "\\\\").replace("\"", "\\\"") + "\":" + fmt(sec, 1)
+          graft.plans.Lineage.jsonStr(n) + ":" + fmt(sec, 1)
         }.mkString(",") + "}"
       }.mkString(",")
       val allPairs = pairs.map(p =>
         s"""{"sec_low":${fmt(p._1.secs)},"sec_high":${fmt(p._2.secs)},""" +
           s""""efficiency":${fmt(effOf(p))}}""").mkString("[", ",", "]")
-      scalingJson = s""","scaling":{"gate":"$gate","pages":$scalePages,"cores_low":$coresLow,""" +
-        s""""cores_high":$coresHigh,"pairs":${pairs.length},""" +
+      s""","scaling":{"gate":"$gate","pages":$ScalePages,"cores_low":$CoresLow,""" +
+        s""""cores_high":$CoresHigh,"pairs":${pairs.length},""" +
         s""""sec_low":${fmt(lo.secs)},"sec_high":${fmt(hi.secs)},""" +
         s""""task_sec_low":${fmt(lo.taskSec, 1)},"task_sec_high":${fmt(hi.taskSec, 1)},""" +
         s""""cpu_sec_low":${fmt(lo.cpuSec, 1)},"cpu_sec_high":${fmt(hi.cpuSec, 1)},""" +
         s""""work_ratio":${fmt(hi.taskSec / lo.taskSec)},""" +
         s""""cpu_ratio":${fmt(hi.cpuSec / lo.cpuSec)},""" +
-        s""""pages_per_sec_low":${fmt(scalePages / lo.secs, 1)},""" +
-        s""""pages_per_sec_high":${fmt(scalePages / hi.secs, 1)},""" +
+        s""""pages_per_sec_low":${fmt(ScalePages / lo.secs, 1)},""" +
+        s""""pages_per_sec_high":${fmt(ScalePages / hi.secs, 1)},""" +
         s""""speedup":${fmt(speedup)},"efficiency":${fmt(eff)},""" +
         s""""all_pairs":$allPairs,$stagesJson}"""
     }
@@ -237,7 +204,7 @@ object Bench {
     // protected front of the run, min-of-2 UNCONDITIONALLY (a second
     // rep is ~3 s — never budget-gated), with cpu_sec next to wall so
     // a stolen window is attributable from the artifact alone. ----
-    val spark = session(cpus)
+    val spark = Main.session()
     val pListener = new graft.plans.TaskTimeListener
     spark.sparkContext.addSparkListener(pListener)
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm
@@ -279,11 +246,11 @@ object Bench {
       "q97_idw_grid", "q98_tri_overlay", "q99_zonal_stats",
       "q100_track_simplify", "q101_dbscan", "q102_st_dbscan",
       "q103_cluster_hulls", "q104_grid_dbscan", "q105_convex_overlay",
-      "q106_grid_hulls", "q108_contour_segments", "q109_polygonize",
-      "q110_clip_area", "q112_nearest_polygon", "q113_border_crossings",
+      "q106_grid_hulls", "q107_hull_admin_overlay", "q108_contour_segments",
+      "q109_polygonize", "q110_clip_area", "q111_zonal_overlap",
+      "q112_nearest_polygon", "q113_border_crossings",
       "q114_region_exposure", "q115_dwell_episodes", "q116_od_flows", "q117_cluster_dispersion", "q118_emerging_hotspots",
       "q119_cluster_anisotropy")
-    val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") == "1"
     // per-query shuffle-write MB + cpu_sec: the plan-quality and
     // steal-attribution evidence. Both are captured from the WINNING
     // (min-wall) rep, so the published seconds, MB and CPU all describe
@@ -296,7 +263,7 @@ object Bench {
     // 49.8 s for a 0.9 s query in BENCH_r02, and a one-shot artifact
     // cannot distinguish that from a real regression.
     final case class QRep(secs: Double, mb: Double, cpuSec: Double)
-    val results = if (!doQueries) Seq.empty else headline.map { name =>
+    val results = headline.map { name =>
       val fn = SparkEntry.queries(name)
       // None = the rep FAILED: a fast exception must not enter the
       // min() and mask a real measurement with a near-zero time
@@ -315,7 +282,7 @@ object Bench {
       // past the wall budget, fall back to single-shot so a steal window
       // can't make the sweep unbounded (the scaling gate and the headline
       // pipeline already ran in the protected front of the budget)
-      val t2 = if (elapsed < budget) rep() else t1
+      val t2 = if (elapsed < Budget) rep() else t1
       val disagree = (for (a <- t1; b <- t2) yield
         math.max(a.secs, b.secs) / math.max(1e-9, math.min(a.secs, b.secs)) > 3.0)
         .getOrElse(false)
@@ -323,7 +290,7 @@ object Bench {
       // lone rep could be the steal-inflated one and must not publish
       // unguarded
       val lone = Seq(t1, t2).flatten.size == 1
-      val reps = (if ((disagree || lone) && elapsed < budget)
+      val reps = (if ((disagree || lone) && elapsed < Budget)
                     Seq(t1, t2, rep())
                   else Seq(t1, t2)).flatten
       (name, reps.minByOption(_.secs).getOrElse(QRep(-1.0, 0.0, 0.0)))
@@ -344,8 +311,8 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
       s""""shuffle_write_mb":$shuf,"cpu_sec":$cpu,""" +
       s""""pipeline_reps_sec":[${pReps.map(r => fmt(r._2)).mkString(",")}],""" +
-      s""""sf":"$sfDir","pages":$nPages,"gen_sec":${fmt(genSecs)},"tiles":$pTiles,""" +
+      s""""sf":"$sfDir","pages":$Pages,"gen_sec":${fmt(genSecs)},"tiles":$pTiles,""" +
       s""""tiles_per_sec":${fmt(pTiles / pipeBest, 1)},""" +
-      s""""pages_per_sec":${fmt(nPages / pipeBest, 1)}$scalingJson}""")
+      s""""pages_per_sec":${fmt(Pages / pipeBest, 1)}$scalingJson}""")
   }
 }

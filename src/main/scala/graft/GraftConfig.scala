@@ -21,7 +21,7 @@ object GraftConfig {
   import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
   import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-  private lazy val mapper = {
+  private[graft] lazy val mapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)
     m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,18 +18,22 @@ import org.apache.spark.sql.functions._
   * grouped reduction → persist + QA tables).
   */
 object Main {
-  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")): SparkSession = {
+  /** The one SparkSession every entry point runs on (the pipeline CLI,
+    * `Bench`, `Verify`, `Explain`, the tools). A master already in the
+    * SparkConf — spark-submit's `--master` — wins; otherwise the session
+    * runs `local[cores]`.
+    */
+  def session(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-mvt")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
+      .master(master(new SparkConf().getOption("spark.master"), cores))
+      .appName("graft")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
       // small synthetic tables must still split across all cores —
       // at 100 TB the default 128 MB splits are right, here they serialize
-      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "512k")
       // object-agg buffers are growth-bounded → keep hashing far longer
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
@@ -39,9 +44,23 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      shufflePartitions(spark.sparkContext.defaultParallelism).toLong)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The master a new session runs on: a preset one (spark-submit's
+    * `--master`) is kept, an absent one becomes `local[cores]`.
+    */
+  def master(preset: Option[String], cores: Int): String =
+    preset.getOrElse(s"local[$cores]")
+
+  /** Upper bound only — AQE coalesces; 4× the task slots gives the reduce
+    * side several waves of small tasks, so one slow task can't stretch a
+    * single-wave stage (the 8-core tail observed in the stage audit).
+    */
+  def shufflePartitions(parallelism: Int): Int = math.max(parallelism * 4, 32)
 
   /** The page table: materialized to parquet once (the "Iceberg-style
     * input table" of BASELINE.json input_hint — at 100 TB this is the
@@ -96,12 +115,6 @@ object Main {
     graft.plans.Lineage.commit(withStats, cfg.outDir,
       s"pages=${cfg.nPages} zooms=${cfg.zooms.mkString(",")} resume=${cfg.resume}")
   }
-
-  /** Back-compat wrapper used by tests. */
-  def run(spark: SparkSession, outDir: String, nPages: Long,
-          zooms: Seq[Int], resume: Boolean): graft.plans.Lineage.Snapshot =
-    run(spark, GraftConfig(outDir = outDir, nPages = nPages, zooms = zooms,
-      resume = resume))
 
   /** The full product story in one invocation (`--e2e`): crawl pages →
     * curated corpus (lineage root `outDir/curated`) → geo features →
@@ -172,6 +185,24 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
+    // storage maintenance: sweep crash-orphaned uncommitted snapshot dirs
+    // (file-system only, so it runs before any Spark session opens)
+    if (args.contains("--vacuum")) {
+      val pos = args.filterNot(_.startsWith("--"))
+      val outDir = pos.headOption.getOrElse("/tmp/graft-tiles")
+      val hours = pos.lift(1).map(_.toDouble).getOrElse(24.0)
+      val removed = graft.plans.Lineage.vacuumOrphans(outDir,
+        (hours * 3600 * 1000).toLong)
+      println(if (removed.isEmpty) "no orphans older than the age guard"
+        else s"vacuumed ${removed.length} orphaned dirs:\n  " +
+          removed.mkString("\n  "))
+      return
+    }
+    val spark = session()
+    try runMode(spark, args) finally spark.stop()
+  }
+
+  private def runMode(spark: SparkSession, args: Array[String]): Unit = {
     // QA report mode: per-stage verdicts over the committed lineage
     // (conservation, skew gate, resume overlap, encode drift) + a
     // one-screen summary — the reference's consolidated frame verdict
@@ -179,13 +210,11 @@ object Main {
     if (args.contains("--report")) {
       val outDir = args.filterNot(_.startsWith("--")).headOption
         .getOrElse("/tmp/graft-tiles")
-      val spark = session()
       // streamed delta roots get delta-overlap semantics: auto-detected
       // from stream manifest notes, or forced with --delta
       val delta = args.contains("--delta") ||
         graft.plans.Lineage.isDeltaRoot(outDir)
       println(graft.plans.QaReport.report(spark, outDir, delta))
-      spark.stop()
       return
     }
     // streaming ingestion mode: watch a directory of page parquet, run
@@ -209,7 +238,6 @@ object Main {
     if (args.contains("--stream")) {
       val (cfg, watchDir) = parseStreamArgs(args)
       val checkpoint = s"${cfg.outDir}/stream-checkpoint"
-      val spark = session()
       val pageSchema = org.apache.spark.sql.Encoders
         .product[graft.sources.Page].schema
       val pages = spark.readStream.schema(pageSchema).parquet(watchDir)
@@ -230,7 +258,6 @@ object Main {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       query.awaitTermination()
-      spark.stop()
       return
     }
     // curation mode: the training-data pass (normalize → exact dedup →
@@ -243,7 +270,6 @@ object Main {
       require(pos.length >= 2,
         "usage: --export <curatedRoot> <exportDir> [shards]")
       val shards = if (pos.length > 2) pos(2).toInt else 16
-      val spark = session()
       val stats = graft.operators.Curate.exportShards(
         spark, pos(0), pos(1), shards)
       val docs = stats.map(_.docs).sum
@@ -251,7 +277,6 @@ object Main {
       println(s"exported $docs docs / $toks tokens into ${stats.length} " +
         s"shards (tokens min=${stats.map(_.tokens).min} " +
         s"max=${stats.map(_.tokens).max}) at ${pos(1)}")
-      spark.stop()
       return
     }
     // hot-region layer: geoparsed points → DBSCAN clusters → convex-hull
@@ -267,7 +292,6 @@ object Main {
       val exact = args.contains("--exact-hulls")
       val cfg = parseArgs(args.filterNot(a =>
         a == "--hulls" || a == "--exact-hulls"))
-      val spark = session()
       val t0 = System.nanoTime()
       val feats = graft.operators.GeoPipeline
         .pagesToFeatures(spark, pageTable(spark, cfg), cfg.s2Level, cfg.hexRes)
@@ -301,13 +325,11 @@ object Main {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"committed snapshot ${snap.id}: $nHulls hull polygons → " +
         f"${snap.rows} hotspot tiles in $secs%.1f s")
-      spark.stop()
       return
     }
     if (args.contains("--curate")) {
       val cfg = parseArgs(args.filterNot(a =>
         a == "--curate" || a == "--neardup" || a == "--site-boiler"))
-      val spark = session()
       val t0 = System.nanoTime()
       val snap = graft.operators.Curate.run(
         pageTable(spark, cfg), cfg.outDir, cfg.resume,
@@ -318,14 +340,12 @@ object Main {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"committed snapshot ${snap.id} rows=${snap.rows} " +
         f"bytes=${snap.bytes} in $secs%.1f s (${snap.rows / secs}%.1f docs/sec)")
-      spark.stop()
       return
     }
     // full-product mode: pages → curated corpus → tiles, two committed
     // lineage roots, one QA report across both (see [[e2e]])
     if (args.contains("--e2e")) {
       val cfg = parseArgs(args.filterNot(_ == "--e2e"))
-      val spark = session()
       val t0 = System.nanoTime()
       val (csnap, tsnap) = e2e(spark, cfg)
       val secs = (System.nanoTime() - t0) / 1e9
@@ -335,7 +355,6 @@ object Main {
       println(graft.plans.QaReport.report(spark, s"${cfg.outDir}/curated"))
       println("== tiles root ==")
       println(graft.plans.QaReport.report(spark, s"${cfg.outDir}/tiles"))
-      spark.stop()
       return
     }
     // version-diff mode: the cache-invalidation list between two
@@ -343,26 +362,12 @@ object Main {
     if (args.contains("--diff")) {
       val pos = args.filterNot(_.startsWith("--"))
       require(pos.length >= 3, "usage: --diff <outDir> <fromSnap> <toSnap>")
-      val spark = session()
       val diff = graft.plans.Lineage
         .diffVersions(spark, pos(0), pos(1).toLong, pos(2).toLong)
         .groupBy("status").count().collect()
         .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted
       println(s"tile diff snap-${pos(1)} → snap-${pos(2)}: " +
         (if (diff.isEmpty) "identical" else diff.mkString(" ")))
-      spark.stop()
-      return
-    }
-    // storage maintenance: sweep crash-orphaned uncommitted snapshot dirs
-    if (args.contains("--vacuum")) {
-      val pos = args.filterNot(_.startsWith("--"))
-      val outDir = pos.headOption.getOrElse("/tmp/graft-tiles")
-      val hours = pos.lift(1).map(_.toDouble).getOrElse(24.0)
-      val removed = graft.plans.Lineage.vacuumOrphans(outDir,
-        (hours * 3600 * 1000).toLong)
-      println(if (removed.isEmpty) "no orphans older than the age guard"
-        else s"vacuumed ${removed.length} orphaned dirs:\n  " +
-          removed.mkString("\n  "))
       return
     }
     // layout maintenance mode: range-cluster the table by tile_id so the
@@ -370,7 +375,6 @@ object Main {
     if (args.contains("--cluster")) {
       val outDir = args.filterNot(_.startsWith("--")).headOption
         .getOrElse("/tmp/graft-tiles")
-      val spark = session()
       graft.plans.Lineage.clusterSnapshots(spark, outDir) match {
         case Some(s) =>
           val expired = graft.plans.Lineage.expireSnapshots(outDir)
@@ -379,7 +383,6 @@ object Main {
             s"expired snapshots ${expired.mkString(",")}")
         case None => println("nothing to cluster (no committed snapshots)")
       }
-      spark.stop()
       return
     }
     // table maintenance mode: rewrite active snapshots into one and
@@ -391,7 +394,6 @@ object Main {
     if (args.contains("--compact")) {
       val outDir = args.filterNot(_.startsWith("--")).headOption
         .getOrElse("/tmp/graft-tiles")
-      val spark = session()
       val active = graft.plans.Lineage.activeSnapshots(outDir)
       // per-snapshot detection: a mixed lean/delta root must surface the
       // clear compactServingTiles error, not silently take the lean path
@@ -421,16 +423,13 @@ object Main {
             s"; expired snapshots ${expired.mkString(",")}")
         case None => println("nothing to compact (fewer than 2 active snapshots)")
       }
-      spark.stop()
       return
     }
     val cfg = parseArgs(args)
-    val spark = session()
     val t0 = System.nanoTime()
     val snap = run(spark, cfg)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"committed snapshot ${snap.id} rows=${snap.rows} " +
       f"bytes=${snap.bytes} in $secs%.1f s (${snap.rows / secs}%.1f tiles/sec)")
-    spark.stop()
   }
 }

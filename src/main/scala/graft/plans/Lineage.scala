@@ -185,12 +185,14 @@ object Lineage {
       .filter(col("tile_id").between(lo, hi))
   }
 
-  /** Manifest note of a committed snapshot (None when unreadable). */
+  /** Manifest note of a committed snapshot, unescaped (None when the
+    * manifest is gone).
+    */
   def manifestNote(root: String, id: Long): Option[String] = {
     val p = manifestDir(root).resolve(s"snap-$id.json")
     if (!Files.exists(p)) return None
-    """"note": "((?:[^"\\]|\\.)*)"""".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1))
+    Option(graft.GraftConfig.mapper.readTree(Files.readString(p)).get("note"))
+      .map(_.asText)
   }
 
   /** A root whose ACTIVE snapshots include streamed delta commits —
@@ -386,8 +388,18 @@ object Lineage {
     Snapshot(snapId, rows, bytes)
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR left raw makes the document unparseable.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** All tile_ids across ACTIVE snapshots (the resume anti-join side;
     * compacted-away snapshots are invisible — their tiles live in the

@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 
 /** Exactly-once streaming ingestion into the Lineage snapshot layer: a
@@ -39,23 +38,15 @@ object StreamCommit {
   private def noteOf(streamId: String, batchId: Long, cap: Int): String =
     s"stream=$streamId batch=$batchId" + (if (cap >= 0) s" cap=$cap" else "")
 
-  private val NoteRe =
-    """"note": "stream=(.+) batch=(\d+)(?: cap=(\d+))?"""".r
+  private val NoteRe = """(?s)stream=(.+) batch=(\d+)(?: cap=(\d+))?""".r
 
   /** Batch ids already committed under `root` for `streamId`, read from
     * every manifest still on disk (including replaced-but-unexpired
     * ones).
     */
-  def committedBatchIds(root: String, streamId: String): Set[Long] = {
-    val dir = Paths.get(root, "manifests")
-    if (!Files.isDirectory(dir)) return Set.empty
-    Lineage.committedSnapshots(root).flatMap { id =>
-      val txt = Files.readString(dir.resolve(s"snap-$id.json"))
-      NoteRe.findFirstMatchIn(txt).collect {
-        case m if m.group(1) == streamId => m.group(2).toLong
-      }
-    }.toSet
-  }
+  def committedBatchIds(root: String, streamId: String): Set[Long] =
+    Lineage.committedSnapshots(root).flatMap(id => Lineage.manifestNote(root, id))
+      .collect { case NoteRe(`streamId`, batch, _) => batch.toLong }.toSet
 
   /** One-shot commit (reads the manifest set on every call — fine for
     * tests and occasional use; a long-lived stream should hold a

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 import java.util.Locale
@@ -52,12 +51,7 @@ object FixtureGen {
     val verifyDir = args(0)
     val outFile = if (args.length > 1) args(1)
       else "src/main/scala/graft/OracleFixtures.scala"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Main.session()
 
     val entries = FixtureQueries.map { name =>
       val df = spark.read.parquet(s"$verifyDir/$name")

@@ -11,7 +11,7 @@ object PageFeed {
     val dir = args(0)
     val n = args(1).toLong
     val seed = if (args.length > 2) args(2).toLong else graft.sources.SynthPages.DefaultSeed
-    val spark = graft.Main.session("4")
+    val spark = graft.Main.session()
     graft.sources.SynthPages.pagesDF(spark, n, seed)
       .write.mode("append").parquet(dir)
     println(s"fed $n pages (seed $seed) into $dir")

@@ -14,8 +14,10 @@ class QaReportSpec extends AnyFunSuite {
 
   test("healthy lineage (commit + resume) passes all verdicts") {
     val root = java.nio.file.Files.createTempDirectory("graft-qa-ok").toString
-    Main.run(spark, root, nPages = 300, zooms = Seq(4), resume = false)
-    Main.run(spark, root, nPages = 300, zooms = Seq(4, 6), resume = true)
+    Main.run(spark, GraftConfig(outDir = root, nPages = 300, zooms = Seq(4),
+      resume = false))
+    Main.run(spark, GraftConfig(outDir = root, nPages = 300, zooms = Seq(4, 6),
+      resume = true))
     val vs = QaReport.verdicts(spark, root)
     assert(vs.nonEmpty)
     assert(vs.map(_.stage).toSet ===

@@ -48,6 +48,18 @@ class StreamCommitSpec extends AnyFunSuite {
     assert(vs.forall(_.ok), QaReport.summary(vs))
   }
 
+  test("a stream id with quote, backslash and newline commits once; its replay is a no-op") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-escaped-id").toString
+    val id = "/ckpt/\"quoted\" C:\\dir\nline2"
+    val rows = (0L until 10L).map(t => (t, 100L)).toDF("tile_id", "byte_len")
+    assert(StreamCommit.commitBatch(root, id)(rows, 0L).nonEmpty)
+    assert(StreamCommit.committedBatchIds(root, id) === Set(0L))
+    assert(Lineage.manifestNote(root, 1L) === Some(s"stream=$id batch=0"))
+    assert(StreamCommit.commitBatch(root, id)(rows, 0L).isEmpty)
+    assert(Lineage.committedSnapshots(root) === Seq(1L))
+  }
+
   test("cachedCommitter: one manifest scan, O(1) replays, new batches commit") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-cached-commit").toString

@@ -208,14 +208,17 @@ class LineageSpec extends AnyFunSuite {
     import graft.plans.Lineage
     val root = java.nio.file.Files.createTempDirectory("graft-lineage").toString
     // run 1 ("killed" after committing only zoom 4)
-    val snap1 = Main.run(spark, root, nPages = 300, zooms = Seq(4), resume = false)
+    val snap1 = Main.run(spark, GraftConfig(outDir = root, nPages = 300, zooms = Seq(4),
+      resume = false))
     assert(snap1.rows > 0)
     // run 2: full zoom set with resume → must add zooms 6 only... all z4 skipped
-    val snap2 = Main.run(spark, root, nPages = 300, zooms = Seq(4, 6), resume = true)
+    val snap2 = Main.run(spark, GraftConfig(outDir = root, nPages = 300, zooms = Seq(4, 6),
+      resume = true))
     val all = spark.read.parquet(s"$root/data/snap-1", s"$root/data/snap-2")
     // union of the two snapshots == a fresh full run
     val rootFull = java.nio.file.Files.createTempDirectory("graft-full").toString
-    Main.run(spark, rootFull, nPages = 300, zooms = Seq(4, 6), resume = false)
+    Main.run(spark, GraftConfig(outDir = rootFull, nPages = 300, zooms = Seq(4, 6),
+      resume = false))
     val full = spark.read.parquet(s"$rootFull/data/snap-1")
     val gotIds = all.select("tile_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
       .collect().sorted.toSeq
@@ -242,8 +245,10 @@ class LineageSpec extends AnyFunSuite {
   test("compaction: atomic replace visibility, expiry, and resume continuity") {
     import graft.plans.Lineage
     val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    Main.run(spark, root, nPages = 200, zooms = Seq(4), resume = false)
-    Main.run(spark, root, nPages = 200, zooms = Seq(4, 6), resume = true)
+    Main.run(spark, GraftConfig(outDir = root, nPages = 200, zooms = Seq(4),
+      resume = false))
+    Main.run(spark, GraftConfig(outDir = root, nPages = 200, zooms = Seq(4, 6),
+      resume = true))
     val before = Lineage.completedTileIds(spark, root)
       .collect().map(_.getLong(0)).toSet
     val beforeRows = Lineage.metricsTable(spark, root)
@@ -269,7 +274,8 @@ class LineageSpec extends AnyFunSuite {
     assert(Lineage.expireSnapshots(root).isEmpty) // idempotent
 
     // resume against the compacted root still re-encodes nothing old
-    Main.run(spark, root, nPages = 200, zooms = Seq(4, 6, 8), resume = true)
+    Main.run(spark, GraftConfig(outDir = root, nPages = 200, zooms = Seq(4, 6, 8),
+      resume = true))
     val s4 = spark.read.parquet(s"$root/data/snap-4")
       .select("tile_id").collect().map(_.getLong(0)).toSet
     assert(s4.intersect(after).isEmpty, "resume must only add new tiles")

@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * Scaling evidence (N→4N gate, VERDICT r1 item 2) runs FIRST under its
   * own reserved wall budget (ScaleBudget) so a slow query
   * sweep can never starve the gated artifact of its retries (the r2
-  * failure mode): the same pipeline on identical input at local[2] vs
-  * local[8], with
+  * failure mode): the same pipeline on identical input at local[N] vs
+  * local[4N] (N = 2 on a host with 8 or more cores), with
   *  - a WARMUP pipeline per fresh session (JIT + codegen compile would
   *    otherwise bill mostly to whichever config runs first),
   *  - ≥3 INTERLEAVED pairs (the sandbox host has multi-× time-varying
@@ -54,13 +54,15 @@ object Bench {
   // same host window). 1.6M keeps a pair ~35 s, well inside the
   // reserved budget's ~5 retries.
   private val ScalePages = Pages * 8
-  // N → 4N cores. local[2] vs local[8] (not 8 vs 32): a 32-vCPU
-  // shared host saturates shared memory bandwidth / co-tenant CPU well
-  // below 32 threads, which would measure the HOST's ceiling, not the
-  // engine's scaling. 2→8 stays in the regime where added cores get
-  // real cycles — the same 4× ratio the gate asks for.
-  private val CoresLow = 2
-  private val CoresHigh = 8
+  // N → 4N cores from the host: high = min(8, cores), low = high / 4.
+  // Capped at 8 (not 8 vs 32): a 32-vCPU shared host saturates shared
+  // memory bandwidth / co-tenant CPU well below 32 threads, which would
+  // measure the HOST's ceiling, not the engine's scaling; and a high
+  // side above the host's cores only oversubscribes it. Below 4 cores
+  // there is no pair and the gate reads inconclusive.
+  private val HostCores = Runtime.getRuntime.availableProcessors
+  private val CoresHigh = math.min(8, HostCores)
+  private val CoresLow = CoresHigh / 4
   // pairs stop EARLY on the first passing pair, so a higher ceiling
   // only spends wall time when the host is in a bad steal window —
   // exactly when more attempts are needed (still budget-bounded)
@@ -112,12 +114,15 @@ object Bench {
       val s = Main.session()
       ensurePagesWith(s, pagesPath, Pages)
       ensurePagesWith(s, warmPath, Pages / 10)
-      ensurePagesWith(s, scalePath, ScalePages)
+      if (CoresLow > 0) ensurePagesWith(s, scalePath, ScalePages)
       s.stop()
     }
 
     // ---- scaling evidence FIRST, inside its reserved budget ----
-    val scalingJson = {
+    val scalingJson = if (CoresLow == 0)
+      s""","scaling":{"gate":"inconclusive","host_cores":$HostCores,""" +
+        s""""reason":"fewer than 4 cores: no N→4N pair"}"""
+    else {
       final case class Run(secs: Double, taskSec: Double, cpuSec: Double,
                            stages: Seq[(String, Double)])
       def once(cores: Int): Run = {

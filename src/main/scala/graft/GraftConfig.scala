@@ -12,7 +12,6 @@ final case class GraftConfig(
     tileCap: Int = 4096,
     s2Level: Int = 16,
     hexRes: Int = 8,
-    coverRes: Int = 3,
     seed: Long = graft.sources.SynthPages.DefaultSeed,
     resume: Boolean = false,
     materializePages: Boolean = false)

@@ -398,9 +398,8 @@ object Main {
       // per-snapshot detection: a mixed lean/delta root must surface the
       // clear compactServingTiles error, not silently take the lean path
       // (whose union read would also misbehave on mixed schemas)
-      val hasFeats = active.map(id => spark.read
-        .parquet(s"$outDir/data/snap-$id").columns.contains("feats"))
-      val isDelta = active.size >= 2 && hasFeats.exists(identity)
+      val isDelta = active.size >= 2 &&
+        graft.plans.Lineage.leanSnapshots(spark, outDir).size < active.size
       // the cap the stream committed with is AUTHORITATIVE: read it back
       // from the manifest notes; an explicit --config must agree (the
       // compactServingTiles require fails loudly on a mismatch instead

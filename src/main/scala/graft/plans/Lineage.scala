@@ -1,6 +1,11 @@
 package graft.plans
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.SortedMap
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +23,41 @@ import org.apache.spark.sql.functions._
   *   data/snap-N/       tile parquet (written before commit)
   *   metrics/snap-N/    per-partition lineage parquet
   *   manifests/snap-N.json   commit marker (atomic rename, written LAST)
+  *
+  * A manifest's keys are `snapshot_id`, `note`, `data_path`,
+  * `metrics_path`, `row_count`, `bytes`, `replaces` (the snapshot ids a
+  * compaction supersedes) and `parent`. Every reader goes through
+  * [[manifests]], which parses them into a [[Manifest]].
   */
 object Lineage {
   final case class Snapshot(id: Long, rows: Long, bytes: Long)
+
+  /** One parsed `manifests/snap-N.json`, fields named as its keys.
+    * `note` is free text, except that a streamed batch writes
+    * `stream=<id> batch=<n>` and a delta snapshot appends ` cap=<c>`, its
+    * tileCap. The stream id is arbitrary (it may itself contain ` batch=`
+    * or ` cap=`), so both fields are read from the END of the note.
+    */
+  final case class Manifest(snapshot_id: Long, note: String,
+      data_path: String, metrics_path: String, row_count: Long, bytes: Long,
+      // the Scala module sees Seq[Long] as Seq[Object] after erasure
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) replaces: Seq[Long],
+      parent: Long) {
+    private val Manifest.NoteRe(stream, batch, cap) = note
+    def streamBatch: Option[(String, Long)] = Option(stream).map(_ -> batch.toLong)
+    def tileCap: Option[Int] = Option(cap).map(_.toInt)
+  }
+
+  object Manifest {
+    private val NoteRe = """(?s)(?:stream=(.*) batch=(\d+)|.*?)(?: cap=(\d+))?""".r
+
+    /** A negative cap records none. */
+    private[plans] def withCap(note: String, cap: Int): String =
+      if (cap >= 0) s"$note cap=$cap" else note
+
+    private[plans] def streamNote(streamId: String, batchId: Long, cap: Int): String =
+      withCap(s"stream=$streamId batch=$batchId", cap)
+  }
 
   private def manifestDir(root: String) = Paths.get(root, "manifests")
 
@@ -28,36 +65,52 @@ object Lineage {
   def committedSnapshots(root: String): Seq[Long] = {
     val dir = manifestDir(root)
     if (!Files.isDirectory(dir)) return Seq.empty
-    val it = Files.list(dir).iterator()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (it.hasNext) {
-      val name = it.next().getFileName.toString
-      if (name.startsWith("snap-") && name.endsWith(".json"))
-        out += name.stripPrefix("snap-").stripSuffix(".json").toLong
-    }
-    out.sorted.toSeq
+    // closed: an open Files.list stream pins a directory handle until GC
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
+      .map(_.stripPrefix("snap-").stripSuffix(".json").toLong).toSeq.sorted)
   }
 
   def nextSnapshotId(root: String): Long =
     committedSnapshots(root).lastOption.getOrElse(0L) + 1L
 
+  // a manifest missing a key is as unreadable as a truncated one
+  private lazy val manifestReader = graft.GraftConfig.mapper
+    .readerFor(classOf[Manifest])
+    .`with`(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+
+  /** Every committed manifest by snapshot id, each file read and parsed
+    * once. A file that does not parse is a Failure naming it: its
+    * snapshot stays committed (the file name is the commit point) but
+    * replaces nothing.
+    */
+  def manifests(root: String): SortedMap[Long, Try[Manifest]] =
+    SortedMap.from(committedSnapshots(root).map { id =>
+      val p = manifestDir(root).resolve(s"snap-$id.json")
+      id -> Try(manifestReader.readValue[Manifest](p.toFile)).recoverWith { case e =>
+        Failure(new java.io.IOException(
+          s"unreadable manifest $p: ${e.toString.linesIterator.next()}", e))
+      }
+    })
+
+  private def replaced(ms: SortedMap[Long, Try[Manifest]]): Set[Long] =
+    ms.values.flatMap(_.toOption).flatMap(_.replaces).toSet
+
   /** Snapshot ids superseded by a later compaction commit (their data is
     * duplicated inside the compacted snapshot and must not be read).
     */
-  def replacedSnapshots(root: String): Set[Long] = {
-    val dir = manifestDir(root)
-    if (!Files.isDirectory(dir)) return Set.empty
-    val re = """"replaces":\s*\[([0-9,\s]*)\]""".r
-    committedSnapshots(root).flatMap { id =>
-      val txt = Files.readString(dir.resolve(s"snap-$id.json"))
-      re.findFirstMatchIn(txt).toSeq.flatMap(_.group(1).split(",")
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong))
-    }.toSet
+  def replacedSnapshots(root: String): Set[Long] = replaced(manifests(root))
+
+  /** The manifests of [[activeSnapshots]]. */
+  def activeManifests(root: String): SortedMap[Long, Try[Manifest]] = {
+    val ms = manifests(root)
+    ms.removedAll(replaced(ms))
   }
 
   /** Committed snapshots that are still readable (not compacted away). */
-  def activeSnapshots(root: String): Seq[Long] =
-    committedSnapshots(root).filterNot(replacedSnapshots(root))
+  def activeSnapshots(root: String): Seq[Long] = activeManifests(root).keys.toSeq
 
   /** The table's current contents: every active snapshot's data as one
     * DataFrame (empty frame when nothing is committed).
@@ -103,13 +156,7 @@ object Lineage {
                           note: String = "serving compaction"): Option[Snapshot] = {
     val active = activeSnapshots(root)
     if (active.size < 2) return None
-    // EVERY snapshot must carry the buffers, checked per snapshot (schema
-    // metadata only): a union read takes its schema from one file, so a
-    // MIXED root (lean + delta writers) could pass a union-level check
-    // while explode(feats = null) silently DROPPED the lean snapshots'
-    // tiles from the merged table
-    val lean = active.filterNot(id =>
-      spark.read.parquet(s"$root/data/snap-$id").columns.contains("feats"))
+    val lean = leanSnapshots(spark, root)
     require(lean.isEmpty,
       "serving compaction needs the delta layout (a feats column — commit " +
         s"via Tiler.encodeTilesKeepFeatures) in EVERY active snapshot; " +
@@ -127,8 +174,18 @@ object Lineage {
       graft.operators.Tiler.mergeTiles(activeTable(spark, root), cap, layerName)
         .toDF())
     // carry the cap forward so stream→compact→stream cycles keep deriving it
-    Some(commit(merged, root, s"$note cap=$cap", replaces = active))
+    Some(commit(merged, root, Manifest.withCap(note, cap), replaces = active))
   }
+
+  /** Active snapshots whose data has no `feats` column (lean tiles, not
+    * the delta layout). Checked per snapshot from schema metadata: a
+    * union read takes its schema from one file, so a MIXED root (lean +
+    * delta writers) could pass a union-level check while explode(feats =
+    * null) silently DROPPED the lean snapshots' tiles from a merge.
+    */
+  def leanSnapshots(spark: SparkSession, root: String): Seq[Long] =
+    activeSnapshots(root).filterNot(id =>
+      spark.read.parquet(s"$root/data/snap-$id").columns.contains("feats"))
 
   /** Range-cluster the table: rewrite active snapshots ordered by
     * tile_id (range repartition + in-partition sort), so every data file
@@ -185,35 +242,31 @@ object Lineage {
       .filter(col("tile_id").between(lo, hi))
   }
 
-  /** Manifest note of a committed snapshot, unescaped (None when the
-    * manifest is gone).
+  /** Manifest note of a committed snapshot (None when the manifest is
+    * gone or unreadable).
     */
-  def manifestNote(root: String, id: Long): Option[String] = {
-    val p = manifestDir(root).resolve(s"snap-$id.json")
-    if (!Files.exists(p)) return None
-    Option(graft.GraftConfig.mapper.readTree(Files.readString(p)).get("note"))
-      .map(_.asText)
-  }
+  def manifestNote(root: String, id: Long): Option[String] =
+    manifests(root).get(id).flatMap(_.toOption).map(_.note)
 
   /** A root whose ACTIVE snapshots include streamed delta commits —
     * duplicate tile_ids across snapshots are expected there (the QA
     * overlap check reads this to switch semantics).
     */
   def isDeltaRoot(root: String): Boolean =
-    activeSnapshots(root).exists(id =>
-      manifestNote(root, id).exists(_.startsWith("stream=")))
+    activeManifests(root).values.flatMap(_.toOption)
+      .exists(_.streamBatch.nonEmpty)
 
   /** The tileCap the root's active snapshots were encoded with, read
     * back from manifest notes (` cap=N`, written by streamed commits
     * and serving compactions). None when no note records one; throws on
     * a root whose snapshots record DIFFERENT caps — per-batch feature
     * buffers were already truncated at their cap, so no single
-    * re-encode can be byte-faithful to all of them.
+    * re-encode can be byte-faithful to all of them — and on an
+    * unreadable active manifest, whose cap is unknown.
     */
   def recordedTileCap(root: String): Option[Int] = {
-    val caps = activeSnapshots(root)
-      .flatMap(id => manifestNote(root, id))
-      .flatMap(n => """ cap=(\d+)""".r.findFirstMatchIn(n).map(_.group(1).toInt))
+    val caps = activeManifests(root).values.toSeq
+      .flatMap(_.get.tileCap)
       .distinct
     require(caps.size <= 1,
       s"active snapshots record conflicting tileCaps ${caps.sorted.mkString(",")} " +
@@ -228,16 +281,8 @@ object Lineage {
     * expiry already deleted the files.
     */
   def tableAt(spark: SparkSession, root: String, asOf: Long): DataFrame = {
-    val dir = manifestDir(root)
-    val re = """"replaces":\s*\[([0-9,\s]*)\]""".r
-    val replacedByThen: Set[Long] = committedSnapshots(root)
-      .filter(_ <= asOf).flatMap { id =>
-        val txt = Files.readString(dir.resolve(s"snap-$id.json"))
-        re.findFirstMatchIn(txt).toSeq.flatMap(_.group(1).split(",")
-          .map(_.trim).filter(_.nonEmpty).map(_.toLong))
-      }.toSet
-    val snaps = committedSnapshots(root)
-      .filter(id => id <= asOf && !replacedByThen(id))
+    val byThen = manifests(root).rangeTo(asOf)
+    val snaps = byThen.keys.toSeq.filterNot(replaced(byThen))
       .filter(id => Files.isDirectory(Paths.get(root, "data", s"snap-$id")))
     if (snaps.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(snaps.map(s => s"$root/data/snap-$s"): _*)
@@ -337,11 +382,8 @@ object Lineage {
     * snapshot. Steps: write data parquet → write per-partition metrics →
     * atomically rename the manifest into place (the commit point).
     */
-  def commit(tilesWithStats: DataFrame, root: String, note: String): Snapshot =
-    commit(tilesWithStats, root, note, replaces = Nil)
-
   def commit(tilesWithStats: DataFrame, root: String, note: String,
-             replaces: Seq[Long]): Snapshot = {
+             replaces: Seq[Long] = Nil): Snapshot = {
     val spark = tilesWithStats.sparkSession
     val snapId = nextSnapshotId(root)
     val dataPath = s"$root/data/snap-$snapId"

@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.nio.file.{Files, Paths}
+import scala.util.{Failure, Success}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,20 +46,6 @@ object QaReport {
     def ok: Boolean = status == "pass"
   }
 
-  private val RowCountRe = """"row_count":\s*(\d+)""".r
-  private val BytesRe = """"bytes":\s*(\d+)""".r
-
-  /** (row_count, bytes) recorded in a snapshot's commit manifest. */
-  private def manifestCounts(root: String, id: Long): Option[(Long, Long)] = {
-    val p = Paths.get(root, "manifests", s"snap-$id.json")
-    if (!Files.exists(p)) return None
-    val txt = Files.readString(p)
-    for {
-      r <- RowCountRe.findFirstMatchIn(txt).map(_.group(1).toLong)
-      b <- BytesRe.findFirstMatchIn(txt).map(_.group(1).toLong)
-    } yield (r, b)
-  }
-
   /** `delta = true` switches the cross-snapshot overlap check to
     * delta-tile semantics (streamed roots): duplicate tile_ids across
     * snapshots are EXPECTED there — each micro-batch commits that
@@ -72,7 +59,8 @@ object QaReport {
                skewFactor: Double = 2.0,
                driftRatio: Double = 3.0,
                delta: Boolean = false): Seq[Verdict] = {
-    val active = Lineage.activeSnapshots(root)
+    val manifests = Lineage.activeManifests(root)
+    val active = manifests.keys.toSeq
     if (active.isEmpty)
       return Seq(Verdict("lineage", 0L, "unknown", 0, 0,
         "no committed snapshots under this root"))
@@ -91,26 +79,26 @@ object QaReport {
           r.getLong(3), r.getLong(4))))
         .toMap
 
-    val conservation = active.flatMap { id =>
+    val conservation = manifests.toSeq.flatMap { case (id, manifest) =>
       val (mRows, mBytes, _, _) = perSnap.getOrElse(id, (0L, 0L, 0L, 0L))
-      manifestCounts(root, id) match {
-        case None => Seq(Verdict("conservation", id, "fail", 0, 0,
-          s"manifest for snapshot $id is unreadable"))
-        case Some((manRows, manBytes))
+      manifest.map(m => (m.row_count, m.bytes)) match {
+        case Failure(e) =>
+          Seq(Verdict("conservation", id, "fail", 0, 0, e.getMessage))
+        case Success((manRows, manBytes))
             if !Files.isDirectory(Paths.get(root, "data", s"snap-$id")) =>
           // a lost/deleted data directory is precisely the failure this
           // check exists to report — a verdict, not a read stack trace
           Seq(Verdict("conservation", id, "fail", 0, manRows.toDouble,
             s"data directory for snapshot $id is missing " +
               s"(manifest claims $manRows rows)"))
-        case Some((manRows, manBytes))
+        case Success((manRows, manBytes))
             if !Files.isDirectory(Paths.get(root, "metrics", s"snap-$id")) =>
           // same filesystem-loss class as a lost data dir: the lineage
           // record itself is gone (metricsTable skips it to stay readable)
           Seq(Verdict("conservation", id, "fail", 0, manRows.toDouble,
             s"metrics directory for snapshot $id is missing " +
               s"(manifest claims $manRows rows; per-partition lineage lost)"))
-        case Some((manRows, manBytes)) =>
+        case Success((manRows, manBytes)) =>
           val dataRows = spark.read.parquet(s"$root/data/snap-$id").count()
           val okRows = manRows == mRows && mRows == dataRows
           val okBytes = manBytes == mBytes

@@ -32,32 +32,26 @@ import org.apache.spark.sql.DataFrame
   * (`tile_id`, `byte_len`).
   */
 object StreamCommit {
-  // cap < 0 = unrecorded (legacy callers); a recorded cap lets serving
-  // compaction re-encode at the SAME tileCap the stream truncated its
-  // per-batch buffers with — any other cap breaks byte parity silently
-  private def noteOf(streamId: String, batchId: Long, cap: Int): String =
-    s"stream=$streamId batch=$batchId" + (if (cap >= 0) s" cap=$cap" else "")
-
-  private val NoteRe = """(?s)stream=(.+) batch=(\d+)(?: cap=(\d+))?""".r
-
   /** Batch ids already committed under `root` for `streamId`, read from
     * every manifest still on disk (including replaced-but-unexpired
-    * ones).
+    * ones). Throws, naming the file, on an unreadable manifest: it may
+    * record one of this stream's batches, which must not be re-admitted.
     */
   def committedBatchIds(root: String, streamId: String): Set[Long] =
-    Lineage.committedSnapshots(root).flatMap(id => Lineage.manifestNote(root, id))
-      .collect { case NoteRe(`streamId`, batch, _) => batch.toLong }.toSet
+    Lineage.manifests(root).values.flatMap(_.get.streamBatch)
+      .collect { case (`streamId`, batch) => batch }.toSet
 
   /** One-shot commit (reads the manifest set on every call — fine for
     * tests and occasional use; a long-lived stream should hold a
     * [[cachedCommitter]]). Returns None when the batch id was already
-    * committed (a re-delivery).
+    * committed (a re-delivery). `cap` < 0 records no tileCap (legacy
+    * callers); a recorded cap lets serving compaction re-encode at the
+    * SAME tileCap the stream truncated its per-batch buffers with — any
+    * other cap breaks byte parity silently.
     */
   def commitBatch(root: String, streamId: String, cap: Int = -1)
-                 (df: DataFrame, batchId: Long): Option[Lineage.Snapshot] = {
-    if (committedBatchIds(root, streamId).contains(batchId)) None
-    else Some(Lineage.commit(df, root, noteOf(streamId, batchId, cap)))
-  }
+                 (df: DataFrame, batchId: Long): Option[Lineage.Snapshot] =
+    cachedCommitter(root, streamId, cap)(df, batchId)
 
   /** Stateful committer for a long-lived stream: the committed-id set is
     * read ONCE at first use and maintained in memory afterwards, so the
@@ -72,7 +66,8 @@ object StreamCommit {
       if (known == null) known = committedBatchIds(root, streamId)
       if (known.contains(batchId)) None
       else {
-        val snap = Lineage.commit(df, root, noteOf(streamId, batchId, cap))
+        val snap = Lineage.commit(df, root,
+          Lineage.Manifest.streamNote(streamId, batchId, cap))
         known += batchId
         Some(snap)
       }

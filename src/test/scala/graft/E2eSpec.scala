@@ -20,7 +20,7 @@ class StreamArgsSpec extends AnyFunSuite {
   test("--config carries every tile parameter into stream mode") {
     val f = java.nio.file.Files.createTempFile("graft-cfg", ".json")
     java.nio.file.Files.writeString(f,
-      """{"outDir":"/tmp/cfged","zooms":[5,9],"tileCap":128,"s2Level":14,"hexRes":6}""")
+      """{"outDir":"/tmp/cfged","zooms":[5,9],"tileCap":128,"s2Level":14,"hexRes":6,"coverRes":3}""")
     val (cfg, watch) = Main.parseStreamArgs(
       Array("--stream", "--config", f.toString))
     assert(cfg.outDir === "/tmp/cfged")

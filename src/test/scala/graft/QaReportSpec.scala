@@ -120,4 +120,35 @@ class QaReportSpec extends AnyFunSuite {
     assert(rep.startsWith("Lineage looks **degraded**"), rep)
     assert(rep.contains("overlap") && rep.contains("skew"), rep)
   }
+
+  test("seeded defect: a truncated manifest stays committed, replaces nothing, reads as unreadable") {
+    import spark.implicits._
+    import graft.plans.StreamCommit
+    val root = java.nio.file.Files.createTempDirectory("graft-qa-trunc").toString
+    def rows(a: Long, b: Long) =
+      (a until b).map(id => (id, 100L)).toDF("tile_id", "byte_len")
+    StreamCommit.commitBatch(root, "s")(rows(0, 40), 0L)
+    StreamCommit.commitBatch(root, "s")(rows(40, 70), 1L)
+    assert(Lineage.compactSnapshots(spark, root).nonEmpty) // snap-3 replaces 1, 2
+    val man = java.nio.file.Paths.get(root, "manifests", "snap-3.json")
+    val txt = java.nio.file.Files.readString(man)
+    java.nio.file.Files.writeString(man, txt.take(txt.length / 2))
+
+    assert(Lineage.committedSnapshots(root) === Seq(1L, 2L, 3L))
+    assert(Lineage.replacedSnapshots(root) === Set.empty[Long])
+    assert(Lineage.activeSnapshots(root) === Seq(1L, 2L, 3L))
+    val vs = QaReport.verdicts(spark, root)
+    val c3 = vs.find(v => v.stage == "conservation" && v.snapshotId == 3L).get
+    assert(!c3.ok && c3.reason.contains("unreadable"), c3.reason)
+    assert(vs.exists(v => v.stage == "conservation" && v.snapshotId == 1L && v.ok))
+    assert(vs.exists(v => v.stage == "conservation" && v.snapshotId == 2L && v.ok))
+    assert(vs.exists(v => v.stage == "skew" && v.snapshotId == 3L))
+    // the replay guard cannot tell whether snap-3 holds one of this
+    // stream's batches: it fails naming the file, it does not re-admit
+    val e = intercept[java.io.IOException] {
+      StreamCommit.commitBatch(root, "s")(rows(40, 70), 1L)
+    }
+    assert(e.getMessage.contains(man.toString), e.getMessage)
+    assert(Lineage.committedSnapshots(root) === Seq(1L, 2L, 3L))
+  }
 }

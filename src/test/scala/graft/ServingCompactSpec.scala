@@ -83,34 +83,38 @@ class ServingCompactSpec extends AnyFunSuite {
 
   test("stream-recorded tileCap is authoritative: readable back, replay-safe, mismatching compaction cap refuses") {
     import graft.plans.StreamCommit
-    val root = java.nio.file.Files.createTempDirectory("graft-cap").toString
-    val cfg = GraftConfig(outDir = root, zooms = Seq(4, 8), tileCap = 16)
+    // the second id carries its own " cap=" text: the cap is the note's
+    // LAST field, never a match inside the stream id
     val pages = graft.sources.SynthPages.pagesDF(spark, 600).localCheckpoint(true)
     val part = pmod(xxhash64(col("url")), lit(2))
-    val sink = StreamCommit.cachedCommitter(root, streamId = "ck", cap = cfg.tileCap)
-    (0 until 2).foreach { i =>
-      val tiles = Main.tilesFor(spark, pages.filter(part === i), cfg,
-        resumeRoot = None, keepFeatures = true)
-      assert(sink(tiles, i.toLong).nonEmpty)
+    Seq("ck", "/ck cap=7/x").foreach { streamId =>
+      val root = java.nio.file.Files.createTempDirectory("graft-cap").toString
+      val cfg = GraftConfig(outDir = root, zooms = Seq(4, 8), tileCap = 16)
+      val sink = StreamCommit.cachedCommitter(root, streamId, cap = cfg.tileCap)
+      (0 until 2).foreach { i =>
+        val tiles = Main.tilesFor(spark, pages.filter(part === i), cfg,
+          resumeRoot = None, keepFeatures = true)
+        assert(sink(tiles, i.toLong).nonEmpty)
+      }
+      // the cap note round-trips AND the batch-id replay guard still
+      // parses notes that carry it (a fresh committer must see both ids)
+      assert(graft.plans.Lineage.recordedTileCap(root) === Some(16), streamId)
+      val replay = StreamCommit.commitBatch(root, streamId, cap = cfg.tileCap)(
+        Main.tilesFor(spark, pages.filter(part === 0), cfg, None,
+          keepFeatures = true), 0L)
+      assert(replay.isEmpty, s"replayed batch 0 of $streamId must be a no-op")
+      // a compaction asked to re-encode at a DIFFERENT cap breaks the
+      // byte-parity contract → loud refusal, not silent wrong bytes
+      val e = intercept[IllegalArgumentException] {
+        graft.plans.Lineage.compactServingTiles(spark, root, cap = 4096)
+      }
+      assert(e.getMessage.contains("tileCap=16"), e.getMessage)
+      // at the recorded cap it compacts, and carries the cap forward so a
+      // stream→compact→stream cycle keeps deriving it
+      assert(graft.plans.Lineage
+        .compactServingTiles(spark, root, cap = 16).nonEmpty)
+      assert(graft.plans.Lineage.recordedTileCap(root) === Some(16), streamId)
     }
-    // the cap note round-trips AND the batch-id replay guard still
-    // parses notes that carry it (a fresh committer must see both ids)
-    assert(graft.plans.Lineage.recordedTileCap(root) === Some(16))
-    val replay = StreamCommit.commitBatch(root, "ck", cap = cfg.tileCap)(
-      Main.tilesFor(spark, pages.filter(part === 0), cfg, None,
-        keepFeatures = true), 0L)
-    assert(replay.isEmpty, "replayed batch 0 must be a no-op")
-    // a compaction asked to re-encode at a DIFFERENT cap breaks the
-    // byte-parity contract → loud refusal, not silent wrong bytes
-    val e = intercept[IllegalArgumentException] {
-      graft.plans.Lineage.compactServingTiles(spark, root, cap = 4096)
-    }
-    assert(e.getMessage.contains("tileCap=16"), e.getMessage)
-    // at the recorded cap it compacts, and carries the cap forward so a
-    // stream→compact→stream cycle keeps deriving it
-    assert(graft.plans.Lineage
-      .compactServingTiles(spark, root, cap = 16).nonEmpty)
-    assert(graft.plans.Lineage.recordedTileCap(root) === Some(16))
   }
 
   test("serving compaction refuses a lean root; metrics loss surfaces as a verdict, not a crash") {

@@ -11,17 +11,13 @@ import org.apache.spark.sql.functions._
   * edge counts as intersecting.
   *
   * Scale shape (the SpatialHadoop/PBSM discipline):
-  *  - candidates come from a planar-grid BBOX COVER: each geometry
-  *    explodes to the grid cells its bbox overlaps (bounded fan-out —
-  *    pick `cellDeg` near the median geometry extent so the cover is
-  *    ~4 cells) and the two sides meet in ONE cell equi join; a naive
+  *  - candidates come from the planar-grid BBOX COVER [[gridPairs]]
+  *    (bounded fan-out — pick `cellDeg` near the median geometry extent
+  *    so the cover is ~4 cells): ONE cell equi join with reference-point
+  *    dedup, so each candidate pair is refined exactly once; a naive
   *    `intersects(a,b)` predicate would plan as a nested-loop
-  *    cartesian.
-  *  - a candidate pair sharing several cells is evaluated exactly ONCE
-  *    via reference-point dedup: the pair is kept only in the cell
-  *    containing the max of the two bbox-min corners — a cell both
-  *    covers share whenever the bboxes overlap — so there is no
-  *    distinct pass and no duplicate SAT work.
+  *    cartesian. The segment-crossing, region-exposure and
+  *    nearest-polygon joins refine the same cover.
   *  - the SAT predicate is pure fixed-order double arithmetic
   *    (orientation signs, no rounding, no epsilon), codegen-friendly
   *    and reproducible bit-for-bit by an external SQL engine.
@@ -53,6 +49,58 @@ object Overlay {
       exists(turns, _ > 0) && exists(turns, _ < 0)
     })
 
+  /** A side's bbox as Columns: (xMin, xMax, yMin, yMax). */
+  private[operators] type Box = (Column, Column, Column, Column)
+
+  /** The bbox grid cover shared by every filter-and-refine join here
+    * (PLANS.md "bbox grid cover"): each row of `as` and `bs` explodes to
+    * the `cellDeg` cells `floor(v / cellDeg)` its box spans, the two
+    * sides meet in ONE `(__cx, __cy)` equi join, and a pair is kept only
+    * in the cell of the max of the two bbox-min corners — a cell both
+    * covers share iff the boxes overlap — so every box-overlapping
+    * pair comes out exactly once, with no distinct pass. An axis whose
+    * min and max are the same Column (a point) covers one cell: no
+    * explode, and that cell is its own min. Returns the columns of `as`
+    * then `bs`; callers add the exact refine predicate.
+    */
+  private[operators] def gridPairs(as: DataFrame, aBox: Box, bs: DataFrame,
+                                   bBox: Box, cellDeg: Double): DataFrame = {
+    require(cellDeg > 0.0)
+    def cell(v: Column): Column = floor(v / lit(cellDeg)).cast("long")
+    def axes(box: Box) = Seq(("x", box._1, box._2), ("y", box._3, box._4))
+    def minCell(p: String, a: String, v0: Column, v1: Column): Column =
+      col(if (v0 == v1) s"__c$a" else s"__${p}c${a}0")
+    def cover(df: DataFrame, p: String, box: Box): DataFrame = {
+      val spans = axes(box).filter { case (_, v0, v1) => v0 != v1 }
+      val celled = spans.foldLeft(df) { case (d, (a, v0, v1)) =>
+        d.withColumn(s"__${p}c${a}0", cell(v0))
+          .withColumn(s"__${p}c${a}1", cell(v1))
+      }
+      axes(box).foldLeft(celled) { case (d, (a, v0, v1)) =>
+        d.withColumn(s"__c$a",
+          if (v0 == v1) cell(v0)
+          else explode(sequence(col(s"__${p}c${a}0"), col(s"__${p}c${a}1"))))
+      }.drop(s"__${p}cx1", s"__${p}cy1")
+    }
+    val refCell = axes(aBox).zip(axes(bBox)).map {
+      case ((a, a0, a1), (_, b0, b1)) =>
+        col(s"__c$a") === greatest(minCell("a", a, a0, a1), minCell("b", a, b0, b1))
+    }
+    cover(as, "a", aBox)
+      .join(cover(bs, "b", bBox), Seq("__cx", "__cy"))
+      .filter(refCell.reduce(_ && _))
+      .drop("__cx", "__cy", "__acx0", "__acy0", "__bcx0", "__bcy0")
+  }
+
+  /** [[gridPairs]] box of `n` vertex columns `<p>x1, <p>y1, …, <p>xn,
+    * <p>yn` (a segment is n = 2, a triangle n = 3).
+    */
+  private[operators] def vertexBox(p: String, n: Int): Box = {
+    val xs = (1 to n).map(i => col(s"${p}x$i"))
+    val ys = (1 to n).map(i => col(s"${p}y$i"))
+    (least(xs: _*), greatest(xs: _*), least(ys: _*), greatest(ys: _*))
+  }
+
   /** All intersecting (a_id, b_id) convex-polygon pairs. Inputs:
     * `as`(a_id, ax, ay), `bs`(b_id, bx, by) — each ring one pair of
     * `array<double>` vertex columns, unclosed, any width ≥ 3 per row.
@@ -64,45 +112,27 @@ object Overlay {
     */
   def convexIntersectsJoin(as: DataFrame, bs: DataFrame, cellDeg: Double,
                            validate: Boolean = true): DataFrame = {
-    require(cellDeg > 0.0)
-    def cover(df0: DataFrame, p: String): DataFrame = {
+    def side(df: DataFrame, p: String): (DataFrame, Box) = {
       val xs = col(s"${p}x")
       val ys = col(s"${p}y")
       // filter(assert_true(...).isNull) keeps every row (assert_true
       // yields NULL when the predicate holds) but cannot be pruned away
       // like an unused projected column would be
-      val df =
-        if (!validate) df0
-        else df0.filter(assert_true(isConvex(xs, ys),
+      val checked =
+        if (!validate) df
+        else df.filter(assert_true(isConvex(xs, ys),
           lit(s"non-convex $p-side ring: the SAT contract requires " +
             "convex vertices")).isNull)
-      df.withColumn(s"__${p}cx0",
-          floor(array_min(xs) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cx1",
-          floor(array_max(xs) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy0",
-          floor(array_min(ys) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy1",
-          floor(array_max(ys) / lit(cellDeg)).cast("long"))
-        .withColumn("__cx",
-          explode(sequence(col(s"__${p}cx0"), col(s"__${p}cx1"))))
-        .withColumn("__cy",
-          explode(sequence(col(s"__${p}cy0"), col(s"__${p}cy1"))))
-        .drop(s"__${p}cx1", s"__${p}cy1")
+      (checked, (array_min(xs), array_max(xs), array_min(ys), array_max(ys)))
     }
-    val dropCols = Seq("__cx", "__cy", "__acx0", "__acy0", "__bcx0", "__bcy0")
-    cover(as, "a")
-      .join(cover(bs, "b"), Seq("__cx", "__cy"))
-      // reference-point dedup: evaluate the pair ONLY in the cell of the
-      // max bbox-min corner (shared by both covers iff bboxes overlap)
-      .filter(col("__cx") === greatest(col("__acx0"), col("__bcx0")) &&
-        col("__cy") === greatest(col("__acy0"), col("__bcy0")))
+    val (a, aBox) = side(as, "a")
+    val (b, bBox) = side(bs, "b")
+    gridPairs(a, aBox, b, bBox, cellDeg)
       // the SAT runs as one array-kernel call ([[graft.core.ConvexSat]]):
       // a Column-tree SAT is O((nA+nB)²) orientation nodes, and at hull
       // widths its codegen COMPILE time dwarfed the 8-row join it guarded
       .filter(graft.functions.geo.convex_sat(
         col("ax"), col("ay"), col("bx"), col("by")))
-      .drop(dropCols: _*)
   }
 
   /** [[convexIntersectsJoin]] plus the intersection AREA of every
@@ -146,40 +176,15 @@ object Overlay {
 
   /** All properly-crossing (a_id, b_id) segment pairs. Inputs:
     * `as`(a_id, ax1, ay1, ax2, ay2), `bs`(b_id, bx1, by1, bx2, by2).
-    * Same candidate machinery as the polygon joins: each segment's bbox
-    * explodes to `cellDeg` grid cells, the sides meet in ONE cell equi
-    * join, and a pair sharing several cells is evaluated exactly once
-    * via reference-point dedup. The predicate is [[segCrossSql]] through
-    * `expr` — the oracle replays the identical text.
+    * Candidates are the [[gridPairs]] cover of the segment bboxes; the
+    * predicate is [[segCrossSql]] through `expr` — the oracle replays
+    * the identical text.
     */
   def segmentCrossJoin(as: DataFrame, bs: DataFrame,
-                       cellDeg: Double): DataFrame = {
-    require(cellDeg > 0.0)
-    def cover(df: DataFrame, p: String): DataFrame = {
-      val xs = Seq(col(s"${p}x1"), col(s"${p}x2"))
-      val ys = Seq(col(s"${p}y1"), col(s"${p}y2"))
-      df.withColumn(s"__${p}cx0",
-          floor(least(xs: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cx1",
-          floor(greatest(xs: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy0",
-          floor(least(ys: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy1",
-          floor(greatest(ys: _*) / lit(cellDeg)).cast("long"))
-        .withColumn("__cx",
-          explode(sequence(col(s"__${p}cx0"), col(s"__${p}cx1"))))
-        .withColumn("__cy",
-          explode(sequence(col(s"__${p}cy0"), col(s"__${p}cy1"))))
-        .drop(s"__${p}cx1", s"__${p}cy1")
-    }
-    cover(as, "a")
-      .join(cover(bs, "b"), Seq("__cx", "__cy"))
-      .filter(col("__cx") === greatest(col("__acx0"), col("__bcx0")) &&
-        col("__cy") === greatest(col("__acy0"), col("__bcy0")))
+                       cellDeg: Double): DataFrame =
+    gridPairs(as, vertexBox("a", 2), bs, vertexBox("b", 2), cellDeg)
       .filter(expr(segCrossSql("ax1", "ay1", "ax2", "ay2",
         "bx1", "by1", "bx2", "by2")))
-      .drop("__cx", "__cy", "__acx0", "__acy0", "__bcx0", "__bcy0")
-  }
 
   /** SQL text of the EXACT in-triangle length of a segment: parametric
     * half-plane interval clipping. For each triangle edge, the signed

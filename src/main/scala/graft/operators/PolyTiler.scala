@@ -17,7 +17,7 @@ import graft.sources.PolyRegistry
   *
   * Scale shape: the (polygon × tile) fan-out is computed as a DataFrame of
   * keys (cheap), the single shuffle groups by tile, and clipping/encoding
-  * stream per tile via mapGroups. Polygon registries are static per JVM —
+  * stream per tile via flatMapGroups. Polygon registries are static per JVM —
   * no broadcast of JTS objects (they are not kryo-friendly).
   */
 object PolyTiler {
@@ -37,8 +37,8 @@ object PolyTiler {
     * ships one row per (polygon id, zoom) — tiny even at 10⁵ polygons —
     * and each task expands its polygons' covering tiles (at z12 worldwide
     * that is millions of rows the driver never holds). One shuffle groups
-    * by tile; clipping/encoding stream per tile via mapGroups against the
-    * per-JVM cached registry geometries.
+    * by tile; clipping/encoding stream per tile through [[encodeTile]]
+    * against the per-JVM cached registry geometries.
     */
   def buildPolygonTiles(spark: SparkSession, zooms: Seq[Int],
                         registry: Int = PolyRegistry.Admin,
@@ -64,16 +64,31 @@ object PolyTiler {
       .repartition(col("tile_id"))
       .as[(Long, Long)]
       .groupByKey(_._1)
-      .mapGroups { (tileId: Long, rows: Iterator[(Long, Long)]) =>
-        encodeTile(tileId, rows.map(_._2).toArray.sorted, reg, layer, ext)
+      .flatMapGroups { (tileId: Long, rows: Iterator[(Long, Long)]) =>
+        encodeTile(tileId, rows.map(_._2).toSeq.sorted.map { id =>
+          val p = PolyRegistry.polyById(reg, id)
+          // per-JVM cached geometry
+          (id, PolyRegistry.jts(reg, id), Seq("admin_id" -> MvtEncoder.IVal(id),
+            "name" -> MvtEncoder.SVal(p.name),
+            "level" -> MvtEncoder.IVal(p.level.toLong)))
+        }, layer, ext).iterator
       }
-      .filter(_.n_features > 0)
   }
 
   private lazy val gf = new GeometryFactory()
 
-  def encodeTile(tileId: Long, adminIds: Array[Long], registry: Int,
-                 layerName: String, extent: Int): TileRow = {
+  /** One tile of the layer: each (id, geometry, tags) feature is clipped
+    * to the tile envelope plus a `BufferPx` buffer, Douglas-Peucker
+    * simplified at one pixel, and encoded as MVT feature `id + 1`.
+    * None when every feature clips to nothing — a bbox cover
+    * over-approximates the polygon (e.g. tile squares at a convex
+    * hull's bbox corners), and zero-feature rows with empty mvt_bytes
+    * would bloat the serving table with tiles the point tiler never
+    * writes.
+    */
+  private def encodeTile(tileId: Long,
+                         feats: Seq[(Long, Geometry, Seq[(String, MvtEncoder.TagValue)])],
+                         layerName: String, extent: Int): Option[TileRow] = {
     val z = WebMercator.tileIdZoom(tileId)
     val tx = WebMercator.tileIdX(tileId)
     val ty = WebMercator.tileIdY(tileId)
@@ -88,25 +103,19 @@ object PolyTiler {
       new Coordinate(lonMin - bufLon, latMin - bufLat)))
     // DP tolerance: one pixel in degrees at this tile
     val tolerance = (lonMax - lonMin) / extent
-    val feats = adminIds.toSeq.flatMap { id =>
-      val p = PolyRegistry.polyById(registry, id)
-      val jts = PolyRegistry.jts(registry, id) // per-JVM cached geometry
-      val clipped = jts.intersection(envelope)
+    val encoded = feats.flatMap { case (id, geom, tags) =>
+      val clipped = geom.intersection(envelope)
       if (clipped.isEmpty) None
       else {
         val simplified = DouglasPeuckerSimplifier.simplify(clipped, tolerance)
         val rings = geometryRings(simplified, z, tx, ty, extent)
         if (rings.isEmpty) None
-        else Some(MvtEncoder.Feature(id + 1, MvtEncoder.GeomPolygon, rings,
-          Seq("admin_id" -> MvtEncoder.IVal(id),
-            "name" -> MvtEncoder.SVal(p.name),
-            "level" -> MvtEncoder.IVal(p.level.toLong))))
+        else Some(MvtEncoder.Feature(id + 1, MvtEncoder.GeomPolygon, rings, tags))
       }
     }
-    val bytes =
-      if (feats.isEmpty) Array.empty[Byte]
-      else MvtEncoder.encodeTile(Seq(layerName -> feats), extent)
-    TileRow(z, tx, ty, feats.length, bytes)
+    if (encoded.isEmpty) None
+    else Some(TileRow(z, tx, ty, encoded.length,
+      MvtEncoder.encodeTile(Seq(layerName -> encoded), extent)))
   }
 
   /** Tile ARBITRARY polygon rows — the bridge that turns DERIVED
@@ -149,41 +158,10 @@ object PolyTiler {
       }
       .groupByKey(_._1)
       .flatMapGroups { (tileId, it) =>
-        val z = WebMercator.tileIdZoom(tileId)
-        val tx = WebMercator.tileIdX(tileId)
-        val ty = WebMercator.tileIdY(tileId)
-        val (lonMin, latMin, lonMax, latMax) = WebMercator.tileBounds(z, tx, ty)
-        val bufLon = (lonMax - lonMin) * BufferPx / ext
-        val bufLat = (latMax - latMin) * BufferPx / ext
-        val envelope = gf.createPolygon(Array(
-          new Coordinate(lonMin - bufLon, latMin - bufLat),
-          new Coordinate(lonMax + bufLon, latMin - bufLat),
-          new Coordinate(lonMax + bufLon, latMax + bufLat),
-          new Coordinate(lonMin - bufLon, latMax + bufLat),
-          new Coordinate(lonMin - bufLon, latMin - bufLat)))
-        val tolerance = (lonMax - lonMin) / ext
         val reader = new org.locationtech.jts.io.WKTReader(gf)
-        val feats = it.toSeq.sortBy(_._2).flatMap { case (_, id, wkt) =>
-          val clipped = reader.read(wkt).intersection(envelope)
-          if (clipped.isEmpty) None
-          else {
-            val simplified =
-              DouglasPeuckerSimplifier.simplify(clipped, tolerance)
-            val rings = geometryRings(simplified, z, tx, ty, ext)
-            if (rings.isEmpty) None
-            else Some(MvtEncoder.Feature(id + 1, MvtEncoder.GeomPolygon,
-              rings, Seq("geom_id" -> MvtEncoder.IVal(id))))
-          }
-        }
-        // a bbox cover over-approximates the polygon (e.g. tile squares
-        // at a convex hull's bbox corners): groups whose every candidate
-        // clips to empty emit NOTHING — zero-feature rows with empty
-        // mvt_bytes would bloat the serving table with tiles the point
-        // tiler never writes
-        if (feats.isEmpty) Iterator.empty
-        else Iterator.single(
-          TileRow(z, tx, ty, feats.length,
-            MvtEncoder.encodeTile(Seq(layer -> feats), ext)))
+        encodeTile(tileId, it.toSeq.sortBy(_._2).map { case (_, id, wkt) =>
+          (id, reader.read(wkt), Seq("geom_id" -> MvtEncoder.IVal(id)))
+        }, layer, ext).iterator
       }
   }
 

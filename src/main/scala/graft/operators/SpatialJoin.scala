@@ -100,25 +100,21 @@ object SpatialJoin {
 
   /** Left PIP tag: the inner path with `explode_outer`, so a point
     * matching no polygon (or with a null coordinate) keeps exactly one
-    * row with null admin columns; names attach via a broadcast of the
-    * tiny registry table. No window and no unique-key requirement — the
-    * big side never exchanges, which removes the most expensive shuffle
-    * of the MVT pipeline. Adds `admin_id`, `admin_name`.
+    * row with null admin columns. The name is a pure function of the
+    * registry id, so it attaches through a literal id → name map: no
+    * join and no broadcast job. No window and no unique-key requirement
+    * — the big side never exchanges, which removes the most expensive
+    * shuffle of the MVT pipeline. Adds `admin_id`, `admin_name`.
     */
   def pipJoinLeftRtree(points: DataFrame, res: Int = AdminPolygons.CoverRes,
                        registry: Int = PolyRegistry.Admin,
                        level: Option[Int] = None): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val all = PolyRegistry.polys(registry)
     val polys = level.fold(all)(l => all.filter(_.level == l))
-    val names = polys.map(p => (p.adminId, p.name)).toDF("admin_id", "admin_name")
-    val inCols = points.columns
+    val names = typedLit(polys.map(p => p.adminId -> p.name).toMap)
     points
       .withColumn("admin_id", explode_outer(pipHits(res, registry, level)))
-      .join(broadcast(names), Seq("admin_id"), "left")
-      .select((inCols.toIndexedSeq.map(col) :+ col("admin_id")
-        :+ col("admin_name")): _*)
+      .withColumn("admin_name", names(col("admin_id")))
   }
 
   /** SQL text of the EXACT point-to-triangle squared distance: 0 when
@@ -161,43 +157,31 @@ object SpatialJoin {
     * its exact squared distance — the proximity companion of the PIP
     * join (inside → dist 0) and of q94's point-point distance band.
     *
-    * Scale shape: each triangle's bbox, EXPANDED by the radius, explodes
-    * to planar-grid cells (registry-sized fan-out); each point maps to
-    * exactly ONE cell, so every candidate pair meets exactly once (no
-    * distinct pass) in one cell equi join — a naive dist ≤ r predicate
-    * against the registry would plan as a nested loop. The argmin is a
-    * point-keyed window ordered (dist2, admin_id) — deterministic under
-    * ties because both engines see bit-identical dist2.
+    * Scale shape: the [[Overlay.gridPairs]] cover of each point against
+    * each triangle's bbox EXPANDED by the radius (registry-sized
+    * fan-out); a point covers exactly ONE cell, so every candidate pair
+    * meets exactly once in one cell equi join — a naive dist ≤ r
+    * predicate against the registry would plan as a nested loop. The
+    * argmin is a point-keyed window ordered (dist2, admin_id) —
+    * deterministic under ties because both engines see bit-identical
+    * dist2.
     *
     * `tris` columns: (b_id, bx1, by1, bx2, by2, bx3, by3).
     */
   def nearestPolygonWithin(points: DataFrame, tris: DataFrame,
                            radiusDeg: Double, cellDeg: Double,
                            idCol: String = "doc_id"): DataFrame = {
-    require(radiusDeg > 0.0 && cellDeg > 0.0)
+    require(radiusDeg > 0.0)
     import org.apache.spark.sql.expressions.Window
-    val xs = Seq(col("bx1"), col("bx2"), col("bx3"))
-    val ys = Seq(col("by1"), col("by2"), col("by3"))
-    val cover = tris
-      .withColumn("__cx0",
-        floor((least(xs: _*) - radiusDeg) / cellDeg).cast("long"))
-      .withColumn("__cx1",
-        floor((greatest(xs: _*) + radiusDeg) / cellDeg).cast("long"))
-      .withColumn("__cy0",
-        floor((least(ys: _*) - radiusDeg) / cellDeg).cast("long"))
-      .withColumn("__cy1",
-        floor((greatest(ys: _*) + radiusDeg) / cellDeg).cast("long"))
-      .withColumn("__cx", explode(sequence(col("__cx0"), col("__cx1"))))
-      .withColumn("__cy", explode(sequence(col("__cy0"), col("__cy1"))))
-      .drop("__cx0", "__cx1", "__cy0", "__cy1")
-    val pts = points.select(col(idCol), col("lon"), col("lat"),
-      floor(col("lon") / cellDeg).cast("long").as("__cx"),
-      floor(col("lat") / cellDeg).cast("long").as("__cy"))
+    val pts = points.select(col(idCol), col("lon"), col("lat"))
+    val (x0, x1, y0, y1) = Overlay.vertexBox("b", 3)
+    val grown = (x0 - radiusDeg, x1 + radiusDeg, y0 - radiusDeg, y1 + radiusDeg)
     val d2 = expr(pointTriDist2Sql("lon", "lat",
       Seq(("bx1", "by1"), ("bx2", "by2"), ("bx3", "by3"))))
     val w = Window.partitionBy(idCol)
       .orderBy(col("__d2").asc, col("b_id").asc)
-    pts.join(cover, Seq("__cx", "__cy"))
+    Overlay.gridPairs(pts, (col("lon"), col("lon"), col("lat"), col("lat")),
+        tris, grown, cellDeg)
       .withColumn("__d2", d2)
       .filter(col("__d2") <= lit(radiusDeg) * lit(radiusDeg))
       .withColumn("__rn", row_number().over(w))

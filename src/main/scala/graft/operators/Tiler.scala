@@ -39,9 +39,10 @@ final case class TileRowF(zoom: Int, x: Long, y: Long, n_features: Int,
   * one compact artifact per group.
   */
 object Tiler {
-  /** Zoom fan-out + tile assignment + feature key (pure column math, no
-    * shuffle). Output carries zoom, tile_id, fkey — ready for a resume
-    * anti-join before the heavy encode.
+  /** Feature key + zoom fan-out + tile assignment (pure column math, no
+    * shuffle). Output carries fkey, zoom, tile_id — ready for a resume
+    * anti-join before the heavy encode. The key is hashed once per
+    * feature, before the zoom explode copies it.
     */
   def assignTiles(features: DataFrame, zooms: Seq[Int]): DataFrame = {
     val withName = if (features.columns.contains("name")) features
@@ -49,10 +50,10 @@ object Tiler {
     val withKind = if (withName.columns.contains("kind")) withName
       else withName.withColumn("kind", lit("point"))
     withKind
+      .withColumn("fkey", xxhash64(col("lon"), col("lat"), col("kind"), col("name")))
       .withColumn("zoom", explode(array(zooms.map(lit(_)): _*)))
       .withColumn("tile_id",
         graft.functions.geo.tile_id(col("lon"), col("lat"), col("zoom")))
-      .withColumn("fkey", xxhash64(col("lon"), col("lat"), col("kind"), col("name")))
   }
 
   /** features(lon, lat, kind?, name?, admin_name?) → tiles at the given

@@ -52,13 +52,13 @@ object Trajectory {
   /** Region EXPOSURE: total in-polygon track length per (track,
     * polygon) — "how long does each track spend inside each admin
     * region", the time-in-region analysis over the same machinery as
-    * the crossing join. Candidates come from bbox cells of both sides
-    * meeting in ONE cell equi join with reference-point dedup (each
-    * pair clipped exactly once); the clipped length is the codegen'd
-    * parametric half-plane interval ([[Overlay.segTriClipLenSql]],
-    * shared verbatim with the oracle), and per-pair lengths are
-    * quantized to a 1e-9 integer grid BEFORE the per-(track, region)
-    * sum so the aggregate is order-insensitive (the q88 discipline).
+    * the crossing join. Candidates come from the [[Overlay.gridPairs]]
+    * bbox cover (each pair clipped exactly once); the clipped length is
+    * the codegen'd parametric half-plane interval
+    * ([[Overlay.segTriClipLenSql]], shared verbatim with the oracle),
+    * and per-pair lengths are quantized to a 1e-9 integer grid BEFORE
+    * the per-(track, region) sum so the aggregate is order-insensitive
+    * (the q88 discipline).
     *
     * `segs`: (idCols..., ax1, ay1, ax2, ay2); `tris`: (admin_id,
     * bx1, by1, bx2, by2, bx3, by3). Output: idCols..., admin_id,
@@ -66,31 +66,10 @@ object Trajectory {
     */
   def regionExposure(segs: DataFrame, tris: DataFrame, cellDeg: Double,
                      idCols: Seq[String] = Seq("user_id")): DataFrame = {
-    require(cellDeg > 0.0)
-    def cover(df: DataFrame, p: String, xs: Seq[String],
-              ys: Seq[String]): DataFrame = {
-      val xc = xs.map(col); val yc = ys.map(col)
-      df.withColumn(s"__${p}cx0",
-          floor(least(xc: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cx1",
-          floor(greatest(xc: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy0",
-          floor(least(yc: _*) / lit(cellDeg)).cast("long"))
-        .withColumn(s"__${p}cy1",
-          floor(greatest(yc: _*) / lit(cellDeg)).cast("long"))
-        .withColumn("__cx",
-          explode(sequence(col(s"__${p}cx0"), col(s"__${p}cx1"))))
-        .withColumn("__cy",
-          explode(sequence(col(s"__${p}cy0"), col(s"__${p}cy1"))))
-        .drop(s"__${p}cx1", s"__${p}cy1")
-    }
     val len = expr(Overlay.segTriClipLenSql("ax1", "ay1", "ax2", "ay2",
       Seq(("bx1", "by1"), ("bx2", "by2"), ("bx3", "by3"))))
-    cover(segs, "a", Seq("ax1", "ax2"), Seq("ay1", "ay2"))
-      .join(cover(tris, "b", Seq("bx1", "bx2", "bx3"),
-        Seq("by1", "by2", "by3")), Seq("__cx", "__cy"))
-      .filter(col("__cx") === greatest(col("__acx0"), col("__bcx0")) &&
-        col("__cy") === greatest(col("__acy0"), col("__bcy0")))
+    Overlay.gridPairs(segs, Overlay.vertexBox("a", 2),
+        tris, Overlay.vertexBox("b", 3), cellDeg)
       .withColumn("__len", len)
       .filter(col("__len") > 0.0)
       .withColumn("__len_e9",

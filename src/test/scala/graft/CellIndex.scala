@@ -1,14 +1,17 @@
-package graft.core
+package graft
 
-/** Common contract of a hierarchical spatial cell index — the swap point
-  * for cell-ID schemes. Two instances ship: canonical S2 (cube-face +
-  * Hilbert) and the aperture-7 `HexGrid` (H3 semantics surface). A
-  * canonical-H3 kernel would slot in as a THIRD instance of this trait
-  * and must pass the same `CellIndexLawsSpec` conformance suite — no
-  * operator changes, because every consumer (PIP cover, kNN rings,
-  * vectorize) goes through these operations (see COVERAGE.md "H3 cell-ID
-  * decision" for why canonical H3 ids are not reconstructible in this
-  * offline environment).
+import graft.core.{HexGrid, S2}
+
+/** Common contract of a hierarchical spatial cell index, as laws the
+  * cell-ID kernels must satisfy. Two instances: canonical S2 (cube-face
+  * + Hilbert) and the aperture-7 `HexGrid` (H3 semantics surface). This
+  * is a test-side conformance contract, not an engine abstraction: the
+  * operators (PIP cover, kNN rings, vectorize) call `S2` and `HexGrid`
+  * directly or through their codegen'd expressions, so a canonical-H3
+  * kernel would pass this suite as a third instance and still need
+  * those call sites changed (see COVERAGE.md
+  * "H3 cell-ID decision" for why canonical H3 ids are not
+  * reconstructible in this offline environment).
   *
   * Laws every instance must satisfy (asserted by CellIndexLawsSpec):
   *   1. resolution:  resOf(cell(p, r)) == r

@@ -1,10 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{CellIndex, HexCellIndex, S2CellIndex}
 
-/** Shared conformance suite for every CellIndex instance (the swap point
-  * where canonical H3 would slot in — see core/CellIndex.scala). The
+/** Shared conformance suite for every CellIndex instance (the laws a
+  * canonical H3 kernel would also have to pass — see CellIndex.scala). The
   * SAME laws run against canonical S2 and the aperture-7 hex grid; a
   * future H3 kernel is conformant iff it passes this suite unchanged.
   */

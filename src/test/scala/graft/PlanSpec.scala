@@ -65,6 +65,26 @@ class PlanSpec extends AnyFunSuite {
     assert(nExchanges === 1, s"expected 1 shuffle, got $nExchanges:\n${p.take(2000)}")
   }
 
+  test("MVT pipeline joins nothing: admin names are a map lookup") {
+    val pages = graft.sources.SynthPages.pagesDF(spark, 500)
+    val feats = graft.operators.GeoPipeline.pagesToFeatures(spark, pages)
+      .filter(col("lat").isNotNull)
+    val p = graft.operators.Tiler.buildTiles(feats, Seq(4, 8))
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Join"), p.take(2000))
+  }
+
+  test("grid-cover joins plan an equi join: no nested loop, no cartesian") {
+    Seq("q98_tri_overlay", "q105_convex_overlay", "q107_hull_admin_overlay",
+      "q110_clip_area", "q111_zonal_overlap", "q112_nearest_polygon",
+      "q113_border_crossings", "q114_region_exposure").foreach { q =>
+      val p = planOf(q)
+      Seq("BroadcastNestedLoopJoin", "CartesianProduct").foreach { op =>
+        assert(!p.contains(op), s"$q plans $op:\n${p.take(3000)}")
+      }
+    }
+  }
+
   test("tile encode is one native aggregate: no object decode or key lambda") {
     import spark.implicits._
     val feats = (0 until 200).map(i => (i * 0.7 - 70.0, i * 0.3 - 30.0, s"n$i"))

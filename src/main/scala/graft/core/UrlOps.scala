@@ -22,8 +22,8 @@ import java.util.Locale
   *   6. an empty path becomes `/`; a trailing `/` on a non-root path is
   *      stripped; an empty query drops its `?`.
   *
-  * Pure JVM string code, called from a codegen'd Catalyst expression
-  * (graft.functions.UrlCanonicalizeExpr) so the whole pass stays inside
+  * Pure JVM string code, called as one static kernel call
+  * (graft.functions.url.canonicalize) so the whole pass stays inside
   * whole-stage codegen. Inputs that do not look like `scheme://host...`
   * are returned unchanged (garbage in the url column must not kill a
   * 100 TB scan; the caller can filter on `url_host(url) = ''`).

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.geo
 
 /** Neighborhood smoothing and Getis-Ord G* hotspot scoring over cell
   * grids — the standard "where are the dense urban cells" analytic that
@@ -38,25 +39,10 @@ object CellSmooth {
         (col("__y") + col("__o.dy")).as("__y"), col("__v"))
     val sums = contrib.groupBy("__x", "__y")
       .agg(sum("__v").as("ring_sum"), count(lit(1)).as("ring_n"))
-    val stats = cells.agg(
-      avg(col(valCol).cast("double")).as("__mu"),
-      stddev_pop(col(valCol).cast("double")).as("__sd"),
-      count(lit(1)).as("__N"))
-    val joined = cells
+    gStar(cells, valCol, cells
       .join(sums, col(xCol).cast("long") === col("__x") &&
         col(yCol).cast("long") === col("__y"))
-      .drop("__x", "__y")
-      .crossJoin(broadcast(stats))
-    val wd = col("ring_n").cast("double")
-    val denom = col("__sd") *
-      sqrt((col("__N") * wd - wd * wd) / (col("__N") - lit(1)))
-    joined
-      .withColumn("z", round(
-        when(col("__N") > 1 && col("__sd") > 0,
-          (col("ring_sum") - wd * col("__mu")) / denom)
-          .otherwise(lit(0.0)), 6))
-      .withColumn("ring_sum", round(col("ring_sum"), 6))
-      .drop("__mu", "__sd", "__N")
+      .drop("__x", "__y"))
   }
 
   /** Hex-grid variant: same contribute→aggregate→join shape with the
@@ -68,21 +54,28 @@ object CellSmooth {
     require(k >= 1)
     val contrib = cells.select(col(cellCol).cast("long").as("__c"),
         col(valCol).cast("double").as("__v"))
-      .withColumn("__n", explode(KnnJoin.hex_kring(col("__c"), lit(k))))
+      .withColumn("__n", explode(geo.hex_kring(col("__c"), lit(k))))
       .select(col("__n").as("__c"), col("__v"))
     val sums = contrib.groupBy("__c")
       .agg(sum("__v").as("ring_sum"), count(lit(1)).as("ring_n"))
+    gStar(cells, valCol,
+      cells.join(sums, col(cellCol).cast("long") === col("__c")).drop("__c"))
+  }
+
+  /** The G* tail shared by both grids: `withSums` is `cells` joined to
+    * its window's ring_sum / ring_n; global mean, population std and
+    * count ride a 1-row broadcast cross join into the z-score.
+    */
+  private def gStar(cells: DataFrame, valCol: String,
+                    withSums: DataFrame): DataFrame = {
     val stats = cells.agg(
       avg(col(valCol).cast("double")).as("__mu"),
       stddev_pop(col(valCol).cast("double")).as("__sd"),
       count(lit(1)).as("__N"))
-    val joined = cells
-      .join(sums, col(cellCol).cast("long") === col("__c")).drop("__c")
-      .crossJoin(broadcast(stats))
     val wd = col("ring_n").cast("double")
     val denom = col("__sd") *
       sqrt((col("__N") * wd - wd * wd) / (col("__N") - lit(1)))
-    joined
+    withSums.crossJoin(broadcast(stats))
       .withColumn("z", round(
         when(col("__N") > 1 && col("__sd") > 0,
           (col("ring_sum") - wd * col("__mu")) / denom)

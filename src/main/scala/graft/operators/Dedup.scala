@@ -171,6 +171,37 @@ object Dedup {
       precomputedFp = Some("__fp")).drop("__fp")
   }
 
+  /** (idCol, pos, __h): the 1-based position and rolling hash of every
+    * length-`minLen` character window, the window stream of
+    * [[duplicatedSpans]] and [[removeDuplicatedSpans]].
+    */
+  private def charWindows(docs: DataFrame, textCol: String, idCol: String,
+                          minLen: Int): DataFrame =
+    docs.select(col(idCol),
+        posexplode(text.char_window_hashes(col(textCol), minLen)))
+      .select(col(idCol), (col("pos") + 1).as("pos"), col("col").as("__h"))
+
+  /** Gaps-and-islands merge of each document's windows (idCol, pos):
+    * one row (idCol, s, e, __nw) per maximal run of overlapping or
+    * adjacent windows, covering characters s..e with __nw windows.
+    */
+  private def windowIslands(wins: DataFrame, idCol: String,
+                            minLen: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wPrev = Window.partitionBy(idCol).orderBy(col("pos").asc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wRun = Window.partitionBy(idCol).orderBy(col("pos").asc)
+    wins
+      .withColumn("__prevEnd", max(col("pos") + lit(minLen - 1)).over(wPrev))
+      .withColumn("__new",
+        when(col("__prevEnd").isNull || col("pos") > col("__prevEnd"), 1)
+          .otherwise(0))
+      .withColumn("__island", sum(col("__new")).over(wRun))
+      .groupBy(col(idCol), col("__island"))
+      .agg(min(col("pos")).as("s"), (max(col("pos")) + lit(minLen - 1)).as("e"),
+        count(lit(1)).as("__nw"))
+  }
+
   /** Exact duplicated-substring analysis (Lee et al. 2021, "Deduplicating
     * Training Data Makes Language Models Better" — the hash-window
     * approximation of their suffix-array method): a length-`minLen` char
@@ -189,25 +220,13 @@ object Dedup {
     */
   def duplicatedSpans(docs: DataFrame, textCol: String, idCol: String,
                       minLen: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wins = docs.select(col(idCol),
-        posexplode(text.char_window_hashes(col(textCol), minLen)))
-      .select(col(idCol), (col("pos") + 1).as("pos"), col("col").as("__h"))
+    val wins = charWindows(docs, textCol, idCol, minLen)
     val dup = wins.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2).select("__h")
-    val dupWins = wins.join(dup, Seq("__h"), "left_semi")
-    val wPrev = Window.partitionBy(idCol).orderBy(col("pos").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = Window.partitionBy(idCol).orderBy(col("pos").asc)
-    val isl = dupWins
-      .withColumn("__prevEnd", max(col("pos") + lit(minLen - 1)).over(wPrev))
-      .withColumn("__new",
-        when(col("__prevEnd").isNull || col("pos") > col("__prevEnd"), 1)
-          .otherwise(0))
-      .withColumn("__island", sum(col("__new")).over(wRun))
-    val perDoc = isl.groupBy(col(idCol), col("__island"))
-      .agg((max(col("pos")) + lit(minLen - 1) - min(col("pos")) + 1)
-        .cast("long").as("__len"), count(lit(1)).as("__nw"))
+    val perDoc = windowIslands(wins.join(dup, Seq("__h"), "left_semi"),
+        idCol, minLen)
+      .select(col(idCol), (col("e") - col("s") + 1).cast("long").as("__len"),
+        col("__nw"))
       .groupBy(idCol)
       .agg(sum("__len").as("dup_chars"), sum("__nw").as("dup_windows"))
     docs.select(col(idCol),
@@ -244,9 +263,7 @@ object Dedup {
   def removeDuplicatedSpans(docs: DataFrame, textCol: String, idCol: String,
                             minLen: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val wins = docs.select(col(idCol),
-        posexplode(text.char_window_hashes(col(textCol), minLen)))
-      .select(col(idCol), (col("pos") + 1).as("pos"), col("col").as("__h"))
+    val wins = charWindows(docs, textCol, idCol, minLen)
     // later occurrences only: rank within hash by (doc, pos); rn >= 2
     // implies the hash occurs at >= 2 positions corpus-wide
     val firstWin = Window.partitionBy("__h")
@@ -255,19 +272,7 @@ object Dedup {
       .withColumn("__rn", row_number().over(firstWin))
       .filter(col("__rn") >= 2)
       .select(col(idCol), col("pos"))
-    // gaps-and-islands merge of the windows to cut (same kernel as
-    // duplicatedSpans)
-    val wPrev = Window.partitionBy(idCol).orderBy(col("pos").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = Window.partitionBy(idCol).orderBy(col("pos").asc)
-    val islands = laterDup
-      .withColumn("__prevEnd", max(col("pos") + lit(minLen - 1)).over(wPrev))
-      .withColumn("__new",
-        when(col("__prevEnd").isNull || col("pos") > col("__prevEnd"), 1)
-          .otherwise(0))
-      .withColumn("__island", sum(col("__new")).over(wRun))
-      .groupBy(col(idCol), col("__island"))
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + lit(minLen - 1)).as("e"))
+    val islands = windowIslands(laterDup, idCol, minLen)
       .groupBy(idCol)
       .agg(array_sort(collect_list(struct(col("s"), col("e")))).as("__isl"))
     val txt = col(textCol)

@@ -6,25 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core.HexGrid
 import graft.functions.geo
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
-
-/** hex_kring(cell, k) → array<bigint> of cells within ring distance k. */
-case class HexKRingExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hex_kring"
-  override protected def nullSafeEval(cell: Any, k: Any): Any =
-    new GenericArrayData(HexGrid.kRing(cell.asInstanceOf[Long], k.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (cell, k) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.core.HexGrid.kRing($cell, $k))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
 /** Exact k-nearest-neighbor join via hex cell-ring expansion (BASELINE.json
   * north_star: "computes kNN via cell-ring expansion"). Two-phase exact
   * algorithm — no driver loop over data, both phases are joins:
@@ -39,11 +20,6 @@ case class HexKRingExpr(left: Expression, right: Expression) extends BinaryExpre
   * Distance metric: squared planar degrees (matches the SQL oracle).
   */
 object KnnJoin {
-  import org.apache.spark.sql.GraftBridge.{column, expression}
-
-  def hex_kring(cell: Column, k: Column): Column =
-    column(HexKRingExpr(expression(cell), expression(k)))
-
   private def d2(qLon: Column, qLat: Column, pLon: Column, pLat: Column): Column =
     (qLon - pLon) * (qLon - pLon) + (qLat - pLat) * (qLat - pLat)
 
@@ -64,7 +40,7 @@ object KnnJoin {
 
     // ---- phase 1: probe neighborhood → per-query kth-distance bound
     val probe = qs
-      .withColumn("__cell", explode(hex_kring(col("__qcell"), lit(probeRings))))
+      .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(probeRings))))
       .join(pts, col("__cell") === col("__pcell"))
       .withColumn("__d2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))
     val wq = Window.partitionBy("q_id").orderBy(col("__d2").asc)
@@ -109,7 +85,7 @@ object KnnJoin {
     while (leftover == null && sparseQ.head(1).nonEmpty) {
       rings = math.min(rings.toLong * 2L, worldRings.toLong).toInt
       val reprobe = sparseQ
-        .withColumn("__cell", explode(hex_kring(col("__qcell"), lit(rings))))
+        .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(rings))))
         .join(pts, col("__cell") === col("__pcell"))
         .withColumn("__d2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))
       if (rings >= worldRings) {
@@ -137,7 +113,7 @@ object KnnJoin {
     // ---- phase 2: guaranteed-coverage join + exact top-k
     val expand = graduated.foldLeft(filled)(_ unionByName _)
     val cand = expand
-      .withColumn("__cell", explode(hex_kring(col("__qcell"), col("__rings"))))
+      .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), col("__rings"))))
       .join(pts, col("__cell") === col("__pcell"))
       .withColumn("dist2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))
       .select("q_id", "p_id", "dist2")
@@ -175,7 +151,7 @@ object KnnJoin {
       .withColumn("__pcell", geo.hex_cell(col("lon"), col("lat"), lit(res)))
     queries
       .withColumn("__qcell", geo.hex_cell(col("q_lon"), col("q_lat"), lit(res)))
-      .withColumn("__cell", explode(hex_kring(col("__qcell"), lit(rings))))
+      .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(rings))))
       .join(pts, col("__cell") === col("__pcell"))
       .withColumn("dist2",
         d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))

@@ -5,32 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.functions.geo
 import graft.sources.{AdminPolygons, PolyRegistry}
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.types._
-
-/** pip_query(cell, lon, lat) → array of admin_ids covering the point,
-  * resolved through the per-cell candidate list (registry/res are
-  * literals).
-  */
-case class PipQueryExpr(first: Expression, second: Expression, third: Expression,
-    registry: Int, res: Int, level: Int = -1)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pip_query"
-  override protected def nullSafeEval(cell: Any, lon: Any, lat: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      PolyRegistry.queryTree(registry, res, level, cell.asInstanceOf[Long],
-        lon.asInstanceOf[Double], lat.asInstanceOf[Double]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (cell, lon, lat) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.sources.PolyRegistry.queryTree($registry, $res, $level, $cell, $lon, $lat))")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
 /** Point-in-polygon join via hex-cell prefix (BASELINE.json north_star:
   * "point-in-polygon joins against admin-boundary polygons using a
   * broadcast R-tree per H3 cell prefix").
@@ -62,13 +36,9 @@ object SpatialJoin {
     withCell.join(crowds, "cell")
   }
 
-  import org.apache.spark.sql.GraftBridge.{column, expression}
-
   private def pipHits(res: Int, registry: Int, level: Option[Int]): Column =
-    column(PipQueryExpr(
-      expression(geo.hex_cell(col("lon"), col("lat"), lit(res))),
-      expression(col("lon")), expression(col("lat")), registry, res,
-      level.getOrElse(-1)))
+    geo.pip_query(geo.hex_cell(col("lon"), col("lat"), lit(res)),
+      col("lon"), col("lat"), registry, res, level.getOrElse(-1))
 
   /** Inner PIP: one row per (point, covering polygon); points matching
     * no polygon — and points with a null coordinate — drop out. `points`

@@ -31,6 +31,8 @@ case class KernelCall(name: String, target: Class[_], method: String,
                       returnNullable: Boolean = false)
     extends RuntimeReplaceable {
   override def prettyName: String = name
+  // read from the fields, so asking never builds the replacement, which
+  // needs the children's types
   override def dataType: DataType = resultType
   override def nullable: Boolean = returnNullable || children.exists(_.nullable)
   override protected def stringArgs: Iterator[Any] = (children ++ consts).iterator

@@ -688,13 +688,9 @@ object SparkEntry {
         .select(col("doc_id").as("id_a"), (col("doc_id") - 7).as("id_b"))
       val clusters = graft.operators.Dedup.connectedComponents(
         star.unionByName(bridge))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("cluster_id")
-        .orderBy(col("n_chars").desc, col("id").asc)
       clusters.join(d.select(col("doc_id").as("id"), col("n_chars")), "id")
-        .withColumn("rn", row_number().over(w))
         .groupBy("cluster_id")
-        .agg(min(when(col("rn") === 1, col("id"))).as("keep_id"),
+        .agg(graft.operators.Dedup.keeper(-col("n_chars"), col("id")).as("keep_id"),
           count(lit(1)).as("n_docs"),
           max(col("n_chars")).cast("long").as("max_chars"))
     }),

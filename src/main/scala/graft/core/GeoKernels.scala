@@ -41,16 +41,6 @@ object GeoKernels {
     dx * dx + dy * dy
   }
 
-  /** Haversine distance in kilometers (reporting metric). */
-  def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val R = 6371.0088
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val dp = p2 - p1; val dl = math.toRadians(lon2 - lon1)
-    val a = math.sin(dp / 2) * math.sin(dp / 2) +
-      math.cos(p1) * math.cos(p2) * math.sin(dl / 2) * math.sin(dl / 2)
-    2 * R * math.asin(math.min(1.0, math.sqrt(a)))
-  }
-
   /** Mean Earth radius (IUGG), meters. */
   val EarthRadiusM: Double = 6371008.8
 
@@ -58,8 +48,6 @@ object GeoKernels {
     * 1:1 in the DuckDB oracle SQL (SparkEntry q44: explicit `* π / 180`,
     * sin half-angles squared, asin(sqrt(h)), R = 6371008.8) — same
     * float sequence both engines, so round(…,2) meters compare exactly.
-    * (haversineKm above is the looser reporting variant; this one is the
-    * oracle-parity metric.)
     */
   def haversineM(lon1: Double, lat1: Double,
                  lon2: Double, lat2: Double): Double = {

@@ -99,8 +99,7 @@ object Curate {
           length(col("text")).as("__len"))
         val keepers = comps.join(lens, Seq("id"))
           .groupBy("cluster_id")
-          .agg(max(struct(col("__len"), (-col("id")).as("nid"))).as("__k"))
-          .select((-col("__k.nid")).as("__keep_fp"))
+          .agg(Dedup.keeper(-col("__len"), col("id")).as("__keep_fp"))
         val losers = comps
           .join(keepers, comps("id") === keepers("__keep_fp"), "left_anti")
           .select(col("id").as("fp"))

@@ -7,25 +7,14 @@ import graft.functions.text
 import graft.functions.vec
 
 /** Deduplication operators for large-scale training-data pipelines.
-  * All variants follow the same scale shape: cheap per-row signature
-  * (codegen'd) → banded equi-join ON IDS ONLY to surface candidates
-  * (never all-pairs, never payloads through the fan-out) → exact
-  * verification with payloads joined back exactly once — the
-  * candidate-then-verify discipline of the reference's coarse-then-exact
-  * pipeline stages.
+  * The near-dup pair operators share one scale shape: cheap per-row
+  * signature (codegen'd) → ONE blocked self-join on ids only to surface
+  * candidates ([[blockPairs]]: never all-pairs, never payloads through
+  * the fan-out) → exact verification with payloads joined back exactly
+  * once ([[withBothSides]]) — the candidate-then-verify discipline of
+  * the reference's coarse-then-exact pipeline stages.
   */
 object Dedup {
-  /** Exact dedup by full-text hash: one surviving row per distinct text.
-    * Returns (idCol, textHash, n_copies, is_keeper) per input row — the
-    * keeper is the min id (deterministic).
-    */
-  def exact(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    docs
-      .withColumn("text_fp", text.fingerprint64(col(textCol)))
-      .groupBy("text_fp")
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-  }
-
   /** Soft deduplication — frequency-based DOWNWEIGHTING instead of
     * dropping: every document keeps a training weight 1/n_copies so each
     * distinct content contributes unit mass to the loss (the weighted
@@ -118,19 +107,6 @@ object Dedup {
       .drop("__u", "__k", "__boiler", "__keep")
   }
 
-  /** Incremental crawl dedup: admit only new documents whose text is (a)
-    * absent from the existing corpus — anti join on the 64-bit content
-    * fingerprint against the corpus fingerprint set, the thing a crawl
-    * pipeline keeps as a compact standing table — and (b) unique within
-    * the incoming batch (min-id keeper, consistent with `exact`). Returns
-    * the admitted rows of `incoming` unchanged.
-    *
-    * Scale shape: the corpus side is fingerprints only (8 bytes/doc — a
-    * 10¹²-doc corpus is ~8 TB of fps vs the corpus itself); the anti join
-    * shuffles (fp, id), never text, and the in-batch winnow is one
-    * fp-keyed window. Near-dup admission composes downstream (LSH bands
-    * of admitted docs vs the corpus band table — same join shape).
-    */
   /** One row per 64-bit content fingerprint: the min-`idCol` keeper —
     * the in-batch exact-dedup winnow shared by [[incrementalDedup]],
     * the curation pass, and streaming admission (one definition of the
@@ -159,6 +135,19 @@ object Dedup {
     }
   }
 
+  /** Incremental crawl dedup: admit only new documents whose text is (a)
+    * absent from the existing corpus — anti join on the 64-bit content
+    * fingerprint against the corpus fingerprint set, the thing a crawl
+    * pipeline keeps as a compact standing table — and (b) unique within
+    * the incoming batch ([[keepFirstByContent]]'s min-id keeper).
+    * Returns the admitted rows of `incoming` unchanged.
+    *
+    * Scale shape: the corpus side is fingerprints only (8 bytes/doc — a
+    * 10¹²-doc corpus is ~8 TB of fps vs the corpus itself); the anti join
+    * shuffles (fp, id), never text, and the in-batch winnow is one
+    * fp-keyed window. Near-dup admission composes downstream (LSH bands
+    * of admitted docs vs the corpus band table — same join shape).
+    */
   def incrementalDedup(incoming: DataFrame, corpusFps: DataFrame,
                        textCol: String, idCol: String,
                        fpCol: String = "text_fp"): DataFrame = {
@@ -296,6 +285,52 @@ object Dedup {
           .as("removed_chars"))
   }
 
+  /** The candidate step of every blocked near-dup join (PLANS.md,
+    * "near-dup candidate pairs"): `blocks(id, keys…, carry…)` meets
+    * itself on `keys`; each pair of ids sharing a (non-null) key comes out
+    * once as (id_a, id_b, <carry>_a…, <carry>_b…), id_a < id_b. `refine`
+    * reads only carried columns and runs before the distinct's shuffle.
+    * Payloads stay out of `blocks`: see [[withBothSides]].
+    */
+  private[operators] def blockPairs(blocks: DataFrame, keys: Seq[String],
+                                    carry: Seq[String] = Nil,
+                                    refine: Column = lit(true)): DataFrame = {
+    val cols = "id" +: carry
+    def side(s: String) =
+      blocks.select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys)
+      .filter(col("id_a") < col("id_b") && refine)
+      .select((cols.map(c => col(s"${c}_a")) ++ cols.map(c => col(s"${c}_b"))): _*)
+      .distinct()
+  }
+
+  /** Attaches `payload(id, cols…)` to both sides of a pair set
+    * (id_a, id_b, …) as <col>_a and <col>_b: one join per side, so each
+    * payload crosses the wire once per surviving pair.
+    */
+  private def withBothSides(pairs: DataFrame, payload: DataFrame): DataFrame =
+    Seq("a", "b").foldLeft(pairs) { (acc, s) =>
+      acc.join(payload.select(payload.columns.map(c => col(c).as(s"${c}_$s")): _*),
+        Seq(s"id_$s"))
+    }
+
+  /** (blk, key) rows of a long signature: `nBlocks` blocks of `blockBits`
+    * bits each, block i holding bits [i·blockBits, (i+1)·blockBits).
+    */
+  private def bitBlocks(sig: Column, nBlocks: Int, blockBits: Int): Column =
+    inline(array((0 until nBlocks).map(i =>
+      struct(lit(i).as("blk"),
+        shiftright(sig, i * blockBits).bitwiseAND(lit((1L << blockBits) - 1))
+          .as("key"))): _*))
+
+  /** The member of each duplicate group that survives: the least
+    * `score`, ties to the least `id`, null scores last. An aggregate, for
+    * `groupBy(group).agg(keeper(score, id))`; pass a negated measure to
+    * keep the largest (the id itself is never negated).
+    */
+  private[graft] def keeper(score: Column, id: Column): Column =
+    min(struct(score.isNull.as("n"), score.as("s"), id.as("id"))).getField("id")
+
   /** MinHash+LSH near-dup pairs: signature k, `bands` bands (k/bands rows
     * per band), word-`shingle`-grams. Returns (id_a, id_b, jaccard) with
     * id_a < id_b and exact-verified jaccard ≥ threshold.
@@ -313,14 +348,8 @@ object Dedup {
     val banded = docs.select(col(idCol).as("id"),
       explode(text.minhash_bands(col(textCol), k, bands, shingle)).as("band_key"))
       .localCheckpoint(true)
-    val a = banded.select(col("band_key"), col("id").as("id_a"))
-    val b = banded.select(col("band_key"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val ta = docs.select(col(idCol).as("id_a"), col(textCol).as("txt_a"))
-    val tb = docs.select(col(idCol).as("id_b"), col(textCol).as("txt_b"))
-    cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
+    withBothSides(blockPairs(banded, Seq("band_key")),
+        docs.select(col(idCol).as("id"), col(textCol).as("txt")))
       .withColumn("jaccard", text.jaccard_shingles(col("txt_a"), col("txt_b"), shingle))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
@@ -379,28 +408,21 @@ object Dedup {
     * blocks (any pair within hamming ≤ 3 must agree on ≥1 block —
     * pigeonhole); exact hamming verification on candidates. The simhash
     * itself (8 bytes) rides the fan-out — re-deriving it would cost more
-    * than carrying it.
+    * than carrying it — so verification is the refine step and needs no
+    * join back.
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-block pigeonhole guarantees hamming <= 3")
-    val sigs = docs.select(col(idCol).as("id"),
-      text.simhash64(col(textCol)).as("sh"))
-    val blocks = sigs.withColumn("block",
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("blk"),
-          shiftright(col("sh"), i * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*)))
-      .select(col("id"), col("sh"), col("block.blk"), col("block.key"))
+    def hamming = bit_count(col("sh_a").bitwiseXOR(col("sh_b")))
+    val blocks = docs
+      .select(col(idCol).as("id"), text.simhash64(col(textCol)).as("sh"))
+      .select(col("id"), col("sh"), bitBlocks(col("sh"), 4, 16))
       // materialized once: simhash64 re-tokenizes the document per side
       .localCheckpoint(true)
-    val a = blocks.select(col("blk"), col("key"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = blocks.select(col("blk"), col("key"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("blk", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sh_a", "sh_b").distinct()
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+    blockPairs(blocks, Seq("blk", "key"), carry = Seq("sh"),
+        refine = hamming <= maxHamming)
+      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
   }
 
   /** Exact word-n-gram Jaccard pairs — fully SQL-expressible output
@@ -426,6 +448,7 @@ object Dedup {
     // materialized once: three consumers (the prefix index + BOTH sides
     // of the verification join) would otherwise re-run the shingling —
     // the single most expensive projection here — per consumer
+    val blk = blockCol.map(_ => col("blk")).toSeq
     val base = docs.select(
       (col(idCol).as("id") +: col(textCol).as("txt") +:
         blockCol.map(c => col(c).as("blk")).toSeq): _*)
@@ -433,74 +456,49 @@ object Dedup {
       .withColumn("n_grams", size(col("grams")))
       .drop("txt")
       .localCheckpoint(true)
-    val exploded = base.select(
-      (Seq(col("id"), col("n_grams"), explode(col("grams")).as("gram")) ++
-        blockCol.map(_ => col("blk")).toSeq): _*)
     // global order = (document frequency asc, gram asc): rarest first
-    val dfWin = Window.partitionBy(
-      (blockCol.map(_ => col("blk")).toSeq :+ col("gram")): _*)
+    val dfWin = Window.partitionBy((blk :+ col("gram")): _*)
     val docWin = Window.partitionBy(col("id"))
       .orderBy(col("gram_df").asc, col("gram").asc)
-    val prefix = exploded
+    val prefix = base
+      .select((Seq(col("id"), col("n_grams"), explode(col("grams")).as("gram")) ++
+        blk): _*)
       .withColumn("gram_df", count(lit(1)).over(dfWin))
       .withColumn("rk", row_number().over(docWin))
       // prefix length n − ⌈t·n⌉ + 1 (exact for Jaccard ≥ t; see Scaladoc)
       .filter(col("rk") <=
         col("n_grams") - ceil(lit(threshold) * col("n_grams")) + 1)
-    val joinKeys = "gram" +: blockCol.map(_ => "blk").toSeq
-    val l = prefix.select(
-      (col("gram") +: col("id").as("id_a") +: col("n_grams").as("na") +:
-        blockCol.map(_ => col("blk")).toSeq): _*)
-    val r = prefix.select(
-      (col("gram") +: col("id").as("id_b") +: col("n_grams").as("nb") +:
-        blockCol.map(_ => col("blk")).toSeq): _*)
-    val cand = l.join(r, joinKeys)
-      .filter(col("id_a") < col("id_b"))
-      // length filter: Jaccard ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|)
-      .filter(least(col("na"), col("nb")) >=
-        lit(threshold) * greatest(col("na"), col("nb")))
-      .select("id_a", "id_b").distinct()
+    // length filter: Jaccard ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|)
+    val lengthOk = least(col("n_grams_a"), col("n_grams_b")) >=
+      lit(threshold) * greatest(col("n_grams_a"), col("n_grams_b"))
+    val cand = blockPairs(prefix, "gram" +: blockCol.map(_ => "blk").toSeq,
+      carry = Seq("n_grams"), refine = lengthOk)
     // exact verification: gram arrays joined back once per candidate pair
-    val ga = base.select(col("id").as("id_a"), col("grams").as("ga"),
-      col("n_grams").as("na"))
-    val gb = base.select(col("id").as("id_b"), col("grams").as("gb"),
-      col("n_grams").as("nb"))
-    cand.join(ga, Seq("id_a")).join(gb, Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+    withBothSides(cand, base.select("id", "grams"))
+      .withColumn("inter",
+        size(array_intersect(col("grams_a"), col("grams_b"))).cast("long"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("n_grams_a") + col("n_grams_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Embedding near-dup pairs: random-hyperplane LSH blocking (16-bit
-    * blocks of an `nBits`-bit signature) + exact cosine verification.
-    * Vectors never ride the block fan-out — ids only; vectors join back
-    * once on the distinct candidate pairs.
+  /** Embedding near-dup pairs: random-hyperplane LSH blocking
+    * (`blockBits`-bit blocks of an `nBits`-bit signature) + exact cosine
+    * verification. Vectors never ride the block fan-out — ids only;
+    * vectors join back once on the distinct candidate pairs.
     */
   def embeddingPairs(vecs: DataFrame, vecCol: String, idCol: String,
                      threshold: Double = 0.95, nBits: Int = 64,
                      blockBits: Int = 8, seed: Long = 77L): DataFrame = {
-    val nBlocks = nBits / blockBits
-    val mask = (1L << blockBits) - 1
-    val sigs = vecs.select(col(idCol).as("id"),
-      vec.rp_signature(col(vecCol), nBits, seed).as("sig"))
     // materialized once: both sides of the self-join would otherwise
     // re-run the rp_signature projection (64 dot products per vector)
-    val blocks = sigs.withColumn("block",
-      explode(array((0 until nBlocks).map(i =>
-        struct(lit(i).as("blk"),
-          shiftright(col("sig"), i * blockBits).bitwiseAND(lit(mask)).as("key"))): _*)))
-      .select(col("id"), col("block.blk"), col("block.key"))
+    val blocks = vecs
+      .select(col(idCol).as("id"), vec.rp_signature(col(vecCol), nBits, seed).as("sig"))
+      .select(col("id"), bitBlocks(col("sig"), nBits / blockBits, blockBits))
       .localCheckpoint(true)
-    val a = blocks.select(col("blk"), col("key"), col("id").as("id_a"))
-    val b = blocks.select(col("blk"), col("key"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("blk", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val va = vecs.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
-    val vb = vecs.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
-    cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
+    withBothSides(blockPairs(blocks, Seq("blk", "key")),
+        vecs.select(col(idCol).as("id"), col(vecCol).as("v")))
       .withColumn("cos", vec.cosine_sim(col("v_a"), col("v_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine"))

@@ -162,36 +162,27 @@ object Fitting {
       .withColumn("bf", floor(col("v") / binWidth).cast("long"))
       .withColumn("bc", floor(col("v") / (binWidth * shrink)).cast("long"))
 
-    def levelStats(binCol: String, fracMin: Double) = {
+    // per grid level: bins counted ONCE, feeding both the valid-bin
+    // stats and the median over rows in valid bins (computed for all
+    // groups, selected per the chosen grid below)
+    def level(binCol: String, fracMin: Double, tag: String) = {
       val counts = binned.groupBy((gcols :+ col(binCol)): _*)
         .agg(count(lit(1)).as("bin_n"))
-      counts.groupBy(gcols: _*).agg(
+      val stats = counts.groupBy(gcols: _*).agg(
         count(lit(1)).as("n_bins"),
-        sum(when(col("bin_n") >= minPerBin, 1L).otherwise(0L)).as("n_valid"))
-        .withColumn("ok",
-          col("n_valid") >= minBins &&
-            col("n_valid").cast("double") / col("n_bins") >= fracMin)
+        sum(when(col("bin_n") >= minPerBin, 1L).otherwise(0L)).as(s"nv_$tag"))
+        .withColumn(s"ok_$tag", col(s"nv_$tag") >= minBins &&
+          col(s"nv_$tag").cast("double") / col("n_bins") >= fracMin)
+        .drop("n_bins")
+      val med = binned.join(counts, groupCols :+ binCol)
+        .filter(col("bin_n") >= minPerBin)
+        .groupBy(gcols: _*).agg(median(col("v")).as(s"med_$tag"))
+      stats.join(med, groupCols, "left")
     }
-    val fine = levelStats("bf", minFracFine)
-      .select((gcols :+ col("n_valid").as("nv_f") :+ col("ok").as("ok_f")): _*)
-    val coarse = levelStats("bc", minFracCoarse)
-      .select((gcols :+ col("n_valid").as("nv_c") :+ col("ok").as("ok_c")): _*)
-    val choice = fine.join(coarse, groupCols)
+    level("bf", minFracFine, "f")
+      .join(level("bc", minFracCoarse, "c"), groupCols)
       .withColumn("grid", when(col("ok_f"), lit("fine"))
         .when(col("ok_c"), lit("coarse")).otherwise(lit("fail")))
-
-    // medians over rows in valid bins, per level (computed for all groups,
-    // selected per the chosen grid)
-    def levelMedian(binCol: String, out: String) = {
-      val counts = binned.groupBy((gcols :+ col(binCol)): _*)
-        .agg(count(lit(1)).as("bin_n"))
-      binned.join(counts, groupCols :+ binCol)
-        .filter(col("bin_n") >= minPerBin)
-        .groupBy(gcols: _*).agg(median(col("v")).as(out))
-    }
-    choice
-      .join(levelMedian("bf", "med_f"), groupCols, "left")
-      .join(levelMedian("bc", "med_c"), groupCols, "left")
       .select((gcols ++ Seq(
         col("grid"),
         when(col("grid") === "fine", col("nv_f"))

@@ -12,7 +12,7 @@ import graft.functions.geo
   *
   *  phase 1 (probe): join queries to points in kRing(qcell, probeRings) →
   *    per-query candidate distances → kth-distance upper bound d_k.
-  *    Queries with < k candidates fall back to a conservative global bound.
+  *    Queries with < k candidates re-probe at doubled rings.
   *  phase 2 (guarantee): expand each query to every cell within ring
   *    distance ceil(d_k/inradius)+1 — geometry guarantees every true
   *    neighbor is inside — join, rank, take k. Exact by construction.
@@ -35,84 +35,58 @@ object KnnJoin {
     val inradius = HexGrid.radius(res) * math.sqrt(3.0) / 2.0
     val pts = points
       .withColumn("__pcell", geo.hex_cell(col("lon"), col("lat"), lit(res)))
-    val qs = queries
-      .withColumn("__qcell", geo.hex_cell(col("q_lon"), col("q_lat"), lit(res)))
-
-    // ---- phase 1: probe neighborhood → per-query kth-distance bound
-    val probe = qs
-      .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(probeRings))))
-      .join(pts, col("__cell") === col("__pcell"))
+    // LEFT join: a query keeps a (null) row when its cells hold no point,
+    // and a left join can only broadcast the point side, never the
+    // ring-exploded query side (which grows 4× per doubling round)
+    def probe(q: DataFrame, rings: Int) = q
+      .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(rings))))
+      .join(pts, col("__cell") === col("__pcell"), "left")
       .withColumn("__d2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))
-    val wq = Window.partitionBy("q_id").orderBy(col("__d2").asc)
-    // one row per query — checkpointed so the probe/window/agg subtree
-    // runs ONCE: it previously re-evaluated in the sparse-queries check
-    // AND again under the phase-2 action (only sparseQ was truncated)
-    val bounds = probe
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= k)
-      .groupBy("q_id")
-      .agg(max(col("__d2")).as("__dk"), count(lit(1)).as("__found"))
-      .select(col("q_id"),
-        when(col("__found") >= k, sqrt(col("__dk"))).as("__radius"))
-      .localCheckpoint(true)
+    val wq = Window.partitionBy("q_id").orderBy(col("__d2").asc_nulls_last)
 
-    val qsWithR = qs.join(bounds, Seq("q_id"), "left")
-    val filled = qsWithR.filter(col("__radius").isNotNull)
-      .withColumn("__rings", ceil(col("__radius") / inradius).cast("int") + lit(1))
-      .select("q_id", "q_lon", "q_lat", "__qcell", "__rings")
-
-    // queries whose probe neighborhood held < k points (sparse regions —
-    // rare at planetary density): RING-DOUBLING re-probe — 2×, 4×, …
-    // rings until ≥ k candidates are found, then the normal phase-2
-    // guarantee. Geometry stays exact and every step is the same cell
-    // equi join (never a nested-loop cross join, even when EVERY query
-    // is sparse under a pathological res choice). The loop is bounded
-    // by log₂(worldRings): once rings cover the whole domain the probe
-    // candidates ARE all points, which is exact for datasets holding
-    // fewer than k points in total.
+    // ---- phase 1: probe rounds → per-query kth-distance bound. Round one
+    // probes every query at `probeRings`; queries with < k candidates
+    // (sparse regions) re-probe at 2×, 4×, … rings, each round the same
+    // cell equi join (never a nested-loop cross join). Once rings cover
+    // the whole domain the candidates ARE all points: exact for datasets
+    // with fewer than k points. All-dense: one checkpoint + one head(1).
     val worldRings = math.ceil(
       math.sqrt(360.0 * 360.0 + 180.0 * 180.0) / inradius).toInt + 1
-    // lazy on purpose: in the common all-dense case the loop guard's
-    // head(1) is the only consumer (one cheap job over the checkpointed
-    // bounds), so an eager materialization here would be a wasted
-    // blocking action; iterations that DO run re-checkpoint on
-    // reassignment below
-    var sparseQ = qsWithR.filter(col("__radius").isNull)
-      .select("q_id", "q_lon", "q_lat", "__qcell")
+    val qCols = Seq("q_id", "q_lon", "q_lat", "__qcell")
+    var sparse = queries
+      .select(col("q_id"), col("q_lon"), col("q_lat"),
+        geo.hex_cell(col("q_lon"), col("q_lat"), lit(res)).as("__qcell"))
     var rings = probeRings
     val graduated = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var leftover: DataFrame = null // total-coverage candidates (< k points)
-    while (leftover == null && sparseQ.head(1).nonEmpty) {
-      rings = math.min(rings.toLong * 2L, worldRings.toLong).toInt
-      val reprobe = sparseQ
-        .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), lit(rings))))
-        .join(pts, col("__cell") === col("__pcell"))
-        .withColumn("__d2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))
-      if (rings >= worldRings) {
-        leftover = reprobe.select(col("q_id"), col("p_id"),
-          col("__d2").as("dist2"))
-      } else {
-        val grads = reprobe
-          .withColumn("__rn", row_number().over(wq))
-          .filter(col("__rn") <= k)
-          .groupBy("q_id")
-          .agg(max(col("__d2")).as("__dk"), count(lit(1)).as("__found"))
-          .filter(col("__found") >= k)
-          .select(col("q_id"),
-            (ceil(sqrt(col("__dk")) / inradius).cast("int") + lit(1))
-              .as("__rings"))
-          .localCheckpoint(true)
-        graduated += sparseQ.join(grads, Seq("q_id"))
-          .select("q_id", "q_lon", "q_lat", "__qcell", "__rings")
-        sparseQ = sparseQ
-          .join(grads.select("q_id"), Seq("q_id"), "left_anti")
-          .localCheckpoint(true)
+    var done = false
+    while (!done) {
+      // one row per probed query, __rings null while it has < k candidates;
+      // checkpointed so the probe/window/agg subtree runs ONCE for the
+      // sparse check and phase 2 both
+      val bounds = probe(sparse, rings)
+        .withColumn("__rn", row_number().over(wq))
+        .filter(col("__rn") <= k)
+        .groupBy(qCols.map(col): _*)
+        .agg(max(col("__d2")).as("__dk"), count(col("__d2")).as("__found"))
+        .select((qCols.map(col) :+ when(col("__found") >= k,
+          ceil(sqrt(col("__dk")) / inradius).cast("int") + lit(1)).as("__rings")): _*)
+        .localCheckpoint(true)
+      graduated += bounds.filter(col("__rings").isNotNull)
+      sparse = bounds.filter(col("__rings").isNull).drop("__rings")
+      done = sparse.head(1).isEmpty
+      if (!done) {
+        rings = math.min(rings.toLong * 2L, worldRings.toLong).toInt
+        if (rings >= worldRings) {
+          leftover = probe(sparse, rings).filter(col("__pcell").isNotNull)
+            .select(col("q_id"), col("p_id"), col("__d2").as("dist2"))
+          done = true
+        }
       }
     }
 
     // ---- phase 2: guaranteed-coverage join + exact top-k
-    val expand = graduated.foldLeft(filled)(_ unionByName _)
-    val cand = expand
+    val cand = graduated.reduce(_ unionByName _)
       .withColumn("__cell", explode(geo.hex_kring(col("__qcell"), col("__rings"))))
       .join(pts, col("__cell") === col("__pcell"))
       .withColumn("dist2", d2(col("q_lon"), col("q_lat"), col("lon"), col("lat")))

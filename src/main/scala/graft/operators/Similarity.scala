@@ -192,33 +192,6 @@ object Similarity {
     PcaModel(mean, evecs.take(k), evals.take(k))
   }
 
-  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    * web-scale through semantic deduplication"): cluster the embedding
-    * space, call two documents semantic duplicates when their in-cluster
-    * cosine ≥ `tau`, group duplicates transitively, and keep ONE document
-    * per group — the paper's policy: the member with the LOWEST cosine to
-    * its cluster centroid (ties → smaller id). Documents in no duplicate
-    * pair are kept.
-    *
-    * Clustering here is seed-assignment (every `seedStride`-th corpus
-    * vector is a centroid; each vector joins its max-cosine seed) rather
-    * than Lloyd-iterated k-means, so the WHOLE operator — including the
-    * cluster step — is independently replayable by the SQL oracle
-    * (q76); `trainCentroids` + `assign` slot in unchanged when Lloyd
-    * refinement is wanted and fixture-pinning is acceptable (q29's
-    * trade).
-    *
-    * Scale shape: seeds broadcast (corpus/stride rows); the assignment
-    * argmax is a map-side-combined struct-max (the k-fanout reduces to
-    * one row per vector per partition before the shuffle); the pairwise
-    * stage is confined WITHIN clusters — that in-cluster quadratic is
-    * SemDeDup's own design trade (cluster count caps member count);
-    * duplicate groups resolve via the same min-label components kernel
-    * as MinHash dedup, over candidate ids only. Vectors cross the wire
-    * once for the cluster-keyed pair join; nothing is collected.
-    *
-    * Returns (vec_id, cluster_id, cos_centroid, keep).
-    */
   /** Seed-cluster assignment: every `seedStride`-th corpus vector is a
     * centroid; each vector joins its max-cosine seed (rounded cosine,
     * smaller seed id on ties — rounding BEFORE the argmax keeps the
@@ -267,6 +240,33 @@ object Similarity {
     v.join(best, Seq("vec_id")).localCheckpoint(true)
   }
 
+  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
+    * web-scale through semantic deduplication"): cluster the embedding
+    * space, call two documents semantic duplicates when their in-cluster
+    * cosine ≥ `tau`, group duplicates transitively, and keep ONE document
+    * per group — the paper's policy: the member with the LOWEST cosine to
+    * its cluster centroid (ties → smaller id: [[Dedup.keeper]]). Documents in no duplicate
+    * pair are kept.
+    *
+    * Clustering here is seed-assignment (every `seedStride`-th corpus
+    * vector is a centroid; each vector joins its max-cosine seed) rather
+    * than Lloyd-iterated k-means, so the WHOLE operator — including the
+    * cluster step — is independently replayable by the SQL oracle
+    * (q76); `trainCentroids` + `assign` slot in unchanged when Lloyd
+    * refinement is wanted and fixture-pinning is acceptable (q29's
+    * trade).
+    *
+    * Scale shape: seeds broadcast (corpus/stride rows); the assignment
+    * argmax is a map-side-combined struct-max (the k-fanout reduces to
+    * one row per vector per partition before the shuffle); the pairwise
+    * stage is confined WITHIN clusters — that in-cluster quadratic is
+    * SemDeDup's own design trade (cluster count caps member count);
+    * duplicate groups resolve via the same min-label components kernel
+    * as MinHash dedup, over candidate ids only. Vectors cross the wire
+    * once for the cluster-keyed pair join; nothing is collected.
+    *
+    * Returns (vec_id, cluster_id, cos_centroid, keep).
+    */
   def semDedup(vecs: DataFrame, seedStride: Long, tau: Double,
                cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     require(tau > 0)
@@ -275,7 +275,9 @@ object Similarity {
     // join — without this the k-fanout argmax re-runs three times
     // (visible as two duplicated subtrees in the physical plan).
     val assigned = seedAssign(vecs, seedStride, cId, cVec)
-    // in-cluster duplicate pairs (id_a < id_b, rounded cosine ≥ tau)
+    // in-cluster duplicate pairs (id_a < id_b, rounded cosine ≥ tau).
+    // Not Dedup.blockPairs: each vector sits in ONE cluster, so every pair
+    // meets once and blockPairs' distinct would be a wasted shuffle.
     val a = assigned.select(col("cluster_id"), col("vec_id").as("id_a"),
       col("__vec").as("__va"))
     val b = assigned.select(col("cluster_id"), col("vec_id").as("id_b"),
@@ -288,8 +290,7 @@ object Similarity {
       .select(col("id").as("vec_id"), col("cluster_id").as("__comp"))
     val keepers = assigned.join(comps, Seq("vec_id"))
       .groupBy("__comp")
-      .agg(min(struct(col("cos_centroid"), col("vec_id"))).as("__k"))
-      .select(col("__comp"), col("__k.vec_id").as("__keep_id"))
+      .agg(Dedup.keeper(col("cos_centroid"), col("vec_id")).as("__keep_id"))
     assigned
       .join(comps, Seq("vec_id"), "left")
       .join(keepers, Seq("__comp"), "left")

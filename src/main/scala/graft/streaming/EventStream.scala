@@ -150,11 +150,13 @@ object EventStream {
   }
 
   final case class SessionUpdate(user_id: Long, n_events: Long,
-                                 first_us: Long, last_us: Long, closed: Boolean)
+                                 first_us: Long, last_us: Long)
 
-  /** Stateful sessionization via mapGroupsWithState: a session closes
-    * after `gapUs` of inactivity (processing-time timeout in streams;
-    * exercised with batch-equivalent logic in tests).
+  /** Stateful sessionization via mapGroupsWithState: per user, the
+    * current session, which restarts at the first event more than `gapUs`
+    * after the previous one. Gaps are read from event times only; there
+    * is no state timeout, so a session that goes quiet is not emitted
+    * until its user's next event arrives.
     */
   def sessionize(events: Dataset[(Long, Long)], gapUs: Long)
       : Dataset[SessionUpdate] = {
@@ -173,7 +175,7 @@ object EventStream {
             if (t > last) last = t
           }
           state.update((n, first, last))
-          SessionUpdate(user, n, first, last, closed = false)
+          SessionUpdate(user, n, first, last)
       }
   }
 }

@@ -19,28 +19,42 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Deterministic derived point cloud from `documents` — identical
-    * arithmetic is used in the DuckDB oracles (pure IEEE-double ops), so
-    * geo assignments are cross-checkable without shipping our page table.
+  // ---- synthetic inputs: each formula is ONE SQL expression text that
+  //      the engine evaluates through expr/selectExpr and the DuckDB
+  //      oracle interpolates, so both engines run the same arithmetic.
+  //      Every non-integer literal is CAST to DOUBLE: both engines parse
+  //      a bare non-integer literal as DECIMAL, DuckDB would then derive
+  //      the whole cloud in exact decimal arithmetic (ULPs away from
+  //      binary doubles — enough to flip a floor in the q96 oracle) and
+  //      Spark runs floor(..) * 360.0 as decimal(25,1). Integer division
+  //      is the one operator the dialects spell differently (Spark `div`,
+  //      DuckDB `//`), so formulas take such terms as arguments ----
+
+  /** `(lon, lat)` of the derived point cloud over integer id column `id`
+    * (`doc_id` of `documents`, `event_id` in q102/q118): a fixed
+    * irrational-looking stride wrapped into [-180, 180) × [-85, 85).
     */
-  private def derivedPoints(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select("doc_id")
-    d.withColumn("lon", col("doc_id") * lit(17.000170000017) -
-        floor(col("doc_id") * lit(17.000170000017) / 360.0) * 360.0 - 180.0)
-      .withColumn("lat", col("doc_id") * lit(7.000070000007) -
-        floor(col("doc_id") * lit(7.000070000007) / 170.0) * 170.0 - 85.0)
+  private[graft] def derivedLonLatSql(id: String): (String, String) = {
+    def wrap(stride: String, span: String, half: String) = {
+      val x = s"$id * CAST($stride AS DOUBLE)"
+      s"$x - floor($x / CAST($span AS DOUBLE)) * CAST($span AS DOUBLE) - CAST($half AS DOUBLE)"
+    }
+    (wrap("17.000170000017", "360.0", "180.0"),
+      wrap("7.000070000007", "170.0", "85.0"))
   }
 
-  // the multiplier literals MUST be cast to DOUBLE: DuckDB parses a bare
-  // 17.000170000017 as DECIMAL(14,12) and runs the whole derivation in
-  // exact decimal arithmetic, which differs from Spark's binary-double
-  // math in the last ULPs — enough to flip a per-pair floor/round in the
-  // surface oracles (q96) even though 9-dp-rounded consumers never see it
+  /** Select list `id, lon, lat`: the derived point over `id`. */
+  private def derivedPointCols(id: String): Seq[String] = {
+    val (lon, lat) = derivedLonLatSql(id)
+    Seq(id, s"$lon AS lon", s"$lat AS lat")
+  }
+
+  /** The derived point cloud (doc_id, lon, lat) of `documents`. */
+  private def derivedPoints(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").selectExpr(derivedPointCols("doc_id"): _*)
+
   private val derivedPointsSql =
-    """SELECT doc_id,
-      |  doc_id * CAST(17.000170000017 AS DOUBLE) - floor(doc_id * CAST(17.000170000017 AS DOUBLE) / 360.0) * 360.0 - 180.0 AS lon,
-      |  doc_id * CAST(7.000070000007 AS DOUBLE) - floor(doc_id * CAST(7.000070000007 AS DOUBLE) / 170.0) * 170.0 - 85.0 AS lat
-      |FROM documents""".stripMargin
+    s"SELECT ${derivedPointCols("doc_id").mkString(", ")} FROM documents"
 
   /** The grid-DBSCAN (q104) replay as a reusable CTE chain ending in
     * `lab(doc_id, role, cluster_id)` — weighted floor-cell reps, Σw core
@@ -98,28 +112,23 @@ object SparkEntry {
       |  LEFT JOIN cc ON p.rep = cc.id
       |  LEFT JOIN border bo ON p.rep = bo.id)""".stripMargin
 
-  /** The 8-blob point cloud SQL (the q103/q106 anchored-blob transform
-    * of the derived points): anchor = doc_id % 8, derived point scaled
-    * to ±9°/±4.5° jitter. All literals exact doubles; the tree matches
-    * the Column version term for term.
+  /** The 8-blob transform of the derived points (doc_id, lon, lat) — the
+    * q103/q106 anchored blobs: anchor = doc_id % 8, the input point scaled to
+    * ±9°/±4.5° jitter around it. Genuinely clustered input for the
+    * DBSCAN-family queries (the quasi-uniform lattice percolates into one
+    * giant component at any eps). Select list `doc_id, lon, lat`.
     */
-  private lazy val blobPointsSql =
-    s"""SELECT doc_id,
-      |  CAST(doc_id % 8 AS DOUBLE) * 45.0 - 157.5 + lon * CAST(0.05 AS DOUBLE) AS lon,
-      |  CAST(doc_id % 8 AS DOUBLE) * 20.0 - 70.0 + lat * CAST(0.05 AS DOUBLE) AS lat
-      |FROM ($derivedPointsSql)""".stripMargin
+  private[graft] val blobPointCols: Seq[String] = Seq("doc_id",
+    "CAST(doc_id % 8 AS DOUBLE) * CAST(45.0 AS DOUBLE) - CAST(157.5 AS DOUBLE)" +
+      " + lon * CAST(0.05 AS DOUBLE) AS lon",
+    "CAST(doc_id % 8 AS DOUBLE) * CAST(20.0 AS DOUBLE) - CAST(70.0 AS DOUBLE)" +
+      " + lat * CAST(0.05 AS DOUBLE) AS lat")
 
-  /** The 8-blob point cloud (doc_id, lon, lat) — the Column twin of
-    * [[blobPointsSql]]: genuinely clustered input for the DBSCAN-family
-    * queries (the quasi-uniform lattice percolates into one giant
-    * component at any eps).
-    */
   private def blobPoints(s: SparkSession, dir: String): DataFrame =
-    derivedPoints(s, dir).select(col("doc_id"),
-      ((col("doc_id") % 8).cast("double") * lit(45.0) - lit(157.5)
-        + col("lon") * lit(0.05)).as("lon"),
-      ((col("doc_id") % 8).cast("double") * lit(20.0) - lit(70.0)
-        + col("lat") * lit(0.05)).as("lat"))
+    derivedPoints(s, dir).selectExpr(blobPointCols: _*)
+
+  private val blobPointsSql =
+    s"SELECT ${blobPointCols.mkString(", ")} FROM ($derivedPointsSql)"
 
   /** q104-style grid-DBSCAN labels of the 8-blob input `pts` — the
     * clusters of q106, q107, q111, q117 and q119.
@@ -154,135 +163,172 @@ object SparkEntry {
       .toDF("b_id", "bx", "by")
   }
 
-  /** Zigzag tracks from `events`: per-user consecutive segments whose
-    * coordinates are pure INTEGER triangle-waves (sin() is not
-    * oracle-portable — libm sin differs between engines in the last
-    * ULP; integer modular arithmetic is exact everywhere). Output:
+  /** The oracle triangles as flat vertex rows (`id`, bx1, by1, …, by3):
+    * the polygon side of q112 and q114.
+    */
+  private def triangleRows(s: SparkSession, id: String): DataFrame = {
+    import s.implicits._
+    graft.sources.PolyRegistry.oracleTriangles.map { p =>
+      (p.adminId, p.xs(0), p.ys(0), p.xs(1), p.ys(1), p.xs(2), p.ys(2))
+    }.toDF(id, "bx1", "by1", "bx2", "by2", "bx3", "by3")
+  }
+
+  /** [[triangleRows]] as a DuckDB VALUES list for the oracles. */
+  private def triangleValuesSql: String =
+    graft.sources.PolyRegistry.oracleTriangles.map { p =>
+      (0 until 3).flatMap(i => Seq(p.xs(i), p.ys(i)))
+        .map(v => s"CAST($v AS DOUBLE)").mkString(s"(${p.adminId}, ", ", ", ")")
+    }.mkString(",\n  ")
+
+  /** `(lon, lat)` of the zigzag tracks over `user_id` and an integer
+    * track position `step` (`seq` in q113/q114, `seq` div 5 for the
+    * slowed tracks of q115/q116): pure INTEGER triangle-waves, because
+    * sin() is not oracle-portable — libm sin differs between engines in
+    * the last ULP, integer modular arithmetic is exact everywhere.
+    */
+  private[graft] def zigzagLonLatSql(step: String): (String, String) = (
+    s"CAST(abs((user_id * 13 + $step * 17) % 336 - 168) AS DOUBLE) - CAST(84.0 AS DOUBLE)",
+    s"CAST(abs((user_id * 7 + $step * 11) % 164 - 82) AS DOUBLE) - CAST(41.0 AS DOUBLE)")
+
+  /** Planar `deg`-degree grid cell id of (lon, lat): x * 1000 + y. */
+  private[graft] def gridCellSql(deg: String): String =
+    s"CAST(floor(lon / CAST($deg AS DOUBLE)) AS BIGINT) * 1000 + " +
+      s"CAST(floor(lat / CAST($deg AS DOUBLE)) AS BIGINT)"
+
+  /** Per-track order of the `events` tracks. */
+  private val byTrack = org.apache.spark.sql.expressions.Window
+    .partitionBy("user_id").orderBy("event_id")
+
+  /** `df` with `lon`/`lat` columns evaluated from a `(lon, lat)` pair. */
+  private def withLonLat(df: DataFrame, lonLat: (String, String)): DataFrame =
+    df.withColumn("lon", expr(lonLat._1)).withColumn("lat", expr(lonLat._2))
+
+  /** Zigzag tracks from `events`: per-user consecutive segments
     * (user_id, seq, ax1, ay1, ax2, ay2), one row per segment.
     */
   private def zigzagSegs(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("event_id")
-    val coords = t(s, dir, "events")
+    val coords = withLonLat(t(s, dir, "events")
       .select(col("user_id").cast("long").as("user_id"), col("event_id"))
-      .withColumn("seq", row_number().over(w).cast("long"))
-      .withColumn("lon",
-        abs((col("user_id") * 13 + col("seq") * 17) % 336 - 168)
-          .cast("double") - lit(84.0))
-      .withColumn("lat",
-        abs((col("user_id") * 7 + col("seq") * 11) % 164 - 82)
-          .cast("double") - lit(41.0))
+      .withColumn("seq", row_number().over(byTrack).cast("long")),
+      zigzagLonLatSql("seq"))
     coords
-      .withColumn("ax2", lead(col("lon"), 1).over(w))
-      .withColumn("ay2", lead(col("lat"), 1).over(w))
+      .withColumn("ax2", lead(col("lon"), 1).over(byTrack))
+      .withColumn("ay2", lead(col("lat"), 1).over(byTrack))
       .filter(col("ax2").isNotNull)
       .select(col("user_id"), col("seq"),
         col("lon").as("ax1"), col("lat").as("ay1"),
         col("ax2"), col("ay2"))
   }
 
-  /** The zigzag-track CTE chain (pts → coords → segs), replayed
-    * verbatim by the q113/q114 oracles; `segs` rows with NULL ax2 (the
-    * last point of each track) are filtered by the consumers.
+  /** The slowed zigzag tracks of q115/q116 over `ev` (user_id,
+    * event_id, …): the position advances every 5 events. Adds seq,
+    * step, lon, lat and the 10-degree `cell`.
     */
-  private val zigzagSegsSql =
-    """pts AS (
+  private def slowZigzagCells(ev: DataFrame): DataFrame =
+    withLonLat(ev.withColumn("seq", row_number().over(byTrack).cast("long"))
+        .withColumn("step", expr("seq div 5")), zigzagLonLatSql("step"))
+      .withColumn("cell", expr(gridCellSql("10.0")))
+
+  /** The oracle twin of [[slowZigzagCells]]: CTEs pts → coords → cells
+    * (user_id, seq, tus, cell), the step taken with DuckDB's `//`.
+    */
+  private val slowZigzagCellsSql = {
+    val (lon, lat) = zigzagLonLatSql("(seq // 5)")
+    s"""pts AS (
+      |  SELECT CAST(user_id AS BIGINT) AS user_id,
+      |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS seq,
+      |    epoch_us(ts) AS tus
+      |  FROM events),
+      |coords AS MATERIALIZED (
+      |  SELECT user_id, seq, tus, $lon AS lon, $lat AS lat
+      |  FROM pts),
+      |cells AS MATERIALIZED (
+      |  SELECT user_id, seq, tus, ${gridCellSql("10.0")} AS cell
+      |  FROM coords)""".stripMargin
+  }
+
+  /** The zigzag-track CTE chain (pts → coords → segs) of the q113/q114
+    * oracles; `segs` rows with NULL ax2 (the last point of each track)
+    * are filtered by the consumers.
+    */
+  private val zigzagSegsSql = {
+    val (lon, lat) = zigzagLonLatSql("seq")
+    s"""pts AS (
       |  SELECT CAST(user_id AS BIGINT) AS user_id,
       |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS seq
       |  FROM events),
       |coords AS MATERIALIZED (
-      |  SELECT user_id, seq,
-      |    CAST(abs((user_id * 13 + seq * 17) % 336 - 168) AS DOUBLE) - CAST(84.0 AS DOUBLE) AS lon,
-      |    CAST(abs((user_id * 7 + seq * 11) % 164 - 82) AS DOUBLE) - CAST(41.0 AS DOUBLE) AS lat
+      |  SELECT user_id, seq, $lon AS lon, $lat AS lat
       |  FROM pts),
       |segs AS MATERIALIZED (
       |  SELECT user_id, seq, lon AS ax1, lat AS ay1,
       |    lead(lon) OVER (PARTITION BY user_id ORDER BY seq) AS ax2,
       |    lead(lat) OVER (PARTITION BY user_id ORDER BY seq) AS ay2
       |  FROM coords)""".stripMargin
-
-  /** Two disjoint data-derived right-triangle sets for the overlay join
-    * (q98): even doc_ids anchor set A at (lon, lat) with legs 2+id%5 /
-    * 2+id%7, odd doc_ids anchor set B at (lon+1, lat+1) with legs
-    * 2+id%6 / 2+id%4. Every offset is an exactly-representable double,
-    * so the SQL twin below lands on bit-identical vertices.
-    */
-  private def overlayTriangles(pts: DataFrame): (DataFrame, DataFrame) = {
-    val a = pts.filter(col("doc_id") % 2 === 0).select(
-      col("doc_id").as("a_id"),
-      array(col("lon"),
-        col("lon") + (lit(2.0) + (col("doc_id") % 5).cast("double")),
-        col("lon")).as("ax"),
-      array(col("lat"), col("lat"),
-        col("lat") + (lit(2.0) + (col("doc_id") % 7).cast("double"))).as("ay"))
-    val b = pts.filter(col("doc_id") % 2 === 1).select(
-      col("doc_id").as("b_id"),
-      array(col("lon") + lit(1.0),
-        col("lon") + lit(1.0) + (lit(2.0) + (col("doc_id") % 6).cast("double")),
-        col("lon") + lit(1.0)).as("bx"),
-      array(col("lat") + lit(1.0), col("lat") + lit(1.0),
-        col("lat") + lit(1.0) +
-          (lit(2.0) + (col("doc_id") % 4).cast("double"))).as("by"))
-    (a, b)
   }
 
-  private val overlayTrianglesSqlA =
-    """SELECT doc_id AS a_id, lon AS ax1, lat AS ay1,
-      |  lon + (2.0 + (doc_id % 5)) AS ax2, lat AS ay2,
-      |  lon AS ax3, lat + (2.0 + (doc_id % 7)) AS ay3
-      |FROM pts WHERE doc_id % 2 = 0""".stripMargin
-  private val overlayTrianglesSqlB =
-    """SELECT doc_id AS b_id, lon + 1.0 AS bx1, lat + 1.0 AS by1,
-      |  lon + 1.0 + (2.0 + (doc_id % 6)) AS bx2, lat + 1.0 AS by2,
-      |  lon + 1.0 AS bx3, lat + 1.0 + (2.0 + (doc_id % 4)) AS by3
-      |FROM pts WHERE doc_id % 2 = 1""".stripMargin
-
-  /** Two data-derived convex n-gon sets for the general overlay join
-    * (q105): even doc_ids anchor CCW PENTAGONS at (lon, lat) — a
-    * (2+id%5) × (2+id%7) rectangle with the top-left corner chamfered
-    * by 1 — and odd doc_ids anchor CCW HEXAGONS at (lon+1, lat+1) — a
-    * (2+id%6) × (2+id%4) rectangle chamfered at bottom-right AND
-    * top-left. Every offset is an exactly-representable double and the
-    * expression text is left-associated identically on both engines.
+  /** Vertex lists `(x, y)` of the two disjoint overlay sets over the
+    * derived points: set A on even doc_ids anchored at (lon, lat), set B
+    * on odd doc_ids anchored at (lon+1, lat+1). Every offset is an
+    * exactly-representable double.
     */
-  private def overlayPolygons(pts: DataFrame): (DataFrame, DataFrame) = {
-    val w5 = lit(2.0) + (col("doc_id") % 5).cast("double")
-    val h7 = lit(2.0) + (col("doc_id") % 7).cast("double")
-    val a = pts.filter(col("doc_id") % 2 === 0).select(
-      col("doc_id").as("a_id"),
-      array(col("lon"), col("lon") + w5, col("lon") + w5,
-        col("lon") + lit(1.0), col("lon")).as("ax"),
-      array(col("lat"), col("lat"), col("lat") + h7, col("lat") + h7,
-        col("lat") + h7 - lit(1.0)).as("ay"))
-    val w6 = lit(2.0) + (col("doc_id") % 6).cast("double")
-    val h4 = lit(2.0) + (col("doc_id") % 4).cast("double")
-    val bx = col("lon") + lit(1.0)
-    val by = col("lat") + lit(1.0)
-    val b = pts.filter(col("doc_id") % 2 === 1).select(
-      col("doc_id").as("b_id"),
-      array(bx, bx + w6 - lit(1.0), bx + w6, bx + w6, bx + lit(1.0), bx)
-        .as("bx"),
-      array(by, by, by + lit(1.0), by + h4, by + h4, by + h4 - lit(1.0))
-        .as("by"))
-    (a, b)
+  private type OverlaySets = (Seq[(String, String)], Seq[(String, String)])
+
+  private val One = "CAST(1.0 AS DOUBLE)"
+
+  /** Edge length 2 + doc_id % m. */
+  private def leg(m: Int): String =
+    s"(CAST(2.0 AS DOUBLE) + CAST(doc_id % $m AS DOUBLE))"
+
+  /** q98's right triangles: A has legs 2+id%5 / 2+id%7, B 2+id%6 / 2+id%4. */
+  private[graft] val overlayTriangleVerts: OverlaySets = {
+    val (bx, by) = (s"lon + $One", s"lat + $One")
+    (Seq(("lon", "lat"), (s"lon + ${leg(5)}", "lat"), ("lon", s"lat + ${leg(7)}")),
+      Seq((bx, by), (s"$bx + ${leg(6)}", by), (bx, s"$by + ${leg(4)}")))
   }
 
-  private val overlayPolygonsSqlA =
-    """SELECT doc_id AS a_id, lon AS ax1, lat AS ay1,
-      |  lon + (2.0 + (doc_id % 5)) AS ax2, lat AS ay2,
-      |  lon + (2.0 + (doc_id % 5)) AS ax3, lat + (2.0 + (doc_id % 7)) AS ay3,
-      |  lon + 1.0 AS ax4, lat + (2.0 + (doc_id % 7)) AS ay4,
-      |  lon AS ax5, lat + (2.0 + (doc_id % 7)) - 1.0 AS ay5
-      |FROM pts WHERE doc_id % 2 = 0""".stripMargin
-  private val overlayPolygonsSqlB =
-    """SELECT doc_id AS b_id,
-      |  lon + 1.0 AS bx1, lat + 1.0 AS by1,
-      |  lon + 1.0 + (2.0 + (doc_id % 6)) - 1.0 AS bx2, lat + 1.0 AS by2,
-      |  lon + 1.0 + (2.0 + (doc_id % 6)) AS bx3, lat + 1.0 + 1.0 AS by3,
-      |  lon + 1.0 + (2.0 + (doc_id % 6)) AS bx4, lat + 1.0 + (2.0 + (doc_id % 4)) AS by4,
-      |  lon + 1.0 + 1.0 AS bx5, lat + 1.0 + (2.0 + (doc_id % 4)) AS by5,
-      |  lon + 1.0 AS bx6, lat + 1.0 + (2.0 + (doc_id % 4)) - 1.0 AS by6
-      |FROM pts WHERE doc_id % 2 = 1""".stripMargin
+  /** q105/q110's convex n-gons: A are CCW PENTAGONS — a (2+id%5) ×
+    * (2+id%7) rectangle with the top-left corner chamfered by 1 — and B
+    * CCW HEXAGONS — a (2+id%6) × (2+id%4) rectangle chamfered at
+    * bottom-right AND top-left.
+    */
+  private[graft] val overlayPolygonVerts: OverlaySets = {
+    val (ax, ay) = (s"lon + ${leg(5)}", s"lat + ${leg(7)}")
+    val (bx, by) = (s"lon + $One", s"lat + $One")
+    val (bw, bh) = (s"$bx + ${leg(6)}", s"$by + ${leg(4)}")
+    (Seq(("lon", "lat"), (ax, "lat"), (ax, ay), (s"lon + $One", ay),
+        ("lon", s"$ay - $One")),
+      Seq((bx, by), (s"$bw - $One", by), (bw, s"$by + $One"), (bw, bh),
+        (s"$bx + $One", bh), (bx, s"$bh - $One")))
+  }
+
+  /** The overlay sets as join inputs (a_id, ax, ay) and (b_id, bx, by). */
+  private[graft] def overlaySets(pts: DataFrame, v: OverlaySets): (DataFrame, DataFrame) = {
+    def side(p: String, parity: Int, vs: Seq[(String, String)]) =
+      pts.filter(s"doc_id % 2 = $parity").selectExpr(s"doc_id AS ${p}_id",
+        vs.map(_._1).mkString("array(", ", ", s") AS ${p}x"),
+        vs.map(_._2).mkString("array(", ", ", s") AS ${p}y"))
+    (side("a", 0, v._1), side("b", 1, v._2))
+  }
+
+  /** The q98/q105 oracle: the [[overlaySets]] vertices as columns
+    * (a_id, ax1, ay1, …) and (b_id, bx1, by1, …), brute-force cross join
+    * + the generated SAT twin — the cover/dedup machinery is invisible
+    * to closed-intersection semantics.
+    */
+  private def overlayIntersectsSql(v: OverlaySets): String = {
+    def cols(p: String, n: Int) = (1 to n).map(i => (s"${p}x$i", s"${p}y$i"))
+    def side(p: String, parity: Int, vs: Seq[(String, String)]) =
+      vs.zip(cols(p, vs.size)).map { case ((x, y), (cx, cy)) =>
+        s"$x AS $cx, $y AS $cy"
+      }.mkString(s"SELECT doc_id AS ${p}_id, ", ", ",
+        s" FROM pts WHERE doc_id % 2 = $parity")
+    s"""WITH pts AS ($derivedPointsSql),
+      |a AS MATERIALIZED (${side("a", 0, v._1)}),
+      |b AS MATERIALIZED (${side("b", 1, v._2)})
+      |SELECT a_id, b_id FROM a CROSS JOIN b
+      |WHERE ${convexSatSql(cols("a", v._1.size), cols("b", v._2.size))}""".stripMargin
+  }
 
   /** SQL twin of [[graft.core.ConvexSat]] — the same separating-axis
     * structure generated over coordinate column names. The interior-side
@@ -793,7 +839,7 @@ object SparkEntry {
     "q55_url_dedup" -> ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          graft.functions.url.canonicalize(synthUrl(col("doc_id"))).as("url_canon"))
+          graft.functions.url.canonicalize(synthUrl).as("url_canon"))
         .groupBy("url_canon")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
     }),
@@ -962,7 +1008,7 @@ object SparkEntry {
     //      host extraction + per-host doc count and char volume ----
     "q57_domain_stats" -> ((s, dir) => {
       t(s, dir, "documents")
-        .select(graft.functions.url.host(synthUrl(col("doc_id"))).as("host"),
+        .select(graft.functions.url.host(synthUrl).as("host"),
           col("n_chars"))
         .groupBy("host")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
@@ -1036,7 +1082,7 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       // deterministic fetch time synthesized from doc_id (SQL-replicable)
       val d = t(s, dir, "documents").select(col("doc_id"),
-        synthUrl(col("doc_id")).as("url"),
+        synthUrl.as("url"),
         (lit(1700000000L) + pmod(col("doc_id") * 37L, lit(86400L * 30))
           * 1000L).as("fetch_ms"))
       val canon = graft.functions.url.canonicalize(col("url"))
@@ -1051,7 +1097,7 @@ object SparkEntry {
     //      their subdomains — a zero-shuffle codegen'd filter ----
     "q83_blocklist" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-        .select(col("doc_id"), synthUrl(col("doc_id")).as("url"))
+        .select(col("doc_id"), synthUrl.as("url"))
       graft.operators.UrlGovernance
         .filterBlockedHosts(d, col("url"), Seq("example.org"))
         .select(col("doc_id"),
@@ -1061,7 +1107,7 @@ object SparkEntry {
     //      per canonical host (content-keyed coin, replayable) ----
     "q84_host_budget" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-        .select(col("doc_id"), synthUrl(col("doc_id")).as("url"))
+        .select(col("doc_id"), synthUrl.as("url"))
       graft.operators.UrlGovernance.perHostCap(d, col("url"), n = 20,
           u = graft.operators.Sampling.portableUniform(col("doc_id")),
           tiebreak = col("doc_id"))
@@ -1139,14 +1185,11 @@ object SparkEntry {
     //      exact integer-valued doubles); sampled event stream so the
     //      query stays bench-scale at every sf ----
     "q102_st_dbscan" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = withLonLat(t(s, dir, "events")
         .filter(col("event_id") % 10 === 0)
         .select(col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).cast("double").as("t_us"))
-        .withColumn("lon", col("event_id") * lit(17.000170000017) -
-          floor(col("event_id") * lit(17.000170000017) / 360.0) * 360.0 - 180.0)
-        .withColumn("lat", col("event_id") * lit(7.000070000007) -
-          floor(col("event_id") * lit(7.000070000007) / 170.0) * 170.0 - 85.0)
+          unix_micros(col("ts").cast("timestamp")).cast("double").as("t_us")),
+        derivedLonLatSql("event_id"))
       graft.operators.Dbscan.clusterST(ev, "event_id", epsDeg = 25.0,
         minPts = 5, res = 0, timeEps = Some(("t_us", 3.0 * 86400e6)))
     }),
@@ -1252,12 +1295,8 @@ object SparkEntry {
     //      distance² whose SQL text is shared VERBATIM between engine
     //      (expr) and oracle — bit-identical doubles by construction ----
     "q112_nearest_polygon" -> ((s, dir) => {
-      import s.implicits._
-      val b = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        (p.adminId, p.xs(0), p.ys(0), p.xs(1), p.ys(1), p.xs(2), p.ys(2))
-      }.toDF("b_id", "bx1", "by1", "bx2", "by2", "bx3", "by3")
-      graft.operators.SpatialJoin.nearestPolygonWithin(
-        derivedPoints(s, dir), b, radiusDeg = 15.0, cellDeg = 15.0)
+      graft.operators.SpatialJoin.nearestPolygonWithin(derivedPoints(s, dir),
+        triangleRows(s, "b_id"), radiusDeg = 15.0, cellDeg = 15.0)
     }),
     // ---- border-crossing detection: zigzag tracks (pure integer
     //      triangle-waves — portable, unlike sin) × admin boundary
@@ -1281,16 +1320,11 @@ object SparkEntry {
     //      classified emerging / declining / stable on exact integer
     //      ratios; the temporal trend layer over the density map ----
     "q118_emerging_hotspots" -> ((s, dir) => {
-      val pts = t(s, dir, "events")
+      val pts = withLonLat(t(s, dir, "events")
         .select(col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).as("tus"))
-        .withColumn("lon", col("event_id") * lit(17.000170000017) -
-          floor(col("event_id") * lit(17.000170000017) / 360.0) * 360.0 - 180.0)
-        .withColumn("lat", col("event_id") * lit(7.000070000007) -
-          floor(col("event_id") * lit(7.000070000007) / 170.0) * 170.0 - 85.0)
-        .withColumn("cell",
-          floor(col("lon") / lit(15.0)).cast("long") * 1000 +
-            floor(col("lat") / lit(15.0)).cast("long"))
+          unix_micros(col("ts").cast("timestamp")).as("tus")),
+        derivedLonLatSql("event_id"))
+        .withColumn("cell", expr(gridCellSql("15.0")))
       val mid = pts.agg(
         expr("(min(tus) + max(tus)) div 2").as("mid"))
       pts.crossJoin(broadcast(mid))
@@ -1310,22 +1344,9 @@ object SparkEntry {
     //      same-cell runs via gaps-and-islands, gated on points and
     //      event-time span — ONE window + ONE agg, both portable ----
     "q115_dwell_episodes" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("event_id")
-      val pts = t(s, dir, "events")
+      val pts = slowZigzagCells(t(s, dir, "events")
         .select(col("user_id").cast("long").as("user_id"), col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).as("tus"))
-        .withColumn("seq", row_number().over(w).cast("long"))
-        .withColumn("step", expr("seq div 5"))
-        .withColumn("lon",
-          abs((col("user_id") * 13 + col("step") * 17) % 336 - 168)
-            .cast("double") - lit(84.0))
-        .withColumn("lat",
-          abs((col("user_id") * 7 + col("step") * 11) % 164 - 82)
-            .cast("double") - lit(41.0))
-        .withColumn("cell",
-          floor(col("lon") / lit(10.0)).cast("long") * 1000 +
-            floor(col("lat") / lit(10.0)).cast("long"))
+          unix_micros(col("ts").cast("timestamp")).as("tus")))
       graft.operators.Trajectory.dwellEpisodes(pts, "user_id", "seq",
         "cell", "tus", minPts = 4, minDurUs = 1L)
     }),
@@ -1334,22 +1355,9 @@ object SparkEntry {
     //      points — ONE track-keyed window + ONE hash agg (the standard
     //      mobility rollup; same slowed-zigzag cells as q115) ----
     "q116_od_flows" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("event_id")
-      val pts = t(s, dir, "events")
-        .select(col("user_id").cast("long").as("user_id"), col("event_id"))
-        .withColumn("seq", row_number().over(w).cast("long"))
-        .withColumn("step", expr("seq div 5"))
-        .withColumn("lon",
-          abs((col("user_id") * 13 + col("step") * 17) % 336 - 168)
-            .cast("double") - lit(84.0))
-        .withColumn("lat",
-          abs((col("user_id") * 7 + col("step") * 11) % 164 - 82)
-            .cast("double") - lit(41.0))
-        .withColumn("cell",
-          floor(col("lon") / lit(10.0)).cast("long") * 1000 +
-            floor(col("lat") / lit(10.0)).cast("long"))
-      pts.withColumn("dest", lead(col("cell"), 1).over(w))
+      val pts = slowZigzagCells(t(s, dir, "events")
+        .select(col("user_id").cast("long").as("user_id"), col("event_id")))
+      pts.withColumn("dest", lead(col("cell"), 1).over(byTrack))
         .filter(col("dest").isNotNull && col("dest") =!= col("cell"))
         .groupBy(col("cell").as("o_cell"), col("dest").as("d_cell"))
         .agg(count(lit(1)).as("n_trips"),
@@ -1360,12 +1368,8 @@ object SparkEntry {
     //      candidate pair (shared-text kernel), lengths quantized to a
     //      1e-9 integer grid before the per-group sum ----
     "q114_region_exposure" -> ((s, dir) => {
-      import s.implicits._
-      val tris = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        (p.adminId, p.xs(0), p.ys(0), p.xs(1), p.ys(1), p.xs(2), p.ys(2))
-      }.toDF("admin_id", "bx1", "by1", "bx2", "by2", "bx3", "by3")
-      graft.operators.Trajectory.regionExposure(zigzagSegs(s, dir), tris,
-        cellDeg = 30.0)
+      graft.operators.Trajectory.regionExposure(zigzagSegs(s, dir),
+        triangleRows(s, "admin_id"), cellDeg = 30.0)
     }),
     // ---- exact DBSCAN density clustering: ε-pairs via cell-ring
     //      candidates → core-point count agg → connected components
@@ -1412,7 +1416,7 @@ object SparkEntry {
     //      distinct), exact SAT predicate — the join a naive
     //      intersects(a,b) would plan as a nested-loop cartesian ----
     "q98_tri_overlay" -> ((s, dir) => {
-      val (a, b) = overlayTriangles(derivedPoints(s, dir))
+      val (a, b) = overlaySets(derivedPoints(s, dir), overlayTriangleVerts)
       graft.operators.Overlay.convexIntersectsJoin(a, b, cellDeg = 8.0,
           validate = false)
         .select(col("a_id"), col("b_id"))
@@ -1422,7 +1426,7 @@ object SparkEntry {
     //      machinery as q98, with the interior side taken from the
     //      orientation SUM; convexity guard on ----
     "q105_convex_overlay" -> ((s, dir) => {
-      val (a, b) = overlayPolygons(derivedPoints(s, dir))
+      val (a, b) = overlaySets(derivedPoints(s, dir), overlayPolygonVerts)
       graft.operators.Overlay.convexIntersectsJoin(a, b, cellDeg = 8.0)
         .select(col("a_id"), col("b_id"))
     }),
@@ -1431,7 +1435,7 @@ object SparkEntry {
     //      clip per SAT-surviving pair); pinned fixture oracle — S-H is
     //      not SQL-derivable — real verification in ConvexClipSpec ----
     "q110_clip_area" -> ((s, dir) => {
-      val (a, b) = overlayPolygons(derivedPoints(s, dir))
+      val (a, b) = overlaySets(derivedPoints(s, dir), overlayPolygonVerts)
       graft.operators.Overlay.clipAreaJoin(a, b, cellDeg = 8.0)
         .select(col("a_id"), col("b_id"), round(col("area"), 6).as("area"))
     }),
@@ -1643,8 +1647,8 @@ object SparkEntry {
     //      deterministic sketch estimates ----
     "q70_hll_distinct" -> ((s, dir) => {
       t(s, dir, "documents")
-        .select(graft.functions.url.host(synthUrl(col("doc_id"))).as("host"),
-          synthUrl(col("doc_id")).as("url"))
+        .select(graft.functions.url.host(synthUrl).as("host"),
+          synthUrl.as("url"))
         .groupBy("host")
         .agg(approx_count_distinct(col("url"), 0.02).as("approx_urls"),
           countDistinct(col("url")).as("exact_urls"))
@@ -1654,41 +1658,23 @@ object SparkEntry {
     })
   )
 
-  /** Deterministic messy-URL synthesizer (mirrored verbatim in the DuckDB
-    * oracle): exercises every branch of the canonicalization rule —
-    * mixed-case scheme/host, www., default ports (:80/:443 → stripped),
-    * a non-default :8080 (→ kept), tracking params, unsorted params,
-    * trailing slash, fragment.
+  /** Deterministic messy-URL synthesizer over `doc_id`, one text for
+    * the engine and the DuckDB oracle: exercises every branch of the
+    * canonicalization rule — mixed-case scheme/host, www., default ports
+    * (:80/:443 → stripped), a non-default :8080 (→ kept), tracking
+    * params, unsorted params, trailing slash, fragment.
     */
-  private def synthUrl(docId: Column): Column = concat(
-    lit("HTTP"),
-    when(pmod(docId, lit(2)) === 0, lit("S")).otherwise(lit("")),
-    lit("://"),
-    when(pmod(docId, lit(3)) === 0, lit("WWW.Example.COM"))
-      .when(pmod(docId, lit(3)) === 1, lit("news.example.com"))
-      .otherwise(lit("Blog.Example.org")),
-    when(pmod(docId, lit(8)) === 0, lit(":443"))
-      .when(pmod(docId, lit(8)) === 1, lit(":80"))
-      .when(pmod(docId, lit(8)) === 2, lit(":8080"))
-      .otherwise(lit("")),
-    lit("/Articles/item-"), pmod(docId, lit(25)).cast("string"),
-    when(pmod(docId, lit(5)) === 0, lit("/")).otherwise(lit("")),
-    when(pmod(docId, lit(2)) === 0,
-        concat(lit("?utm_source=feed&id="), pmod(docId, lit(10)).cast("string"),
-          lit("&b=2")))
-      .otherwise(concat(lit("?id="), pmod(docId, lit(10)).cast("string"))),
-    when(pmod(docId, lit(7)) === 0, lit("#section-2")).otherwise(lit("")))
-
-  /** The same synthesizer as DuckDB SQL (string-identical construction). */
-  private def synthUrlSql: String =
+  private[graft] val synthUrlSql: String =
     """'HTTP' || CASE WHEN doc_id % 2 = 0 THEN 'S' ELSE '' END || '://' ||
       |      CASE doc_id % 3 WHEN 0 THEN 'WWW.Example.COM' WHEN 1 THEN 'news.example.com' ELSE 'Blog.Example.org' END ||
       |      CASE doc_id % 8 WHEN 0 THEN ':443' WHEN 1 THEN ':80' WHEN 2 THEN ':8080' ELSE '' END ||
-      |      '/Articles/item-' || CAST(doc_id % 25 AS VARCHAR) ||
+      |      '/Articles/item-' || CAST(doc_id % 25 AS STRING) ||
       |      CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END ||
-      |      CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&id=' || CAST(doc_id % 10 AS VARCHAR) || '&b=2'
-      |           ELSE '?id=' || CAST(doc_id % 10 AS VARCHAR) END ||
+      |      CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&id=' || CAST(doc_id % 10 AS STRING) || '&b=2'
+      |           ELSE '?id=' || CAST(doc_id % 10 AS STRING) END ||
       |      CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END""".stripMargin
+
+  private def synthUrl: Column = expr(synthUrlSql)
 
   /** Unrolled S2 compaction cascade for the q59 oracle: one CTE step per
     * level from 12 down to 1 (complete sibling quadruples → parent; the
@@ -2027,14 +2013,11 @@ object SparkEntry {
       // identical derived coordinates + 15° cells; midpoint via integer
       // //; exact integer counts and ratio thresholds — no doubles in
       // any compared value
-      """WITH pts AS (
-        |  SELECT event_id, epoch_us(ts) AS tus,
-        |    event_id * CAST(17.000170000017 AS DOUBLE) - floor(event_id * CAST(17.000170000017 AS DOUBLE) / 360.0) * 360.0 - 180.0 AS lon,
-        |    event_id * CAST(7.000070000007 AS DOUBLE) - floor(event_id * CAST(7.000070000007 AS DOUBLE) / 170.0) * 170.0 - 85.0 AS lat
+      s"""WITH pts AS (
+        |  SELECT epoch_us(ts) AS tus, ${derivedPointCols("event_id").mkString(", ")}
         |  FROM events),
         |cells AS MATERIALIZED (
-        |  SELECT tus,
-        |    CAST(floor(lon / 15.0) AS BIGINT) * 1000 + CAST(floor(lat / 15.0) AS BIGINT) AS cell
+        |  SELECT tus, ${gridCellSql("15.0")} AS cell
         |  FROM pts),
         |stats AS (SELECT (min(tus) + max(tus)) // 2 AS mid FROM cells),
         |agg AS MATERIALIZED (
@@ -2049,19 +2032,7 @@ object SparkEntry {
         |FROM agg WHERE n_early + n_late >= 3""".stripMargin,
     "q116_od_flows" ->
       // identical cell derivation + lead window; counts are exact longs
-      """WITH pts AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS seq
-        |  FROM events),
-        |coords AS MATERIALIZED (
-        |  SELECT user_id, seq,
-        |    CAST(abs((user_id * 13 + (seq // 5) * 17) % 336 - 168) AS DOUBLE) - CAST(84.0 AS DOUBLE) AS lon,
-        |    CAST(abs((user_id * 7 + (seq // 5) * 11) % 164 - 82) AS DOUBLE) - CAST(41.0 AS DOUBLE) AS lat
-        |  FROM pts),
-        |cells AS MATERIALIZED (
-        |  SELECT user_id, seq,
-        |    CAST(floor(lon / 10.0) AS BIGINT) * 1000 + CAST(floor(lat / 10.0) AS BIGINT) AS cell
-        |  FROM coords),
+      s"""WITH $slowZigzagCellsSql,
         |hops AS MATERIALIZED (
         |  SELECT user_id, cell,
         |    lead(cell) OVER (PARTITION BY user_id ORDER BY seq) AS dest
@@ -2075,20 +2046,7 @@ object SparkEntry {
       // gaps-and-islands replay: identical slowed-zigzag coordinates
       // (integer `//` division), identical run-id construction, same
       // (n_pts, dur) gates; epoch_us mirrors unix_micros
-      """WITH pts AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS seq,
-        |    epoch_us(ts) AS tus
-        |  FROM events),
-        |coords AS MATERIALIZED (
-        |  SELECT user_id, seq, tus,
-        |    CAST(abs((user_id * 13 + (seq // 5) * 17) % 336 - 168) AS DOUBLE) - CAST(84.0 AS DOUBLE) AS lon,
-        |    CAST(abs((user_id * 7 + (seq // 5) * 11) % 164 - 82) AS DOUBLE) - CAST(41.0 AS DOUBLE) AS lat
-        |  FROM pts),
-        |cells AS MATERIALIZED (
-        |  SELECT user_id, seq, tus,
-        |    CAST(floor(lon / 10.0) AS BIGINT) * 1000 + CAST(floor(lat / 10.0) AS BIGINT) AS cell
-        |  FROM coords),
+      s"""WITH $slowZigzagCellsSql,
         |runs AS MATERIALIZED (
         |  SELECT user_id, seq, tus, cell,
         |    seq - row_number() OVER (PARTITION BY user_id, cell ORDER BY seq) AS grp
@@ -2104,14 +2062,9 @@ object SparkEntry {
       val len = graft.operators.Overlay.segTriClipLenSql(
         "s.ax1", "s.ay1", "s.ax2", "s.ay2",
         Seq(("t.bx1", "t.by1"), ("t.bx2", "t.by2"), ("t.bx3", "t.by3")))
-      val vals = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        s"(${p.adminId}, CAST(${p.xs(0)} AS DOUBLE), CAST(${p.ys(0)} AS DOUBLE), " +
-          s"CAST(${p.xs(1)} AS DOUBLE), CAST(${p.ys(1)} AS DOUBLE), " +
-          s"CAST(${p.xs(2)} AS DOUBLE), CAST(${p.ys(2)} AS DOUBLE))"
-      }.mkString(",\n  ")
       s"""WITH $zigzagSegsSql,
         |tris(admin_id, bx1, by1, bx2, by2, bx3, by3) AS (VALUES
-        |  $vals),
+        |  $triangleValuesSql),
         |pair AS MATERIALIZED (
         |  SELECT s.user_id, t.admin_id, $len AS len
         |  FROM segs s CROSS JOIN tris t WHERE s.ax2 IS NOT NULL)
@@ -2126,14 +2079,9 @@ object SparkEntry {
       // (one Scala string feeds both engines), filter BEFORE rounding,
       // argmin window ordered (d2, b_id) — deterministic because the
       // doubles are bit-identical
-      val vals = graft.sources.PolyRegistry.oracleTriangles.map { p =>
-        s"(${p.adminId}, CAST(${p.xs(0)} AS DOUBLE), CAST(${p.ys(0)} AS DOUBLE), " +
-          s"CAST(${p.xs(1)} AS DOUBLE), CAST(${p.ys(1)} AS DOUBLE), " +
-          s"CAST(${p.xs(2)} AS DOUBLE), CAST(${p.ys(2)} AS DOUBLE))"
-      }.mkString(",\n  ")
       s"""WITH pts AS ($derivedPointsSql),
         |tris(b_id, bx1, by1, bx2, by2, bx3, by3) AS (VALUES
-        |  $vals),
+        |  $triangleValuesSql),
         |cand AS MATERIALIZED (
         |  SELECT p.doc_id, t.b_id,
         |    ${graft.operators.SpatialJoin.pointTriDist2Sql("lon", "lat", bv)} AS d2
@@ -2827,10 +2775,8 @@ object SparkEntry {
       // q101's recursive-CTE replay with the spatio-temporal pair
       // predicate; 3.0 * 86400e6 µs = the 3-day εt, exact in double
       s"""WITH RECURSIVE pts AS (
-        |  SELECT event_id,
-        |    CAST(epoch_us(ts) AS DOUBLE) AS t_us,
-        |    event_id * CAST(17.000170000017 AS DOUBLE) - floor(event_id * CAST(17.000170000017 AS DOUBLE) / 360.0) * 360.0 - 180.0 AS lon,
-        |    event_id * CAST(7.000070000007 AS DOUBLE) - floor(event_id * CAST(7.000070000007 AS DOUBLE) / 170.0) * 170.0 - 85.0 AS lat
+        |  SELECT ${derivedPointCols("event_id").mkString(", ")},
+        |    CAST(epoch_us(ts) AS DOUBLE) AS t_us
         |  FROM events WHERE event_id % 10 = 0),
         |d AS MATERIALIZED (
         |  SELECT a.event_id AS qa, b.event_id AS qb
@@ -2912,28 +2858,8 @@ object SparkEntry {
         |    / CAST(count(*) AS DOUBLE), 6) AS mean_v
         |FROM hits GROUP BY 1""".stripMargin
     },
-    "q98_tri_overlay" -> {
-      val av = Seq(("ax1", "ay1"), ("ax2", "ay2"), ("ax3", "ay3"))
-      val bv = Seq(("bx1", "by1"), ("bx2", "by2"), ("bx3", "by3"))
-      // brute-force cross join + the generated SAT twin: the cover/
-      // dedup machinery is invisible to closed-intersection semantics
-      s"""WITH pts AS ($derivedPointsSql),
-        |a AS MATERIALIZED ($overlayTrianglesSqlA),
-        |b AS MATERIALIZED ($overlayTrianglesSqlB)
-        |SELECT a_id, b_id FROM a CROSS JOIN b
-        |WHERE ${convexSatSql(av, bv)}""".stripMargin
-    },
-    "q105_convex_overlay" -> {
-      val av = (1 to 5).map(i => (s"ax$i", s"ay$i"))
-      val bv = (1 to 6).map(i => (s"bx$i", s"by$i"))
-      // same brute-force replay over the pentagon/hexagon vertex tables,
-      // predicate generated by convexSatSql, the SQL twin of ConvexSat
-      s"""WITH pts AS ($derivedPointsSql),
-        |a AS MATERIALIZED ($overlayPolygonsSqlA),
-        |b AS MATERIALIZED ($overlayPolygonsSqlB)
-        |SELECT a_id, b_id FROM a CROSS JOIN b
-        |WHERE ${convexSatSql(av, bv)}""".stripMargin
-    },
+    "q98_tri_overlay" -> overlayIntersectsSql(overlayTriangleVerts),
+    "q105_convex_overlay" -> overlayIntersectsSql(overlayPolygonVerts),
     "q94_dwithin" ->
       // brute-force replay of the distance band: identical d2 formula
       // (query side first), filter BEFORE the 9-dp rounding

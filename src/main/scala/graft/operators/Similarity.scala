@@ -230,13 +230,15 @@ object Similarity {
       s"seedAssign: stride $seedStride selects $nSeeds seeds (> $maxSeeds) — " +
         "the seed set broadcasts, so pick seedStride ≈ N/k (or raise maxSeeds " +
         "deliberately)")
+    // ~sid reverses the id order so max() prefers the smaller seed on a
+    // cosine tie; unlike -sid it cannot overflow at Long.MinValue
     val best = v.crossJoin(broadcast(seeds))
       .groupBy("vec_id")
       .agg(max(struct(
         round(vec.cosine_sim(col("__vec"), col("__svec")), 6).as("c"),
-        (-col("__sid")).as("ns"))).as("__m"))
+        bitwise_not(col("__sid")).as("ns"))).as("__m"))
       .select(col("vec_id"), col("__m.c").as("cos_centroid"),
-        (-col("__m.ns")).as("cluster_id"))
+        bitwise_not(col("__m.ns")).as("cluster_id"))
     v.join(best, Seq("vec_id")).localCheckpoint(true)
   }
 

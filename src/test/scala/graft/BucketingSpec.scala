@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.Bucketing
 
 /** Co-located joins via catalog bucketing: two tables bucketed the same
   * way join with NO shuffle exchange, and results match the plain join.

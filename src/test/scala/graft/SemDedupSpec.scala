@@ -93,6 +93,20 @@ class SemDedupSpec extends AnyFunSuite {
     assert(a === out.toSeq.sortBy(_._1).map { case (id, (t, _, _)) => (id, t) })
   }
 
+  test("seedAssign: a Long.MinValue seed id ranks without overflow, smaller seed wins ties") {
+    import spark.implicits._
+    // stride 2 makes Long.MinValue and 2 seeds; vector 3 sits at the same
+    // cosine to both, so the tie goes to the smaller id
+    val vecs = Seq(
+      (Long.MinValue, Array(1f, 0f, 0f, 0f)),
+      (2L, Array(0f, 1f, 0f, 0f)),
+      (3L, Array(1f, 1f, 0f, 0f))).toDF("vec_id", "embedding")
+    val got = Similarity.seedAssign(vecs, seedStride = 2L)
+      .select("vec_id", "cluster_id").as[(Long, Long)].collect().toMap
+    assert(got === Map(Long.MinValue -> Long.MinValue, 2L -> 2L,
+      3L -> Long.MinValue))
+  }
+
   test("plan: seed fan-out broadcasts; no non-broadcast cartesian anywhere") {
     spark.catalog.clearCache()
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -14,7 +14,7 @@ class SkewGateSpec extends AnyFunSuite {
         graft.core.Rng.uniform(71L, i.toLong, 2L) * 140.0 - 70.0, s"p$i")
     }.toDF("lon", "lat", "name")
     val tiles = graft.operators.Tiler.buildTiles(pts, Seq(4, 8, 12), cap = 1024)
-    val report = graft.plans.SkewReport.forTiles(tiles)
+    val report = SkewReport.forTiles(tiles)
     assert(report.nonEmptyStats.nonEmpty)
     // per-TILE byte bound: hottest tile ≤ cap features, so its bytes stay
     // bounded; partition-level: max ≤ 2× median over non-empty partitions

@@ -1,4 +1,4 @@
-package graft.plans
+package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._

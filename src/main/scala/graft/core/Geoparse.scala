@@ -22,6 +22,13 @@ import scala.collection.mutable
   * Output order: every labeled match by position, then geo URIs, then
   * pairs, then gazetteer 1-word names by position, then 2-word, then
   * 3-word names.
+  *
+  * One pass over the text, 64 chars at a time, finds both the coordinate
+  * candidates (each pattern runs anchored only where its literal prefix
+  * occurs) and the letter runs. A run is compared with the gazetteer only
+  * if some name's first word has its length and its first and last
+  * letters. Text with a char >= 0x80 has its names matched on its
+  * `Locale.ROOT` lowering instead, in a second pass.
   */
 object Geoparse {
   final case class Mention(lat: Double, lon: Double, kind: String, name: String)
@@ -32,6 +39,7 @@ object Geoparse {
     Pattern.compile("""(?i)geo:(-?\d{1,2}(?:\.\d+)?),(-?\d{1,3}(?:\.\d+)?)""")
   private val BarePair =
     Pattern.compile("""\((-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})\)""")
+  private val Kinds = Array("labeled", "geouri", "pair")
 
   @inline private def inRange(lat: Double, lon: Double): Boolean =
     lat >= -90.0 && lat <= 90.0 && lon >= -180.0 && lon <= 180.0
@@ -42,25 +50,25 @@ object Geoparse {
   private val matchers = ThreadLocal.withInitial[Array[Matcher]](() =>
     Array(Labeled, GeoUri, BarePair).map(_.matcher("")))
 
-  /** The in-range matches of one coordinate encoding, in text order.
-    * `tryAt` must be offered candidate starts in increasing order; a start
-    * before the previous match's end is skipped, so the matches are the
-    * same non-overlapping ones `findAllMatchIn` yields.
+  /** The in-range matches of encoding `k` in `text`, in text order; made
+    * at the text's first candidate start for it. `tryAt` must be offered
+    * candidate starts in increasing order; a start before the previous
+    * match's end is skipped, so the matches are the same non-overlapping
+    * ones `findAllMatchIn` yields.
     */
-  private final class Encoding(m: Matcher, kind: String, text: String) {
-    private[this] var bound = false
+  private final class Encoding(k: Int, text: String) {
+    private[this] val m = matchers.get()(k).reset(text)
     private[this] var end = 0
     private[this] var hits: mutable.ArrayBuffer[Mention] = _
 
     def tryAt(i: Int): Unit = if (i >= end) {
-      if (!bound) { m.reset(text); bound = true }
       m.region(i, text.length)
       if (m.lookingAt()) {
         end = m.end()
         val lat = m.group(1).toDouble; val lon = m.group(2).toDouble
         if (inRange(lat, lon)) {
           if (hits == null) hits = new mutable.ArrayBuffer[Mention](4)
-          hits += Mention(lat, lon, kind, "")
+          hits += Mention(lat, lon, Kinds(k), "")
         }
       }
     }
@@ -74,6 +82,10 @@ object Geoparse {
     }
   }
 
+  @inline private def size(e: Encoding): Int = if (e == null) 0 else e.size
+  @inline private def copyTo(e: Encoding, out: Array[Mention], k: Int): Int =
+    if (e == null) k else e.copyTo(out, k)
+
   /** Each gazetteer name's words, in `Gazetteer.entries` order. */
   private val words: Array[Array[String]] = Gazetteer.entries.map(_._1.split(' '))
   private val MaxWords = words.map(_.length).max
@@ -81,20 +93,21 @@ object Geoparse {
   private val nameMention: Array[Mention] =
     Gazetteer.entries.map { case (n, la, lo) => Mention(la, lo, "gazetteer", n) }
 
-  // First-word table: open addressing on the word's String.hashCode.
-  // A slot holds the indices of the entries starting with that word, in
-  // `entries` order. At most half the slots are used.
-  private val Slots = Integer.highestOneBit(words.length * 4)
-  private val slotHash = new Array[Int](Slots)
-  private val slotWord = new Array[String](Slots)
-  private val slotEntries = new Array[Array[Int]](Slots)
-  words.indices.groupBy(e => words(e)(0)).foreach { case (w, es) =>
-    var s = slot(w.hashCode)
-    while (slotWord(s) != null) s = (s + 1) & (Slots - 1)
-    slotHash(s) = w.hashCode; slotWord(s) = w; slotEntries(s) = es.sorted.toArray
+  // First-word filter: `lengths(f * 26 + l)` has bit n set when some
+  // name's first word has n letters, starts with letter f and ends with
+  // letter l ('a' = 0), and `byStart(f * 64 + n)` lists the names whose
+  // first word starts with f and has n letters, in `entries` order. Few
+  // letter runs pass: 6 of the 120 filler words of the synthetic pages
+  // do, against 54 with the first letter and length alone.
+  private val lengths = new Array[Long](26 * 26)
+  private val byStart = new Array[Array[Int]](26 * 64)
+  for (e <- words.indices) {
+    val w = words(e)(0)
+    require(w.length < 64 && w.forall(c => c >= 'a' && c <= 'z'), w)
+    val key = (w.charAt(0) - 'a') * 64 + w.length
+    lengths((w.charAt(0) - 'a') * 26 + w.last - 'a') |= 1L << w.length
+    byStart(key) = Option(byStart(key)).getOrElse(Array.empty[Int]) :+ e
   }
-
-  @inline private def slot(h: Int): Int = (h ^ (h >>> 16)) & (Slots - 1)
 
   /** An ASCII letter; `| 0x20` lowers it. No other char maps into a-z. */
   @inline private def isLetter(c: Char): Boolean = {
@@ -102,21 +115,18 @@ object Geoparse {
     f >= 'a' && f <= 'z'
   }
 
+  /** Whether the letter run `s[start, end)` passes the first-word filter.
+    * `n < 64` first: a shift distance is taken mod 64.
+    */
+  @inline private def mayStartName(s: String, start: Int, end: Int): Boolean = {
+    val n = end - start
+    n < 64 && (lengths(((s.charAt(start) | 0x20) - 'a') * 26 +
+      (s.charAt(end - 1) | 0x20) - 'a') >>> n & 1L) != 0
+  }
+
   /** Whether the letter run `s[start, end)` spells `w` (lowercase). */
   @inline private def spells(s: String, start: Int, end: Int, w: String): Boolean =
     end - start == w.length && s.regionMatches(true, start, w, 0, w.length)
-
-  /** Entries whose first word is the letter run `s[start, end)` with hash
-    * `h`, or null.
-    */
-  private def firstWord(s: String, start: Int, end: Int, h: Int): Array[Int] = {
-    var i = slot(h)
-    while (slotWord(i) != null) {
-      if (slotHash(i) == h && spells(s, start, end, slotWord(i))) return slotEntries(i)
-      i = (i + 1) & (Slots - 1)
-    }
-    null
-  }
 
   /** Whether words 1.. of entry `e` follow in `s` from `p0`, one maximal
     * letter run each.
@@ -136,78 +146,135 @@ object Geoparse {
     true
   }
 
-  /** Indices of the entries matched in `s`, by the position of their first
-    * word; null when none. Tokens are the maximal letter runs, lowered.
+  /** Appends to `hits` (made if null) the entries that the letter run
+    * `s[start, end)`, a filter pass, starts; returns `hits`.
     */
-  private def gazetteerHits(s: String): Array[Int] = {
+  private def namesAt(s: String, start: Int, end: Int,
+                      hits: mutable.ArrayBuilder.ofInt): mutable.ArrayBuilder.ofInt = {
+    var out = hits
+    val es = byStart(((s.charAt(start) | 0x20) - 'a') * 64 + end - start)
+    var c = 0
+    while (c < es.length) {
+      val e = es(c)
+      if (spells(s, start, end, words(e)(0)) && restFollows(s, end, e)) {
+        if (out == null) out = new mutable.ArrayBuilder.ofInt
+        out += e
+      }
+      c += 1
+    }
+    out
+  }
+
+  /** The names pass alone, for text lowered off the one-pass path. */
+  private def names(s: String): mutable.ArrayBuilder.ofInt = {
     var hits: mutable.ArrayBuilder.ofInt = null
     val len = s.length
+    var start = -1
     var i = 0
-    while (i < len) {
-      if (!isLetter(s.charAt(i))) i += 1
-      else {
-        val start = i
-        var h = 0
-        while (i < len && isLetter(s.charAt(i))) { h = 31 * h + (s.charAt(i) | 0x20); i += 1 }
-        val es = firstWord(s, start, i, h)
-        if (es != null) {
-          var c = 0
-          while (c < es.length) {
-            if (restFollows(s, i, es(c))) {
-              if (hits == null) hits = new mutable.ArrayBuilder.ofInt
-              hits += es(c)
-            }
-            c += 1
-          }
-        }
+    while (i <= len) {
+      if (i < len && isLetter(s.charAt(i))) { if (start < 0) start = i }
+      else if (start >= 0) {
+        if (mayStartName(s, start, i)) hits = namesAt(s, start, i, hits)
+        start = -1
       }
+      i += 1
     }
-    if (hits == null) null else hits.result()
+    hits
   }
+
+  // The scan reads the text in blocks of 64 chars. A first loop turns a
+  // block into two bit masks through `CharClass`, bit 0 (an ASCII letter)
+  // and bit 1 (`l`, `g`, `(` or a char >= 0x80); the rest of the scan
+  // visits only the set bits, in text order. Candidate starts are
+  // the occurrences of each pattern's literal prefix: `lat` and `geo:`
+  // ASCII-case-insensitively (Java's (?i) folds ASCII only), `(` exactly.
+  // No match can start anywhere else.
+  private val CharClass: Array[Byte] = Array.tabulate(0x80) { c =>
+    (if (isLetter(c.toChar)) 1 else 0) | (if ("lLgG(".indexOf(c) >= 0) 2 else 0)
+  }.map(_.toByte)
+  private val Lat = 'l' << 16 | 'a' << 8 | 't'
+  private val Geo = 'g' << 16 | 'e' << 8 | 'o'
 
   def parse(text: String): Seq[Mention] = {
     val len = text.length
-    val ms = matchers.get()
-    val labeled = new Encoding(ms(0), "labeled", text)
-    val geoUri = new Encoding(ms(1), "geouri", text)
-    val pair = new Encoding(ms(2), "pair", text)
-    // Candidate starts are the occurrences of each pattern's literal
-    // prefix: `lat` and `geo:` ASCII-case-insensitively (Java's (?i) folds
-    // ASCII only), `(` exactly. No match can start anywhere else.
-    var seen = 0 // OR of every char: >= 0x80 iff the text is not ASCII
-    var i = 0
-    while (i < len) {
-      val c = text.charAt(i)
-      seen |= c
-      val f = c | 0x20
-      if (f == 'l') {
-        if (i + 2 < len && (text.charAt(i + 1) | 0x20) == 'a' &&
-            (text.charAt(i + 2) | 0x20) == 't') labeled.tryAt(i)
-      } else if (f == 'g') {
-        if (i + 3 < len && (text.charAt(i + 1) | 0x20) == 'e' &&
-            (text.charAt(i + 2) | 0x20) == 'o' && text.charAt(i + 3) == ':') geoUri.tryAt(i)
-      } else if (c == '(') pair.tryAt(i)
-      i += 1
+    var labeled, geoUri, pair: Encoding = null
+    var hits: mutable.ArrayBuilder.ofInt = null
+    var ascii = true
+    var open = -1 // start of a letter run that goes on past the block
+    var b = 0
+    while (b < len) {
+      val m = math.min(64, len - b)
+      var letters, marks = 0L
+      var j = 0
+      while (j < m) {
+        val c = text.charAt(b + j)
+        val k = if (c < 0x80) CharClass(c) else 2
+        letters |= (k & 1).toLong << j
+        marks |= (k >>> 1).toLong << j
+        j += 1
+      }
+      while (marks != 0) {
+        val p = b + java.lang.Long.numberOfTrailingZeros(marks)
+        val c = text.charAt(p)
+        if (c == '(') {
+          if (pair == null) pair = new Encoding(2, text)
+          pair.tryAt(p)
+        } else if (c >= 0x80) ascii = false
+        else if (p + 2 < len) {
+          // a char >= 0x100 can make `g` equal Lat or Geo by accident;
+          // the pattern then finds no match at `p`
+          val g = (c | 0x20) << 16 | (text.charAt(p + 1) | 0x20) << 8 |
+            (text.charAt(p + 2) | 0x20)
+          if (g == Lat) {
+            if (labeled == null) labeled = new Encoding(0, text)
+            labeled.tryAt(p)
+          } else if (g == Geo && p + 3 < len && text.charAt(p + 3) == ':') {
+            if (geoUri == null) geoUri = new Encoding(1, text)
+            geoUri.tryAt(p)
+          }
+        }
+        marks &= marks - 1
+      }
+      // Name tokens are the maximal letter runs; ASCII text lowers char by
+      // char, so its runs are matched in place. A run ends at a letter
+      // whose next char is not one.
+      if (ascii) {
+        var starts = letters & ~(letters << 1)
+        if (open >= 0) starts &= ~1L
+        var ends = letters & ~(letters >>> 1)
+        // the block's last char (bit 63: the sign) is a letter, and so is the next
+        val goesOn = letters < 0 && b + 64 < len && isLetter(text.charAt(b + 64))
+        if (goesOn) ends &= Long.MaxValue
+        while (ends != 0) {
+          val e = b + java.lang.Long.numberOfTrailingZeros(ends) + 1
+          val s = b + java.lang.Long.numberOfTrailingZeros(starts)
+          val start = if (s < e) { starts &= starts - 1; s } else open
+          if (mayStartName(text, start, e)) hits = namesAt(text, start, e, hits)
+          ends &= ends - 1
+        }
+        open = if (!goesOn) -1
+          else if (starts != 0) b + java.lang.Long.numberOfTrailingZeros(starts)
+          else open
+      }
+      b += 64
     }
-    // Gazetteer rule: lowercase with Locale.ROOT, tokens = maximal [a-z]
-    // runs, match every 1/2/3-gram phrase against the gazetteer. ASCII text
-    // lowers char by char, so its runs are matched in place. Other text is
-    // lowered first: ROOT lowering can change the length (İ → i + U+0307)
-    // and maps some non-ASCII letters to ASCII ones (Kelvin sign → k).
-    val s = if (seen >= 0x80) text.toLowerCase(Locale.ROOT) else text
-    val hits = gazetteerHits(s)
-    val nHits = if (hits == null) 0 else hits.length
-    val n = labeled.size + geoUri.size + pair.size + nHits
+    // Other text has its names matched on its ROOT lowering: that can
+    // change the length (İ → i + U+0307) and maps some non-ASCII letters
+    // to ASCII ones (Kelvin sign → k).
+    if (!ascii) hits = names(text.toLowerCase(Locale.ROOT))
+    val nameHits = if (hits == null) null else hits.result()
+    val nHits = if (nameHits == null) 0 else nameHits.length
+    val n = size(labeled) + size(geoUri) + size(pair) + nHits
     if (n == 0) return Nil
     val out = new Array[Mention](n)
-    var k = labeled.copyTo(out, 0)
-    k = geoUri.copyTo(out, k)
-    k = pair.copyTo(out, k)
+    var k = copyTo(labeled, out, 0)
+    k = copyTo(geoUri, out, k)
+    k = copyTo(pair, out, k)
     var w = 1
     while (w <= MaxWords) {
       var h = 0
       while (h < nHits) {
-        if (words(hits(h)).length == w) { out(k) = nameMention(hits(h)); k += 1 }
+        if (words(nameHits(h)).length == w) { out(k) = nameMention(nameHits(h)); k += 1 }
         h += 1
       }
       w += 1

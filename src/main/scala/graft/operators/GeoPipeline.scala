@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.geo
 
 /** The end-to-end geo pipeline (BASELINE.json north_star):
-  * pages → geoparse (pure-Catalyst mention extraction) → cell encode
-  * (codegen'd S2/hex exprs) → per-cell PIP tag → features table.
+  * pages → geoparse (`geoparse_mentions`, a static call of
+  * `Geoparse.parse`) → cell encode (codegen'd S2/hex exprs) → per-cell
+  * PIP tag → features table.
   *
   * Structure mirrors the reference's staged main (reference:
   * mvt/run_mvt_espre.py:103-423): parse → frame transform → grid assign →

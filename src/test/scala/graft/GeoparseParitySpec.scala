@@ -181,6 +181,12 @@ class GeoparseParitySpec extends AnyFunSuite {
     assert(nameWords(ms) == Set(1, 2, 3))
   }
 
+  test("one-pass scan edge cases: prefixes inside words, filter passes, run ends and lengths") {
+    val ms = assertParity(GeoparseParitySpec.edgeTexts.iterator)
+    assert(ms.map(_.kind).toSet == Set("labeled", "geouri", "pair", "gazetteer"))
+    assert(nameWords(ms) == Set(1, 2, 3))
+  }
+
   test("every BMP character in fixed coordinate and name contexts") {
     val ms = assertParity(Iterator.range(0, 0x10000).flatMap { i =>
       val c = i.toChar.toString
@@ -188,5 +194,42 @@ class GeoparseParitySpec extends AnyFunSuite {
         c + "new" + c + "york" + c)
     })
     assert(ms.map(_.kind).toSet == Set("labeled", "geouri", "pair", "gazetteer"))
+  }
+}
+
+object GeoparseParitySpec {
+  /** Texts at the edges of the one-pass scan. */
+  val edgeTexts: Seq[String] = {
+    val texts = Seq(
+      // coordinate prefixes inside longer words
+      "platform lat: 1.5, lon: 2.5", "geology geo:1,2", "xgeo:1,2", "flat:1.5,lon:2.5",
+      // runs that pass the first-word filter (length, first and last
+      // letter) but are no name, and runs that pass a first-letter-and-
+      // length filter only
+      "parks", "leurs", "rive", "les", "teilen", "strasse", "lager", "the",
+      // first words of multi-word names with the rest missing or cut short
+      "tel", "tel avi", "rio de", "new yorker", "san", "los", "hong",
+      // names as the first and the last token
+      "paris", "paris is nice", "go to paris", "go to Paris.", "lima", "tel aviv",
+      // multi-word names split by different non-letter runs
+      "new\tyork", "new--york", "rio  de\njaneiro", "rio de janeiro", "new york,",
+      "hong_kong", "buenos1aires", "NEW\r\nYORK", "new\u0000york",
+      // the first non-ASCII char after coordinate and name hits
+      "paris (48.856, 2.352) \u0130stanbul", "geo:1,2 new york \u00DF lat: 1.5, lon: 2.5",
+      "paris \u212Aarachi", "new \u0130 york")
+    // letter runs of 63, 64 and 70 chars: a shift by 64 is a shift by 0
+    val longRuns = for {
+      c <- 'a' to 'z'
+      n <- Seq(63, 64, 70)
+      t <- Seq(c.toString * n, "paris " + c.toString * n + " lima",
+        c.toString.toUpperCase * n + "(1.123, 2.345)")
+    } yield t
+    // runs and candidates across the scan's 64-char blocks
+    val shifted = for {
+      off <- 50 until 200
+      t <- Seq("." * off + "paris new york lat: 1.5, lon: 2.5 geo:1,2 (1.123, 2.345) lima",
+        "x" * off + " rio de janeiro", "a " * (off / 2) + "x" * (off % 7) + "tokyo")
+    } yield t
+    texts ++ longRuns ++ shifted
   }
 }

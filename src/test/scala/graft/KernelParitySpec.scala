@@ -223,6 +223,49 @@ class KernelParitySpec extends AnyFunSuite {
       }
   }
 
+  test("geoparse_mentions equals Geoparse.parse on edge-case and non-ASCII text, bit for bit") {
+    val rnd = new scala.util.Random(16)
+    val names = Gazetteer.entries.map(_._1)
+    val odd = Array("\u0130", "\u212A", "\u00DF", "\u0130stanbul", "\u212Aarachi",
+      "stra\u00DFe", "\u00E9", " ", ", ", "-", "\n", "(", ")", "lat: ", "geo:", ", lon: ")
+    def num(): String = f"${rnd.nextDouble() * 100 - 50}%.4f"
+    def piece(): String = rnd.nextInt(4) match {
+      case 0 =>
+        val n = names(rnd.nextInt(names.length))
+        if (rnd.nextBoolean()) n else n.toUpperCase(java.util.Locale.ROOT)
+      case 1 => rnd.nextInt(3) match {
+        case 0 => s"lat: ${num()}, lon: ${num()}"
+        case 1 => s"geo:${num()},${num()}"
+        case _ => s"(${num()}, ${num()})"
+      }
+      case _ => odd(rnd.nextInt(odd.length))
+    }
+    val fuzz = Seq.fill(1000)(Seq.fill(1 + rnd.nextInt(16))(piece()).mkString(" "))
+    val texts = (GeoparseParitySpec.edgeTexts ++ fuzz).toIndexedSeq
+    // the fuzz takes the non-ASCII path with name and coordinate hits
+    val nonAscii = fuzz.filter(_.exists(_ >= 0x80)).map(Geoparse.parse)
+    assert(nonAscii.count(_.exists(_.kind == "gazetteer")) > 300)
+    assert(nonAscii.count(_.exists(_.kind != "gazetteer")) > 300)
+    val schema = StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("text", StringType, nullable = false)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      texts.indices.map(i => Row(i, texts(i))), 2), schema).repartition(3)
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, wholeStage) =>
+      withConf("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> wholeStage) {
+        val out = df.select(col("id"), geoparse.geoparse_mentions(col("text")))
+        val got = out.collect()
+        val plan = out.queryExecution.executedPlan.toString
+        assert(plan.contains("*(") === (wholeStage == "true"), s"$mode: $plan")
+        assert(got.length === texts.length, mode)
+        got.foreach { r =>
+          val want = Geoparse.parse(texts(r.getInt(0))).map(m => Seq(m.lat, m.lon, m.kind, m.name))
+          assert(canon(r.get(1)) === canon(want), s"$mode row ${r.getInt(0)}")
+        }
+      }
+    }
+  }
+
   test("inputs reach every kernel branch: hits, nulls and NaN rings") {
     val pip = inputs.map(in => PolyRegistry.queryTree(PolyRegistry.Admin, 3, -1,
       HexGrid.cell(in.lon, in.lat, 3), in.lon, in.lat))
